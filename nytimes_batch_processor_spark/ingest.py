@@ -104,7 +104,7 @@ def job_commit_succeeded(spark: SparkSession, path: str) -> bool:
 
 def _flat_data_files_at_root(spark: SparkSession, path: str) -> bool:
     """True iff ``path`` holds non-hidden data FILES directly at its
-    root — the flat (pre-batch-partition) admitted-sink layout."""
+    root — flat data a ``batch_id=`` partitioned sink must not mix with."""
     jvm = spark._jvm
     p = jvm.org.apache.hadoop.fs.Path(path)
     fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
@@ -117,139 +117,65 @@ def _flat_data_files_at_root(spark: SparkSession, path: str) -> bool:
     return False
 
 
-def _batch_partition_dirs_at_root(spark: SparkSession, path: str) -> bool:
-    """True iff ``path`` holds ``batch_id=`` partition DIRECTORIES at
-    its root — the batch-partitioned admitted-sink layout. The mirror
-    of `_flat_data_files_at_root`, used by the flat-mode guard."""
-    jvm = spark._jvm
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(p):
-        return False
-    for st in fs.listStatus(p):
-        if st.isDirectory() and st.getPath().getName().startswith("batch_id="):
-            return True
-    return False
-
-
-def _norm_sink_path(path: str) -> str:
-    """Cache key for `_LAYOUT_CHECKED`: trailing-slash variants of one
-    path must hit one cache entry, or 'path/' re-runs the listing that
-    'path' already paid for (ADVICE r14)."""
-    return path.rstrip("/") or "/"
-
-
-# Admitted-sink paths whose layout has been validated this process —
-# the flat-vs-partitioned guards in admit_sink_upsert run ONCE per
-# (normalized) path per process lifetime. FIRST-CALL-ONLY semantics: a
-# sink deleted and recreated with the WRONG layout at the same path
-# inside one long-lived process skips the re-check (offline-tooling
-# scope; acceptable because nothing in this repo deletes a live sink).
-# Maintenance entrypoints that legitimately change what is on disk
-# (`compact_admitted_sink`, `migrate_admitted_sink`) invalidate their
-# path's entries so the next write re-validates. Entries are
-# (mode, path): the two modes check DIFFERENT facts — batch mode checks
-# 'no flat files', flat mode checks 'no batch_id= dirs' — and each
-# mode's own writes change the fact the OTHER mode needs to re-check,
-# so a shared per-path entry would let a flat append pre-validate a
-# later partitioned write onto the files it just created. Lifecycle
-# (ADVICE r15): the FLAT entry lands only after its append succeeds (a
-# validate-then-fail must not stand as a pass), and each mode's path
-# discards the OTHER mode's entry — flat on write success, batch as
-# soon as the mode is entered (its partitions may have been committed
-# by another process while a stale flat pass stood).
-#
-# SINGLE-WRITER-PROCESS ASSUMPTION (ADVICE r16, stated as a contract,
-# not silently relied on): this cache is process-local memory, so the
-# staleness rules above can only observe THIS process's writes. A flat
-# append committed by ANOTHER process after this process's batch-mode
-# pass leaves the batch entry standing while flat files sit on disk,
-# and the next batch write here would build the mixed layout
-# unvalidated — the cache cannot provide a cross-process guarantee.
-# Spark admitted sinks are single-writer by construction (one
-# streaming query owns a checkpoint/sink pair, and Structured
-# Streaming refuses concurrent writers on one checkpoint), and the
-# maintenance entrypoints are documented offline-only; multi-writer
-# deployments must route every writer through one process, or clear
-# this cache (`_forget_layout`) to pay a re-listing per write. A
-# cross-process fingerprint (root mtime) was considered and rejected:
-# every batch write creates a partition dir and touches the root
-# mtime, so a fingerprint either re-lists per micro-batch — the
-# O(#partitions) cost this cache exists to remove — or trusts
-# sub-second mtime granularity; a guard that cannot be relied on is
-# worse than a stated assumption.
-_LAYOUT_CHECKED: set[tuple[str, str]] = set()
-
-
-def _forget_layout(path: str) -> None:
-    """Drop both modes' layout-cache entries for ``path`` — called by
-    the maintenance entrypoints that rewrite the sink's on-disk shape."""
-    key = _norm_sink_path(path)
-    _LAYOUT_CHECKED.discard(("batch", key))
-    _LAYOUT_CHECKED.discard(("flat", key))
+# Normalized admitted-sink paths whose root has been checked for flat
+# data files this process: the check runs ONCE per path, because a
+# per-batch root listing would re-introduce an O(#partitions) metadata
+# cost. A batch write never creates root data files, so a pass cannot
+# go stale through this module's own writes. It can go stale through
+# someone else's: the cache is process-local, so a sink deleted and
+# recreated with flat files at the same path, or flat files dropped
+# there by another process, are not re-checked. Admitted sinks are
+# single-writer by construction (one streaming query owns a
+# checkpoint/sink pair).
+_LAYOUT_CHECKED: set[str] = set()
 
 
 def admit_sink_upsert(
     spark: SparkSession,
     admitted_rows: DataFrame,
     admitted_path: str,
-    key: str,
-    key_type: str = "bigint",
-    batch_id: int | None = None,
+    batch_id: int | None,
 ) -> None:
     """Idempotent admitted-rows sink write — ONE copy shared by
     `operators.dedup.admit_minhash_batch` and
     `operators.similarity.admit_ivf_batch` (a per-operator copy is how
-    the r12 footerless-dir bug shipped twice). Two modes:
+    the r12 footerless-dir bug shipped twice).
 
-    - ``batch_id`` given (the foreachBatch streaming path, which always
-      has one): admissions land under ``admitted_path/batch_id=N`` —
-      the standard idempotent-sink layout. A replay whose partition's
-      JOB COMMIT completed (``_SUCCESS`` marker — see
-      `job_commit_succeeded` for why any weaker file-presence test
-      loses rows on a mid-job-commit crash) skips the write entirely;
-      anything less is rewritten with mode=overwrite. Per-micro-batch
-      sink cost is ONE existence check — O(1) in sink size, closing
-      the O(corpus)-per-batch anti-join scan (VERDICT r12 item 4).
-      Replay case analysis composes with the caller's
-      ledger->sink->index ordering: a replay before the index append
-      recomputes the SAME admissions (partition committed -> skip,
-      anything less -> identical overwrite); a replay after it
-      verdicts everything dup, writes nothing, and the committed
-      partition is untouched. A sink carrying the legacy FLAT layout
-      at its root is REFUSED loudly (mixed layouts break partition
-      discovery for every later read — `migrate_admitted_sink` lifts a
-      legacy sink into this layout in place).
+    Admissions land under ``admitted_path/batch_id=N`` — the standard
+    idempotent-sink layout, and the sink's only one. A replay whose
+    partition's JOB COMMIT completed (``_SUCCESS`` marker — see
+    `job_commit_succeeded` for why any weaker file-presence test loses
+    rows on a mid-job-commit crash) skips the write entirely; anything
+    less is rewritten with mode=overwrite. Per-micro-batch sink cost is
+    ONE existence check — O(1) in sink size. Replay case analysis
+    composes with the caller's ledger->sink->index ordering: a replay
+    before the index append recomputes the SAME admissions (partition
+    committed -> skip, anything less -> identical overwrite); a replay
+    after it verdicts everything dup, writes nothing, and the committed
+    partition is untouched.
 
-      UNIQUENESS GUARANTEE (weaker than the flat mode's, by design —
-      ADVICE r14): across micro-batches the sink is deduplicated at
-      CONTENT level only, via the caller's index probe (a re-arriving
-      doc is near-dup of its own indexed copy and verdicts 'dup').
-      A key re-arriving with content DIVERGENT enough to clear the
-      near-dup threshold is admitted again into its batch's partition,
-      so the sink can hold the same ``key`` in two partitions — unlike
-      the pre-r14 anti-join (and the reference's keyed ON CONFLICT DO
-      NOTHING, …kt:138-141), which were key-level. That trade is
-      deliberate: a keyed cross-batch check re-introduces the O(sink)
-      scan per micro-batch this mode exists to remove, and for an
-      admission pipeline 'same id, genuinely new content' is usually a
-      new training document, not a conflict. Readers needing key-level
-      uniqueness take latest-batch-wins at read time
-      (``row_number() over (partition by key order by batch_id desc)``
-      — batch_id is a partition column, so the scan prunes).
+    Refused with ``ValueError``, before anything is written:
+    - ``batch_id`` None — without it there is no partition to make the
+      replay idempotent;
+    - a sink holding flat (un-partitioned) data files at its root —
+      ``batch_id=`` dirs next to them would break partition discovery
+      for every later read. Checked once per path per process
+      (`_LAYOUT_CHECKED`).
 
-    - ``batch_id`` None (ad-hoc batch callers): the row-level
-      first-write-wins anti-join against the whole sink — O(sink) per
-      call, fine for one-shot batch admission. The membership read uses
-      an EXPLICIT one-column schema: a footerless sink dir reads as
-      zero rows (Spark's file listing skips ``_``/``.`` entries)
-      instead of failing schema inference, so a crash during the very
-      first sink write cannot poison every subsequent replay. Real read
-      errors on committed files still propagate (the `upsert_append`
-      principle: never swallow a failure into 'dedup disabled').
-
-    The two layouts must not be mixed on one sink path (partitioned vs
-    flat parquet).
+    UNIQUENESS GUARANTEE (weaker than the reference's keyed
+    ON CONFLICT DO NOTHING, …kt:138-141, by design — ADVICE r14):
+    across micro-batches the sink is deduplicated at CONTENT level
+    only, via the caller's index probe (a re-arriving doc is near-dup
+    of its own indexed copy and verdicts 'dup'). A key re-arriving with
+    content DIVERGENT enough to clear the near-dup threshold is
+    admitted again into its batch's partition, so the sink can hold the
+    same key in two partitions. A keyed cross-batch check would
+    re-introduce an O(sink) scan per micro-batch, and for an admission
+    pipeline 'same id, genuinely new content' is usually a new training
+    document, not a conflict. Readers needing key-level uniqueness take
+    latest-batch-wins at read time (``row_number() over (partition by
+    key order by batch_id desc)`` — batch_id is a partition column, so
+    the scan prunes).
 
     Maintenance constraint: the per-partition ``_SUCCESS`` markers ARE
     the idempotency ledger — a rewrite that drops them (e.g.
@@ -260,61 +186,27 @@ def admit_sink_upsert(
     all dup against their own indexed copies by then). Use
     `compact_admitted_sink`, whose per-partition rewrite publishes each
     partition's own marker atomically with its data."""
-    cache_key = _norm_sink_path(admitted_path)
-    if batch_id is not None:
-        # layout guard ONCE per sink per process (a per-batch root
-        # listing would re-introduce an O(#partitions) metadata cost)
-        if ("batch", cache_key) not in _LAYOUT_CHECKED:
-            if _flat_data_files_at_root(spark, admitted_path):
-                raise ValueError(
-                    f"admitted sink {admitted_path} holds flat "
-                    "(un-partitioned) data files at its root; writing "
-                    "batch_id= partitions next to them would break "
-                    "partition discovery for every later read — run "
-                    "migrate_admitted_sink(spark, path) or use a fresh path"
-                )
-            # caching BEFORE the write is sound for this mode's own
-            # fact ('no flat files at root'): a batch write — failed or
-            # not — never creates flat root files; the only event that
-            # stales it is a successful FLAT write, which discards this
-            # entry below.
-            _LAYOUT_CHECKED.add(("batch", cache_key))
-        # The sink is (about to be) batch-partitioned: a standing flat
-        # pass is stale from here on, even on the replay-skip path — an
-        # empty flat append in this process followed by a partition
-        # COMMITTED BY ANOTHER PROCESS would otherwise leave the flat
-        # entry live with batch_id= dirs on disk (ADVICE r15).
-        _LAYOUT_CHECKED.discard(("flat", cache_key))
-        part_dir = os.path.join(admitted_path, f"batch_id={batch_id}")
-        if job_commit_succeeded(spark, part_dir):
-            return
-        admitted_rows.write.mode("overwrite").parquet(part_dir)
-        return
-    # the mirror guard (ADVICE r14): an ad-hoc flat append onto a sink a
-    # stream already partitioned would drop part files at the partition
-    # root — the exact mixed-layout corruption the batch path refuses.
-    if ("flat", cache_key) not in _LAYOUT_CHECKED:
-        if _batch_partition_dirs_at_root(spark, admitted_path):
-            raise ValueError(
-                f"admitted sink {admitted_path} is batch_id= partitioned; "
-                "appending flat data files at its root would break "
-                "partition discovery for every later read — pass the "
-                "stream's batch_id, or use a fresh path for ad-hoc batches"
-            )
-    to_insert = admitted_rows
-    if target_exists(spark, admitted_path):
-        existing = spark.read.schema(f"{key} {key_type}").parquet(
-            admitted_path
+    if batch_id is None:
+        raise ValueError(
+            f"admitted sink {admitted_path} needs a batch_id: the sink is "
+            "batch_id= partitioned, and a replay is idempotent only per "
+            "committed partition"
         )
-        to_insert = admitted_rows.join(existing, key, "left_anti")
-    to_insert.write.mode("append").parquet(admitted_path)
-    # Cache the flat pass only AFTER the append lands (ADVICE r15: a
-    # validate-then-fail — or an empty append that leaves no root data
-    # file — must not stand as a pass across a later partitioned write),
-    # and stale the batch entry: this write may have just created the
-    # flat root files the batch guard's cached 'no flat files' denies.
-    _LAYOUT_CHECKED.add(("flat", cache_key))
-    _LAYOUT_CHECKED.discard(("batch", cache_key))
+    # trailing-slash variants of one path share one entry (ADVICE r14)
+    cache_key = admitted_path.rstrip("/") or "/"
+    if cache_key not in _LAYOUT_CHECKED:
+        if _flat_data_files_at_root(spark, admitted_path):
+            raise ValueError(
+                f"admitted sink {admitted_path} holds flat "
+                "(un-partitioned) data files at its root; writing "
+                "batch_id= partitions next to them would break "
+                "partition discovery for every later read — use a fresh path"
+            )
+        _LAYOUT_CHECKED.add(cache_key)
+    part_dir = os.path.join(admitted_path, f"batch_id={batch_id}")
+    if job_commit_succeeded(spark, part_dir):
+        return
+    admitted_rows.write.mode("overwrite").parquet(part_dir)
 
 
 def compact_admitted_sink(
@@ -354,9 +246,6 @@ def compact_admitted_sink(
     jvm = spark._jvm
     root = jvm.org.apache.hadoop.fs.Path(admitted_path)
     fs = root.getFileSystem(spark._jsc.hadoopConfiguration())
-    # the rewrite changes the sink's on-disk shape under the per-process
-    # layout cache — force the next write's guard to re-validate
-    _forget_layout(admitted_path)
 
     def _n_data_files(dir_path) -> int:
         return sum(
@@ -432,262 +321,6 @@ def compact_admitted_sink(
         # a large target_files) — ADVICE r14
         stats["files_after"] += _n_data_files(st.getPath())
     return stats
-
-
-def migrate_admitted_sink(
-    spark: SparkSession, admitted_path: str, legacy_batch_id: int = -1
-) -> dict:
-    """Lift a legacy FLAT admitted sink (the pre-r14 anti-join layout)
-    into the ``batch_id=`` partitioned layout in place, unblocking the
-    refusal in `admit_sink_upsert` for sinks created before the
-    partitioned mode existed (VERDICT r14 item 4). All legacy rows land
-    in ONE partition, ``batch_id=-1`` by default — foreachBatch batch
-    ids are non-negative, so the legacy partition can never collide
-    with a future stream batch — with the partition's own ``_SUCCESS``
-    marker written by the rewrite itself, exactly the idempotency shape
-    `admit_sink_upsert` expects.
-
-    Offline maintenance (never run against a live writer), crash-safe
-    and re-run-convergent via a hidden root manifest:
-
-    1. ``.migrate_manifest`` is written FIRST, recording the target
-       partition id on its header line plus every flat data file being
-       migrated — it is what distinguishes 'crashed mid-migration' from
-       'genuinely mixed layout' on re-run, and recovery reads the id
-       FROM the manifest, so a re-run invoked with a different
-       ``legacy_batch_id`` still converges the crashed migration
-       instead of deleting its own breadcrumb (self-review r15);
-    2. the flat rows are rewritten into a hidden tmp dir (Spark writes
-       the tmp's ``_SUCCESS`` before any rename), then one rename
-       publishes it as the legacy partition;
-    3. only the MANIFESTED flat files are deleted, then the manifest.
-
-    Re-run after a crash: manifest present + legacy partition committed
-    -> finish the cleanup (delete manifested files + manifest);
-    manifest present + partition not committed -> discard tmp/manifest
-    and restart from the flat files, which are still intact. A root
-    holding both flat files and ``batch_id=`` dirs WITHOUT a manifest
-    was never produced by this tool — refused loudly, because deleting
-    those flat rows would be silent data loss. Returns
-    ``{"status", "files_migrated", "legacy_batch_id"}``."""
-    if legacy_batch_id >= 0:
-        # foreachBatch ids are non-negative: a legacy partition at e.g.
-        # batch_id=0 would make stream batch 0's committed-marker check
-        # see the LEGACY rows as its own completed write and silently
-        # skip — the no-collision guarantee only holds below zero
-        raise ValueError(
-            f"legacy_batch_id must be negative (got {legacy_batch_id}): "
-            "non-negative ids collide with future stream batch ids"
-        )
-    jvm = spark._jvm
-    root = jvm.org.apache.hadoop.fs.Path(admitted_path)
-    fs = root.getFileSystem(spark._jsc.hadoopConfiguration())
-    _forget_layout(admitted_path)
-    if not fs.exists(root):
-        return {"status": "empty", "files_migrated": 0,
-                "legacy_batch_id": legacy_batch_id}
-
-    def _p(name: str):
-        return jvm.org.apache.hadoop.fs.Path(
-            f"{admitted_path.rstrip('/')}/{name}"
-        )
-
-    manifest, tmp = _p(".migrate_manifest"), _p(".migrate_tmp")
-
-    def _flat_names() -> list[str]:
-        return sorted(
-            st.getPath().getName()
-            for st in fs.listStatus(root)
-            if st.isFile()
-            and not st.getPath().getName().startswith("_")
-            and not st.getPath().getName().startswith(".")
-        )
-
-    def _cleanup(names: list[str]) -> None:
-        for name in names:
-            f = _p(name)
-            if fs.exists(f):
-                fs.delete(f, False)
-        fs.delete(manifest, False)
-
-    if fs.exists(manifest):
-        stream = fs.open(manifest)
-        try:
-            # small file: a 'batch_id=<n>' header line then one flat
-            # file name per line, written by this tool
-            raw = bytes(stream.readAllBytes()).decode("utf-8")
-        finally:
-            stream.close()
-        lines = [line for line in raw.splitlines() if line]
-        # recovery is keyed to the id RECORDED at crash time, never the
-        # current call's argument (which may differ). Degenerate shapes
-        # (self-review r15, both passes): an EMPTY or header-TRUNCATED
-        # manifest ('batch_id=' with the value lost mid-flush) means
-        # the write buffer died before the manifest was complete — and
-        # the manifest is written strictly BEFORE anything is published,
-        # so nothing was: restart from the intact flat files. A
-        # HEADERLESS manifest (the first r15 format) is all names; that
-        # format's migrations published under the CALLER-SUPPLIED id
-        # (its recovery contract was a same-args re-run), so recover
-        # under the current call's id rather than assuming -1.
-        if lines and lines[0].startswith("batch_id="):
-            try:
-                rec_id = int(lines[0].split("=", 1)[1])
-                names = lines[1:]
-            except ValueError:
-                rec_id, names = legacy_batch_id, []
-        else:
-            rec_id, names = legacy_batch_id, lines
-            # The headerless format cannot tell us the crashed call's
-            # id. If that run already PUBLISHED under a different id,
-            # assuming the current argument would read 'not committed',
-            # delete the only breadcrumb, and strand duplicated rows
-            # (flat files + the published partition) behind the
-            # mixed-layout refusal (ADVICE r15). The published
-            # partition is findable: migration ids are negative and
-            # stream ids non-negative, so any COMMITTED negative
-            # partition is a migration's. But 'exactly one committed
-            # negative partition' is NOT proof it is the crashed run's
-            # publish (ADVICE r16): a committed negative partition
-            # persists forever after any SUCCESSFUL migration, so if
-            # flat files later reappear on the sink (manual copy,
-            # another process's stale layout cache) and a second
-            # migration crashes before publishing, the OLD partition
-            # would be adopted and 'finishing the cleanup' would
-            # delete never-migrated flat files — silent row loss.
-            # Adoption therefore requires the one fact the cleanup
-            # actually relies on, checked directly: every manifested
-            # flat row is CONTAINED in the candidate partition (true
-            # for a real crashed-after-publish, since the publish IS
-            # the rewrite of those files; and if an old partition
-            # happens to contain them all, deleting the flat copies
-            # is safe by the same containment). Containment fails ->
-            # refuse loudly instead of guessing. More than one
-            # committed negative partition is a state this tool never
-            # produces -> refuse likewise.
-            if not job_commit_succeeded(spark, str(_p(f"batch_id={rec_id}"))):
-                negs = []
-                for st in fs.listStatus(root):
-                    nm = st.getPath().getName()
-                    if not (st.isDirectory() and nm.startswith("batch_id=-")):
-                        continue
-                    try:
-                        neg = int(nm.split("=", 1)[1])
-                    except ValueError:
-                        continue
-                    if job_commit_succeeded(spark, str(st.getPath())):
-                        negs.append(neg)
-                negs.sort()
-                if len(negs) == 1:
-                    live = [n for n in names if fs.exists(_p(n))]
-                    covered = True
-                    if live:
-                        flat_rows = spark.read.parquet(
-                            *(str(_p(n)) for n in live)
-                        )
-                        part_rows = spark.read.parquet(
-                            str(_p(f"batch_id={negs[0]}"))
-                        ).select(*flat_rows.columns)
-                        # MULTISET containment (r17 self-review), not
-                        # set containment: a flat row present TWICE
-                        # (legacy double-append) but once in the
-                        # candidate partition would pass an anti-join
-                        # and still lose a copy on cleanup. Compare
-                        # per-row-value COUNTS: every flat group must
-                        # appear at least as often in the partition.
-                        # The null-rejecting join keeps the old
-                        # NULL-fails-toward-REFUSAL direction — a flat
-                        # group with a NULL column never matches, so
-                        # pc reads NULL and the guard refuses.
-                        cols = flat_rows.columns
-                        fcnt = flat_rows.groupBy(cols).agg(
-                            F.count(F.lit(1)).alias("_fc")
-                        )
-                        pcnt = part_rows.groupBy(cols).agg(
-                            F.count(F.lit(1)).alias("_pc")
-                        )
-                        short = fcnt.join(pcnt, on=cols, how="left").filter(
-                            F.col("_pc").isNull()
-                            | (F.col("_fc") > F.col("_pc"))
-                        )
-                        covered = short.limit(1).count() == 0
-                    if covered:
-                        rec_id = negs[0]
-                    else:
-                        raise ValueError(
-                            f"admitted sink {admitted_path} holds a "
-                            f"headerless migration manifest ({manifest}) "
-                            f"and a committed negative batch partition "
-                            f"batch_id={negs[0]} that does NOT contain "
-                            "the manifested flat rows — it is a PREVIOUS "
-                            "migration's publish, not the crashed run's; "
-                            "deleting the manifested files would lose "
-                            "rows. Re-run migrate_admitted_sink with the "
-                            "id the crashed run used, or resolve by hand "
-                            "(the manifest lists the files it was "
-                            "migrating)"
-                        )
-                elif len(negs) > 1:
-                    raise ValueError(
-                        f"admitted sink {admitted_path} holds a headerless "
-                        f"migration manifest ({manifest}) and MULTIPLE "
-                        f"committed negative batch partitions {negs}; the "
-                        "crashed migration's id cannot be recovered — "
-                        "resolve by hand (the manifest lists the flat "
-                        "files the crashed run was migrating)"
-                    )
-        rec_part = _p(f"batch_id={rec_id}")
-        if job_commit_succeeded(spark, str(rec_part)):
-            # crashed between publish and cleanup — finish the cleanup
-            _cleanup(names)
-            if fs.exists(tmp):
-                fs.delete(tmp, True)
-            return {"status": "recovered", "files_migrated": len(names),
-                    "legacy_batch_id": rec_id}
-        # crashed before publish: the flat files are still the live
-        # data — discard partials and fall through to a fresh attempt
-        for stale in (tmp, rec_part):
-            if fs.exists(stale):
-                fs.delete(stale, True)
-        fs.delete(manifest, False)
-
-    part_name = f"batch_id={legacy_batch_id}"
-    part = _p(part_name)
-
-    flat = _flat_names()
-    if not flat:
-        return {"status": "already_partitioned", "files_migrated": 0,
-                "legacy_batch_id": legacy_batch_id}
-    if _batch_partition_dirs_at_root(spark, admitted_path):
-        raise ValueError(
-            f"admitted sink {admitted_path} holds BOTH flat data files and "
-            "batch_id= partitions with no migration manifest — this tool "
-            "never produces that state, so it cannot tell which rows are "
-            "live; resolve the mixed layout by hand before migrating"
-        )
-    if fs.exists(tmp):
-        fs.delete(tmp, True)
-    out = fs.create(manifest, True)
-    out.write(
-        (f"batch_id={legacy_batch_id}\n" + "\n".join(flat) + "\n").encode(
-            "utf-8"
-        )
-    )
-    out.close()
-    # the flat read is schema-inferred from committed footers (these
-    # files were published by append-mode writes, never a crash husk —
-    # a husk dir has no committed data files to list)
-    spark.read.parquet(
-        *(f"{admitted_path.rstrip('/')}/{name}" for name in flat)
-    ).write.mode("overwrite").parquet(str(tmp))
-    if not fs.rename(tmp, part):
-        raise IOError(
-            f"sink migration failed: could not publish {part_name} "
-            f"under {admitted_path}"
-        )
-    _cleanup(flat)
-    return {"status": "migrated", "files_migrated": len(flat),
-            "legacy_batch_id": legacy_batch_id}
 
 
 def upsert_append(new_rows: DataFrame, target_path: str, keys: list[str]) -> None:

@@ -902,10 +902,9 @@ def admit_minhash_batch(
       indexed content — admitting B would re-admit what A was rejected
       for); ``canon_id`` is the minimum matched id across both sources;
     - ADMITTED docs are upserted into ``admitted_path`` through
-      `ingest.admit_sink_upsert` (with ``batch_id``, the foreachBatch
-      path, the sink step is an O(1) batch-partition write; without
-      it, the row-level first-write-wins anti-join — see that helper
-      for the replay case analysis and the footerless-dir handling)
+      `ingest.admit_sink_upsert` (an O(1) write of the
+      ``batch_id=N`` partition; a sink without ``batch_id`` is
+      refused — see that helper for the replay case analysis)
       and then appended to the index — their ALREADY-COMPUTED
       signatures go through `_write_minhash_index_sigs` directly, so
       admission never re-signs text it just signed to probe.
@@ -918,10 +917,10 @@ def admit_minhash_batch(
        the grown index and verdict every admission 'dup';
     2. the sink write precedes the index append: a crash between them
        replays the batch against an index that does NOT yet contain it
-       -> same admissions -> sink anti-join no-ops, index append
-       completes. The reverse order would lose documents (replay sees
-       the batch's own copies in the index, verdicts 'dup', and never
-       writes the sink);
+       -> same admissions -> the committed sink partition is skipped,
+       index append completes. The reverse order would lose documents
+       (replay sees the batch's own copies in the index, verdicts
+       'dup', and never writes the sink);
     3. a replay AFTER both writes verdicts every doc 'dup' against its
        own indexed copy -> both writes no-op. Any crash point
        converges to the same final sink + index state.
@@ -966,7 +965,6 @@ def admit_minhash_batch(
             spark,
             batch_docs.join(admitted_ids, "doc_id"),
             admitted_path,
-            "doc_id",
             batch_id=batch_id,
         )
     # the batch is already signed (and pinned) — append the admitted
@@ -2126,11 +2124,11 @@ def window_index_or_empty(
     crashes mid-write, the dir exists but holds only ``_temporary``
     droppings — no parquet footers — and an inferring read would fail
     'Unable to infer schema' on EVERY subsequent replay, a permanent
-    poison pill (the exact footerless-sink class `admit_sink_upsert`'s
-    explicit-schema read was added against). With the schema pinned, a
-    footerless dir reads as zero rows and the replay re-creates the
-    index; the schema is derived from the zero-row slice of the
-    production builder, so it cannot drift from what appends write.
+    poison pill (the footerless-husk class the admitted sink also has
+    to survive). With the schema pinned, a footerless dir reads as
+    zero rows and the replay re-creates the index; the schema is
+    derived from the zero-row slice of the production builder, so it
+    cannot drift from what appends write.
 
     The pinned read has one blind spot (ADVICE r17): a SCHEMA-DRIFTED
     existing index (column added/renamed by a different builder

@@ -397,8 +397,9 @@ _IVF_SAMPLE_CAP = 100_000  # k-means never trains on more rows than this
 
 # (applicationId, literal SQL text) -> JVM Column wrapping the folded
 # Literal. Session-keyed like _IVF_CACHE so a stopped context's JVM
-# objects are never served; caches a plan FRAGMENT (a constant), never
-# data or results.
+# objects are never served, and a miss evicts every other
+# application's entries so they are not held either; caches a plan
+# FRAGMENT (a constant), never data or results.
 _FOLDED_LIT_CACHE: dict[tuple[str, str], object] = {}
 
 
@@ -422,9 +423,12 @@ def _const_array_literal(sql_text: str) -> Column:
     spark = SparkSession.getActiveSession()
     if spark is None:  # pragma: no cover - import-time construction
         return F.expr(sql_text)
-    key = (spark.sparkContext.applicationId, sql_text)
+    app_id = spark.sparkContext.applicationId
+    key = (app_id, sql_text)
     jcol = _FOLDED_LIT_CACHE.get(key)
     if jcol is None:
+        for stale in [k for k in _FOLDED_LIT_CACHE if k[0] != app_id]:
+            del _FOLDED_LIT_CACHE[stale]
         try:
             plan = (
                 spark.range(1)
@@ -471,7 +475,15 @@ def _assign_cells(df: DataFrame, centers: list[list[float]]) -> DataFrame:
     ONE copy of the assignment idiom — the r11 self-review found it
     pasted verbatim at four sites, and the Spark/DuckDB bit-identical
     contract depends on every site keeping the same IEEE evaluation
-    order and tie-break."""
+    order and tie-break. The input must carry no `_d` or `cell` column:
+    the `select('*', ...)` below would build an ambiguous duplicate."""
+    cols = df.columns
+    clash = {c.lower() for c in cols} & {"_d", "cell"}
+    if clash:
+        raise ValueError(
+            f"_assign_cells input already carries {sorted(clash)}; drop "
+            "them first (the cell assignment would duplicate the column)"
+        )
     dists = _centroid_sq_dists(centers)
     # TWO selects instead of withColumn/withColumn/drop (r21): every
     # DataFrame transformation re-analyzes the plan JVM-side, and over
@@ -483,7 +495,7 @@ def _assign_cells(df: DataFrame, centers: list[list[float]]) -> DataFrame:
     # (3 -> 2, and the widest tensor-bearing pass runs once).
     with_d = df.select("*", dists.alias("_d"))
     return with_d.select(
-        *df.columns,
+        *cols,
         (F.array_position("_d", F.array_min("_d")) - 1).cast("int").alias("cell"),
     )
 
@@ -627,7 +639,8 @@ def ivf_probe_candidates(idx: IvfIndex) -> DataFrame:
     counts it; Catalyst prunes the vector columns for the count). One
     body, so a probe-shape change can never desynchronize the judged
     candidate mass from the plan the ANN actually runs (the r8
-    scale-bench lesson). Columns: query_id, qe, qn, vec_id, e, nrm."""
+    scale-bench lesson). Columns: cell (the join key), vec_id, e, nrm,
+    pcells (the index's pinned probe cells), query_id, qe, qn."""
     assigned = idx.assigned
     # r21: the probe cells come from the index checkpoint's pinned
     # `pcells` column (same slice(_ranked_probe_cells) expression,
@@ -1723,9 +1736,8 @@ def admit_ivf_batch(
     smaller), 'invalid' for zero/null-norm vectors (cosine undefined —
     they never reach the probe, sink, or index), upsert admissions
     into ``admitted_path`` via `ingest.admit_sink_upsert` (O(1)
-    batch-partition write when ``batch_id`` is given — the
-    foreachBatch path — else the row-level first-write-wins
-    anti-join; see that helper for the replay case analysis), and
+    write of the ``batch_id=N`` partition; a sink without ``batch_id``
+    is refused — see that helper for the replay case analysis), and
     append them to the index via their ALREADY-COMPUTED cell assignment
     (`_write_ivf_index_assigned` — no second argmin pass). Returns the
     ledger ``(vec_id, status 'admitted'/'dup'/'invalid', canon_id,
@@ -1857,7 +1869,6 @@ def admit_ivf_batch(
             spark,
             batch_vectors.join(admitted_ids, "vec_id"),
             admitted_path,
-            "vec_id",
             batch_id=batch_id,
         )
     _write_ivf_index_assigned(

@@ -161,10 +161,10 @@ def foreach_batch_admission(index_path: str, admitted_path: str):
     indexed or earlier-in-batch content, upsert admissions into
     ``admitted_path/batch_id=N`` (the O(1) idempotent batch-partition
     sink of `ingest.admit_sink_upsert` — foreachBatch's batch_id is
-    exactly the replay-stable key that layout needs, and it takes the
-    per-micro-batch sink cost from an O(sink) anti-join scan to one
-    directory listing), and grow the index with them so LATER
-    micro-batches dedup against this one without any corpus rescan.
+    exactly the replay-stable key that layout needs, and it keeps the
+    per-micro-batch sink cost at one existence check), and grow the
+    index with them so LATER micro-batches dedup against this one
+    without any corpus rescan.
     Exactly-once under foreachBatch's at-least-once replay comes from
     admit_minhash_batch's ledger -> sink -> index write ordering (see
     its docstring; the batch-twin oracle for the semantics is the
@@ -248,7 +248,7 @@ def foreach_batch_curation(
 
     The sink-partition read uses an explicit schema so a zero-admission
     batch (empty committed partition) reads as empty instead of failing
-    inference, mirroring `admit_sink_upsert`'s legacy-read rule.
+    inference.
 
     The three optional curation stages compose here exactly as in the
     batch pipeline (r19, the quality_model= -> perplexity= arc):

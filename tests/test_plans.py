@@ -709,3 +709,21 @@ def test_semdedup_pair_stage_plan_shape(spark, sf_dir):
     plan = executed_plan(df)
     assert "CartesianProduct" not in plan and "BroadcastNestedLoopJoin" not in plan, plan
     assert plan.count("WindowExec") == 0 or "No Partition Defined" not in plan
+
+
+def test_const_array_literal_is_one_catalyst_literal(spark):
+    """`_const_array_literal` folds a constant tensor through an internal
+    Spark hook (`ExpressionUtils.column`). If that hook moves, the helper
+    falls back to the parsed, unfolded `F.expr` tree and every later
+    analysis walks the whole tensor again; this canary turns that silent
+    fallback into a failure. It also pins the cache bound: a miss evicts
+    the entries of every other (stopped) application."""
+    from nytimes_batch_processor_spark.operators import similarity as sim
+
+    sim._FOLDED_LIT_CACHE[("stopped-app", "array(0d)")] = object()
+    col = sim._const_array_literal("array(array(1.0d, 2.0d), array(3.0d, 4.0d))")
+    analyzed = spark.range(1).select(col.alias("t"))._jdf.queryExecution().analyzed()
+    node = analyzed.expressions().apply(0).child()
+    assert node.getClass().getSimpleName() == "Literal", node.toString()
+    app_id = spark.sparkContext.applicationId
+    assert all(k[0] == app_id for k in sim._FOLDED_LIT_CACHE), list(sim._FOLDED_LIT_CACHE)

@@ -1403,11 +1403,9 @@ def test_stream_admission_dedups_across_microbatches(spark, tmp_path):
     indexed = {r["doc_id"] for r in spark.read.parquet(index_path).collect()}
     assert indexed == {1, 2, 100, 201}, indexed
 
-    # replay idempotency: re-admitting batch 0 WITH its batch_id (the
-    # shape a real foreachBatch replay always has — the flat ad-hoc
-    # mode on a stream's partitioned sink is refused since r15's
-    # mirror guard) verdicts everything 'dup' against its own indexed
-    # copy — sink and index unchanged
+    # replay idempotency: re-admitting batch 0 with its batch_id (the
+    # shape a real foreachBatch replay always has) verdicts everything
+    # 'dup' against its own indexed copy — sink and index unchanged
     batch0 = spark.createDataFrame(
         [(100, novel_a), (101, corpus_text), (102, novel_a)],
         "doc_id long, text string",
@@ -1749,12 +1747,10 @@ def test_curation_pipeline_admission_semantics(spark, tmp_path):
 
 def test_admit_sink_footerless_dir_recovers(spark, tmp_path):
     """ADVICE r12: a crash during the very FIRST admitted-sink write
-    can leave the sink dir existing with only ``_temporary`` contents.
-    The pre-r14 bare fs.exists check then fed a footerless dir to
-    parquet schema inference, which fails — poison-pilling every
-    replay. The r14 explicit-schema read treats it as zero committed
-    rows: the replay writes the admissions and a SECOND replay stays
-    idempotent."""
+    can leave the sink ROOT existing with only ``_temporary`` contents.
+    That husk must neither trip the flat-layout refusal nor poison
+    partition discovery: the replay writes the admissions into its
+    batch partition and a SECOND replay stays idempotent."""
     from nytimes_batch_processor_spark.operators.dedup import (
         admit_minhash_batch,
         build_minhash_index,
@@ -1782,35 +1778,41 @@ def test_admit_sink_footerless_dir_recovers(spark, tmp_path):
         [(10, "alpha beta gamma delta epsilon zeta eta theta iota kappa")],
         "doc_id long, text string",
     )
-    admit_minhash_batch(spark, index_path, batch, str(admitted_path))
+    admit_minhash_batch(spark, index_path, batch, str(admitted_path), batch_id=0)
     sink = spark.read.parquet(str(admitted_path))
     assert {r["doc_id"] for r in sink.collect()} == {10}
     # replay: verdict 'dup' vs its own indexed copy; sink unchanged
-    admit_minhash_batch(spark, index_path, batch, str(admitted_path))
+    admit_minhash_batch(spark, index_path, batch, str(admitted_path), batch_id=0)
     assert [r["doc_id"] for r in spark.read.parquet(str(admitted_path)).collect()] == [10]
 
 
 def test_admit_sink_batch_partition_is_o1_and_idempotent(spark, tmp_path):
-    """The r14 batch-partition sink (`ingest.admit_sink_upsert` with a
-    batch_id — the foreachBatch path, closing the O(corpus)-per-batch
-    anti-join of VERDICT r12 item 4): a committed ``batch_id=N``
-    partition makes the replay's sink step a pure skip (no sink scan,
-    no rewrite — pinned by handing the replay DIFFERENT rows and
-    seeing the committed partition untouched), while an UNCOMMITTED
-    partition (crash mid-write left only ``_temporary``) is rewritten
-    via overwrite."""
+    """The batch-partition sink (`ingest.admit_sink_upsert`): a
+    committed ``batch_id=N`` partition makes the replay's sink step a
+    pure skip (no sink scan, no rewrite — pinned by handing the replay
+    DIFFERENT rows and seeing the committed partition untouched), while
+    an UNCOMMITTED partition (crash mid-write left only ``_temporary``)
+    is rewritten via overwrite. An admission given a sink but no
+    batch_id is refused after its ledger pin and before either write:
+    sink and index stay untouched."""
+    import pytest as _pytest
+
     from nytimes_batch_processor_spark.ingest import admit_sink_upsert
+    from nytimes_batch_processor_spark.operators.dedup import (
+        admit_minhash_batch,
+        build_minhash_index,
+    )
 
     sink = tmp_path / "admitted"
     rows = spark.createDataFrame([(10, "a"), (11, "b")], "doc_id long, text string")
-    admit_sink_upsert(spark, rows, str(sink), "doc_id", batch_id=0)
+    admit_sink_upsert(spark, rows, str(sink), batch_id=0)
     got = {(r["doc_id"], r["text"]) for r in spark.read.parquet(str(sink)).collect()}
     assert got == {(10, "a"), (11, "b")}
 
     # committed partition: the replay SKIPS (different rows prove no
     # rewrite happened — a real replay recomputes identical ones)
     other = spark.createDataFrame([(99, "z")], "doc_id long, text string")
-    admit_sink_upsert(spark, other, str(sink), "doc_id", batch_id=0)
+    admit_sink_upsert(spark, other, str(sink), batch_id=0)
     got = {(r["doc_id"], r["text"]) for r in spark.read.parquet(str(sink)).collect()}
     assert got == {(10, "a"), (11, "b")}
 
@@ -1820,19 +1822,37 @@ def test_admit_sink_batch_partition_is_o1_and_idempotent(spark, tmp_path):
     husk.mkdir(parents=True)
     (husk / "part-00000").write_bytes(b"junk")
     rows1 = spark.createDataFrame([(20, "c")], "doc_id long, text string")
-    admit_sink_upsert(spark, rows1, str(sink), "doc_id", batch_id=1)
+    admit_sink_upsert(spark, rows1, str(sink), batch_id=1)
     got = {(r["doc_id"], r["batch_id"]) for r in spark.read.parquet(str(sink)).collect()}
     assert got == {(10, 0), (11, 0), (20, 1)}
 
+    # a sink but no batch_id: refused, nothing written anywhere
+    index_path = str(tmp_path / "index")
+    build_minhash_index(
+        spark.createDataFrame(
+            [(1, "the quick brown fox jumps over the lazy dog tonight")],
+            "doc_id long, text string",
+        ),
+        index_path,
+    )
+    novel = spark.createDataFrame(
+        [(30, "alpha beta gamma delta epsilon zeta eta theta iota kappa")],
+        "doc_id long, text string",
+    )
+    with _pytest.raises(ValueError, match="batch_id"):
+        admit_minhash_batch(spark, index_path, novel, str(sink))
+    got = {(r["doc_id"], r["batch_id"]) for r in spark.read.parquet(str(sink)).collect()}
+    assert got == {(10, 0), (11, 0), (20, 1)}
+    assert {r["doc_id"] for r in spark.read.parquet(index_path).collect()} == {1}
+
 
 def test_admit_sink_batch_path_refuses_flat_legacy_sink(spark, tmp_path):
-    """Layout-migration guard (self-review r14): a pre-r14 sink holds
-    flat part files at its root; resuming a stream (batch_id layout)
-    over it would write batch_id= dirs next to them and break partition
-    discovery for every later read. The batch path must refuse loudly
-    instead. A partial JOB commit (part file present, no _SUCCESS) must
-    also NOT count as committed — the replay rewrites it rather than
-    dropping the missing tasks' rows."""
+    """Layout guard (self-review r14): a path holding flat part files at
+    its root is not an admitted sink; writing batch_id= dirs next to
+    them would break partition discovery for every later read, so the
+    write must refuse loudly instead. A partial JOB commit (part file
+    present, no _SUCCESS) must also NOT count as committed — the replay
+    rewrites it rather than dropping the missing tasks' rows."""
     import pytest as _pytest
 
     from nytimes_batch_processor_spark.ingest import (
@@ -1842,9 +1862,12 @@ def test_admit_sink_batch_path_refuses_flat_legacy_sink(spark, tmp_path):
 
     rows = spark.createDataFrame([(1, "a")], "doc_id long, text string")
     flat = str(tmp_path / "flat_sink")
-    rows.write.parquet(flat)  # the legacy layout
+    rows.write.parquet(flat)  # part files directly at the root
     with _pytest.raises(ValueError, match="flat"):
-        admit_sink_upsert(spark, rows, flat, "doc_id", batch_id=0)
+        admit_sink_upsert(spark, rows, flat, batch_id=0)
+    # the trailing-slash variant of the path is refused too
+    with _pytest.raises(ValueError, match="flat"):
+        admit_sink_upsert(spark, rows, flat + "/", batch_id=0)
 
     # mid-JOB-commit husk: a data file exists but no _SUCCESS marker —
     # not committed, so the replay overwrites (converging) instead of
@@ -1862,7 +1885,7 @@ def test_admit_sink_batch_path_refuses_flat_legacy_sink(spark, tmp_path):
     staged = _glob.glob(str(part) + ".stage/part-*.parquet")[0]
     _sh.copy(staged, str(part / "part-00000.parquet"))  # one task's output, no marker
     assert not job_commit_succeeded(spark, str(part))
-    admit_sink_upsert(spark, both, str(sink), "doc_id", batch_id=0)
+    admit_sink_upsert(spark, both, str(sink), batch_id=0)
     got = {r["doc_id"] for r in spark.read.parquet(str(sink)).collect()}
     assert got == {10, 11}, got
     assert job_commit_succeeded(spark, str(part))
@@ -1887,7 +1910,7 @@ def test_compact_admitted_sink_preserves_markers(spark, tmp_path):
             [(b * 10 + i, f"doc {b}-{i}") for i in range(8)],
             "doc_id long, text string",
         ).repartition(4)  # multiple part files per batch partition
-        admit_sink_upsert(spark, rows, sink, "doc_id", batch_id=b)
+        admit_sink_upsert(spark, rows, sink, batch_id=b)
 
     before = sorted(
         (r["doc_id"], r["text"], r["batch_id"])
@@ -1906,7 +1929,7 @@ def test_compact_admitted_sink_preserves_markers(spark, tmp_path):
     # the idempotency ledger survived: a replay of batch 1 with
     # DIFFERENT rows must still skip (partition untouched)
     other = spark.createDataFrame([(99, "z")], "doc_id long, text string")
-    admit_sink_upsert(spark, other, sink, "doc_id", batch_id=1)
+    admit_sink_upsert(spark, other, sink, batch_id=1)
     assert sorted(
         (r["doc_id"], r["text"], r["batch_id"])
         for r in spark.read.parquet(sink).collect()
@@ -1935,37 +1958,6 @@ def test_compact_admitted_sink_preserves_markers(spark, tmp_path):
     assert not _os.path.exists(f"{sink}/.compact_old_batch_id=1")
 
 
-def test_admit_sink_flat_path_refuses_partitioned_sink(spark, tmp_path):
-    """The mirror of the flat-legacy refusal (ADVICE r14): an ad-hoc
-    BATCH caller (batch_id=None) on a sink a stream already partitioned
-    would append flat part files at the partition root — the same
-    mixed-layout corruption, from the other direction. And the layout
-    cache must be keyed per MODE: a flat-mode validation pass on an
-    empty path must not pre-approve a later batch-mode write onto the
-    flat files that pass just created."""
-    import pytest as _pytest
-
-    from nytimes_batch_processor_spark.ingest import admit_sink_upsert
-
-    rows = spark.createDataFrame([(1, "a")], "doc_id long, text string")
-    sink = str(tmp_path / "part_sink")
-    admit_sink_upsert(spark, rows, sink, "doc_id", batch_id=0)
-    with _pytest.raises(ValueError, match="partitioned"):
-        admit_sink_upsert(spark, rows, sink, "doc_id")
-
-    # mode-keyed cache: flat mode validates + writes flat files first;
-    # the batch mode's own guard must still fire (a shared per-path
-    # cache entry would skip it and corrupt the sink)
-    flat_first = str(tmp_path / "flat_first")
-    admit_sink_upsert(spark, rows, flat_first, "doc_id")
-    with _pytest.raises(ValueError, match="flat"):
-        admit_sink_upsert(spark, rows, flat_first, "doc_id", batch_id=0)
-    # trailing-slash variant hits the same (normalized) cache entry and
-    # the same refusal — not a fresh un-guarded path
-    with _pytest.raises(ValueError, match="flat"):
-        admit_sink_upsert(spark, rows, flat_first + "/", "doc_id", batch_id=0)
-
-
 def test_compact_admitted_sink_files_after_is_recounted(spark, tmp_path):
     """files_after must COUNT the swapped-in partition's data files,
     not assume target_files (ADVICE r14): coalesce(n) emits one file
@@ -1984,7 +1976,7 @@ def test_compact_admitted_sink_files_after_is_recounted(spark, tmp_path):
     rows = spark.createDataFrame(
         [(i, f"doc {i}") for i in range(64)], "doc_id long, text string"
     ).repartition(8)  # 8 tiny part files in the partition
-    admit_sink_upsert(spark, rows, sink, "doc_id", batch_id=0)
+    admit_sink_upsert(spark, rows, sink, batch_id=0)
     stats = compact_admitted_sink(spark, sink, target_files=6)
     actual = len(
         [
@@ -1996,183 +1988,6 @@ def test_compact_admitted_sink_files_after_is_recounted(spark, tmp_path):
     assert stats["partitions_compacted"] == 1, stats
     assert stats["files_after"] == actual, (stats, actual)
     assert stats["files_after"] <= stats["files_before"], stats
-
-
-def test_admit_sink_flat_cache_entry_lands_after_the_write(spark, tmp_path):
-    """ADVICE r15: the flat-mode layout pass must be cached AFTER the
-    append lands, and each mode's write must stale the other mode's
-    entry. Two leak shapes, both previously standing passes:
-
-    1. an EMPTY flat append — measured: Spark still writes one (empty)
-       root part file, so the later batch write refuses on the REAL
-       listing; pinned here so the guard's premise ('flat data files at
-       root') stays observable, not assumed;
-    2. a flat append that FAILS mid-write after validation — no
-       standing pass may survive; the later batch write must succeed
-       and the flat mode must then re-check and refuse.
-    """
-    import pytest as _pytest
-    from pyspark.sql import functions as F
-
-    from nytimes_batch_processor_spark.ingest import admit_sink_upsert
-
-    rows = spark.createDataFrame([(1, "a")], "doc_id long, text string")
-
-    # shape 1: empty flat append, then a batch write at the same path —
-    # the empty append leaves a real (empty) root part file, so the
-    # batch guard refuses on the listing itself
-    sink = str(tmp_path / "empty_flat_first")
-    empty = rows.where(F.lit(False))
-    admit_sink_upsert(spark, empty, sink, "doc_id")
-    with _pytest.raises(ValueError, match="flat"):
-        admit_sink_upsert(spark, rows, sink, "doc_id", batch_id=0)
-
-    # shape 2: flat append validates but the write itself fails — no
-    # standing pass may survive the failure
-    sink2 = str(tmp_path / "failed_flat_first")
-    poisoned = rows.withColumn(
-        "boom",
-        F.when(F.col("doc_id") >= 0, F.raise_error(F.lit("injected"))),
-    )
-    with _pytest.raises(Exception, match="injected"):
-        admit_sink_upsert(spark, poisoned, sink2, "doc_id")
-    admit_sink_upsert(spark, rows, sink2, "doc_id", batch_id=0)
-    with _pytest.raises(ValueError, match="partitioned"):
-        admit_sink_upsert(spark, rows, sink2, "doc_id")
-
-    # and the flat->batch stale direction: a successful FLAT append must
-    # discard a standing batch-mode 'no flat files' pass (stale-entry
-    # injection — end-to-end the batch dir debris of a failed batch
-    # write already trips the flat guard, so the cache shape is planted
-    # directly, the advice's 'failure after the cache add' case)
-    from nytimes_batch_processor_spark.ingest import (
-        _LAYOUT_CHECKED,
-        _norm_sink_path,
-    )
-
-    sink3 = str(tmp_path / "stale_batch_then_flat")
-    _LAYOUT_CHECKED.add(("batch", _norm_sink_path(sink3)))
-    admit_sink_upsert(spark, rows, sink3, "doc_id")  # flat files land
-    assert ("batch", _norm_sink_path(sink3)) not in _LAYOUT_CHECKED
-    with _pytest.raises(ValueError, match="flat"):
-        admit_sink_upsert(spark, rows, sink3, "doc_id", batch_id=1)
-
-
-def test_migrate_admitted_sink_lifts_flat_layout(spark, tmp_path):
-    """`migrate_admitted_sink` (VERDICT r14 item 4): a legacy flat sink
-    moves into the batch-partitioned layout in place — all legacy rows
-    under the reserved batch_id=-1 partition with its own _SUCCESS
-    marker — after which streaming admission (batch mode) proceeds and
-    replay stays idempotent; the flat mode now refuses. A root holding
-    both layouts WITHOUT a migration manifest is refused."""
-    import pytest as _pytest
-
-    from nytimes_batch_processor_spark.ingest import (
-        admit_sink_upsert,
-        job_commit_succeeded,
-        migrate_admitted_sink,
-    )
-
-    sink = str(tmp_path / "legacy")
-    a = spark.createDataFrame([(1, "a"), (2, "b")], "doc_id long, text string")
-    b = spark.createDataFrame([(3, "c")], "doc_id long, text string")
-    admit_sink_upsert(spark, a, sink, "doc_id")  # flat appends
-    admit_sink_upsert(spark, b, sink, "doc_id")
-    with _pytest.raises(ValueError, match="flat"):
-        admit_sink_upsert(spark, a, sink, "doc_id", batch_id=0)
-
-    report = migrate_admitted_sink(spark, sink)
-    assert report["status"] == "migrated", report
-    assert report["files_migrated"] >= 2, report
-    assert job_commit_succeeded(spark, f"{sink}/batch_id=-1")
-    got = {
-        (r["doc_id"], r["text"], r["batch_id"])
-        for r in spark.read.parquet(sink).collect()
-    }
-    assert got == {(1, "a", -1), (2, "b", -1), (3, "c", -1)}
-
-    # the stream continues where the refusal used to dead-end
-    rows0 = spark.createDataFrame([(10, "x")], "doc_id long, text string")
-    admit_sink_upsert(spark, rows0, sink, "doc_id", batch_id=0)
-    # replay with different rows: committed partition untouched
-    other = spark.createDataFrame([(99, "z")], "doc_id long, text string")
-    admit_sink_upsert(spark, other, sink, "doc_id", batch_id=0)
-    got = {(r["doc_id"], r["batch_id"]) for r in spark.read.parquet(sink).collect()}
-    assert got == {(1, -1), (2, -1), (3, -1), (10, 0)}
-    with _pytest.raises(ValueError, match="partitioned"):
-        admit_sink_upsert(spark, rows0, sink, "doc_id")
-    # re-running the migration on the now-partitioned sink is a no-op
-    assert migrate_admitted_sink(spark, sink)["status"] == "already_partitioned"
-
-    # a non-negative legacy id would collide with future stream batch
-    # ids (the committed-marker check would treat legacy rows as stream
-    # batch N's own completed write): refused up front
-    with _pytest.raises(ValueError, match="negative"):
-        migrate_admitted_sink(spark, sink, legacy_batch_id=0)
-
-    # genuinely mixed (no manifest): refuse, never guess
-    import shutil as _sh
-    import glob as _glob
-
-    mixed = str(tmp_path / "mixed")
-    admit_sink_upsert(spark, rows0, mixed, "doc_id", batch_id=0)
-    part_file = _glob.glob(f"{mixed}/batch_id=0/part-*.parquet")[0]
-    _sh.copy(part_file, f"{mixed}/part-rogue.parquet")
-    with _pytest.raises(ValueError, match="manifest"):
-        migrate_admitted_sink(spark, mixed)
-
-
-def test_migrate_admitted_sink_crash_recovery(spark, tmp_path):
-    """Both migration crash points converge on re-run: (a) crashed
-    AFTER publishing the legacy partition but before deleting the
-    manifested flat files -> the re-run finishes the cleanup without
-    duplicating rows; (b) crashed BEFORE publish (manifest + tmp
-    leftovers, no committed partition) -> the re-run discards partials
-    and migrates fresh from the intact flat files."""
-    import os as _os
-
-    from nytimes_batch_processor_spark.ingest import (
-        admit_sink_upsert,
-        migrate_admitted_sink,
-    )
-
-    # (a) post-publish crash: build the exact on-disk state by hand
-    sink = str(tmp_path / "post_publish")
-    rows = spark.createDataFrame([(1, "a"), (2, "b")], "doc_id long, text string")
-    admit_sink_upsert(spark, rows, sink, "doc_id")  # flat files
-    flat_names = sorted(
-        n for n in _os.listdir(sink) if not n.startswith(("_", "."))
-    )
-    spark.read.parquet(sink).write.parquet(f"{sink}/batch_id=-1")
-    with open(f"{sink}/.migrate_manifest", "w") as f:
-        f.write("batch_id=-1\n" + "\n".join(flat_names) + "\n")
-    # recovery keys on the id RECORDED in the manifest — a re-run with
-    # a DIFFERENT legacy id must converge the crashed -1 migration, not
-    # delete its breadcrumb and refuse (self-review r15)
-    report = migrate_admitted_sink(spark, sink, legacy_batch_id=-5)
-    assert report["status"] == "recovered", report
-    assert report["legacy_batch_id"] == -1, report
-    assert not _os.path.exists(f"{sink}/.migrate_manifest")
-    got = sorted(
-        (r["doc_id"], r["batch_id"]) for r in spark.read.parquet(sink).collect()
-    )
-    assert got == [(1, -1), (2, -1)], got  # no duplicated legacy rows
-
-    # (b) pre-publish crash: manifest + junk tmp, no committed partition
-    sink2 = str(tmp_path / "pre_publish")
-    admit_sink_upsert(spark, rows, sink2, "doc_id")
-    flat_names2 = sorted(
-        n for n in _os.listdir(sink2) if not n.startswith(("_", "."))
-    )
-    with open(f"{sink2}/.migrate_manifest", "w") as f:
-        f.write("batch_id=-1\n" + "\n".join(flat_names2) + "\n")
-    _os.makedirs(f"{sink2}/.migrate_tmp")
-    report = migrate_admitted_sink(spark, sink2)
-    assert report["status"] == "migrated", report
-    got = sorted(
-        (r["doc_id"], r["batch_id"]) for r in spark.read.parquet(sink2).collect()
-    )
-    assert got == [(1, -1), (2, -1)], got
 
 
 def test_stream_curation_perplexity_filter(spark, tmp_path):
@@ -2390,182 +2205,6 @@ def test_stream_curation_composes_and_recovers(spark, tmp_path):
     assert {
         r["doc_id"] for r in spark.read.parquet(index_path).collect()
     } == {1, 2, 100, 201}
-
-
-def test_migrate_recovery_tolerates_degenerate_manifests(spark, tmp_path):
-    """Self-review r15: recovery must not crash on (a) a HEADERLESS
-    manifest (the first r15 format — names only, recovered under the
-    then-only default id -1) or (b) an EMPTY manifest (crashed between
-    create and write: nothing was published, so the re-run restarts
-    cleanly from the intact flat files)."""
-    import os as _os
-
-    from nytimes_batch_processor_spark.ingest import (
-        admit_sink_upsert,
-        migrate_admitted_sink,
-    )
-
-    rows = spark.createDataFrame([(1, "a"), (2, "b")], "doc_id long, text string")
-
-    # (a) headerless manifest + committed legacy partition: the FIRST
-    # r15 format published under the CALLER-SUPPLIED id and its
-    # recovery contract was a same-args re-run — so a crash under a
-    # custom id recovers under that id, never a hard-coded -1
-    # (self-review r15 pass 3)
-    sink = str(tmp_path / "headerless")
-    admit_sink_upsert(spark, rows, sink, "doc_id")
-    names = sorted(n for n in _os.listdir(sink) if not n.startswith(("_", ".")))
-    spark.read.parquet(sink).write.parquet(f"{sink}/batch_id=-2")
-    with open(f"{sink}/.migrate_manifest", "w") as f:
-        f.write("\n".join(names) + "\n")
-    report = migrate_admitted_sink(spark, sink, legacy_batch_id=-2)
-    assert report["status"] == "recovered" and report["legacy_batch_id"] == -2
-    got = sorted(
-        (r["doc_id"], r["batch_id"]) for r in spark.read.parquet(sink).collect()
-    )
-    assert got == [(1, -2), (2, -2)], got
-
-    # (a1b) headerless manifest + committed partition, re-run with a
-    # DIFFERENT id than the crashed run used (ADVICE r15): the re-run
-    # must find the committed negative partition and finish ITS
-    # cleanup — not read 'not committed' under its own id, delete the
-    # manifest breadcrumb, and strand duplicated rows behind the
-    # mixed-layout refusal
-    import pytest as _pytest
-
-    sinkb = str(tmp_path / "headerless_otherid")
-    admit_sink_upsert(spark, rows, sinkb, "doc_id")
-    names_b = sorted(
-        n for n in _os.listdir(sinkb) if not n.startswith(("_", "."))
-    )
-    spark.read.parquet(sinkb).write.parquet(f"{sinkb}/batch_id=-7")
-    with open(f"{sinkb}/.migrate_manifest", "w") as f:
-        f.write("\n".join(names_b) + "\n")
-    report = migrate_admitted_sink(spark, sinkb)  # default id -1, not -7
-    assert report["status"] == "recovered" and report["legacy_batch_id"] == -7
-    got = sorted(
-        (r["doc_id"], r["batch_id"]) for r in spark.read.parquet(sinkb).collect()
-    )
-    assert got == [(1, -7), (2, -7)], got
-
-    # (a1c) headerless manifest + TWO committed negative partitions:
-    # unrecoverable ambiguity this tool never produces — refuse loudly
-    # (naming the manifest) and leave every breadcrumb in place
-    sinkc = str(tmp_path / "headerless_ambiguous")
-    admit_sink_upsert(spark, rows, sinkc, "doc_id")
-    names_c = sorted(
-        n for n in _os.listdir(sinkc) if not n.startswith(("_", "."))
-    )
-    spark.read.parquet(sinkc).write.parquet(f"{sinkc}/batch_id=-7")
-    spark.read.parquet(sinkc).write.parquet(f"{sinkc}/batch_id=-8")
-    with open(f"{sinkc}/.migrate_manifest", "w") as f:
-        f.write("\n".join(names_c) + "\n")
-    with _pytest.raises(ValueError, match="migrate_manifest"):
-        migrate_admitted_sink(spark, sinkc)
-    assert _os.path.exists(f"{sinkc}/.migrate_manifest")
-    for n in names_c:
-        assert _os.path.exists(f"{sinkc}/{n}"), n
-
-    # (a2) truncated header ('batch_id=' with the value lost mid-flush):
-    # written strictly before anything publishes, so the re-run
-    # restarts cleanly instead of wedging on int('')
-    sink3 = str(tmp_path / "truncated")
-    admit_sink_upsert(spark, rows, sink3, "doc_id")
-    with open(f"{sink3}/.migrate_manifest", "w") as f:
-        f.write("batch_id=\n")
-    report = migrate_admitted_sink(spark, sink3)
-    assert report["status"] == "migrated", report
-    got = sorted(
-        (r["doc_id"], r["batch_id"]) for r in spark.read.parquet(sink3).collect()
-    )
-    assert got == [(1, -1), (2, -1)], got
-
-    # (b) empty manifest, nothing published: restart from flat files
-    sink2 = str(tmp_path / "emptymanifest")
-    admit_sink_upsert(spark, rows, sink2, "doc_id")
-    open(f"{sink2}/.migrate_manifest", "w").close()
-    report = migrate_admitted_sink(spark, sink2)
-    assert report["status"] == "migrated", report
-    got = sorted(
-        (r["doc_id"], r["batch_id"]) for r in spark.read.parquet(sink2).collect()
-    )
-    assert got == [(1, -1), (2, -1)], got
-
-
-def test_migrate_headerless_recovery_requires_containment(spark, tmp_path):
-    """ADVICE r16: a committed negative partition persists forever after
-    a SUCCESSFUL migration, so 'exactly one committed negative
-    partition' is not proof it is the crashed run's publish. If flat
-    files REAPPEAR on a migrated sink and a second (headerless-
-    manifest) migration crashes before publishing, recovery must not
-    adopt the old partition and delete never-migrated flat files —
-    adoption requires row-level CONTAINMENT of the manifested flat
-    rows in the candidate partition; otherwise refuse loudly with
-    every breadcrumb left in place."""
-    import os as _os
-    import shutil as _shutil
-
-    import pytest as _pytest
-
-    from nytimes_batch_processor_spark.ingest import migrate_admitted_sink
-
-    def reappeared_sink(name, rows):
-        """A sink whose ONLY negative partition is an old migration's
-        publish, with fresh flat files (a manual copy) at the root and
-        a headerless manifest naming them — the crashed-second-
-        migration shape."""
-        sink = tmp_path / name
-        old = spark.createDataFrame([(1, "a"), (2, "b")], "doc_id long, text string")
-        old.coalesce(1).write.parquet(str(sink / "batch_id=-3"))
-        stage = tmp_path / f"{name}_stage"
-        spark.createDataFrame(rows, "doc_id long, text string").coalesce(
-            1
-        ).write.parquet(str(stage))
-        names = []
-        for i, f in enumerate(sorted(_os.listdir(stage))):
-            if f.startswith(("_", ".")):
-                continue
-            dst = f"reappeared-{i}.parquet"
-            _shutil.copy(stage / f, sink / dst)
-            names.append(dst)
-        with open(sink / ".migrate_manifest", "w") as fh:
-            fh.write("\n".join(names) + "\n")
-        return str(sink), names
-
-    # (a) the reappeared rows are NOT in the old partition: adopting it
-    # would delete the only copy — refuse, everything intact
-    sink, names = reappeared_sink("reappeared_new", [(3, "c"), (4, "d")])
-    with _pytest.raises(ValueError, match="does NOT contain"):
-        migrate_admitted_sink(spark, sink)
-    assert _os.path.exists(f"{sink}/.migrate_manifest")
-    for n in names:
-        assert _os.path.exists(f"{sink}/{n}"), n
-
-    # (b) the reappeared rows ARE all present in the old partition
-    # (true duplicates): deleting the flat copies is safe by the same
-    # containment, and recovery converges under the old id
-    sink2, names2 = reappeared_sink("reappeared_dup", [(1, "a"), (2, "b")])
-    report = migrate_admitted_sink(spark, sink2)
-    assert report["status"] == "recovered" and report["legacy_batch_id"] == -3
-    assert not _os.path.exists(f"{sink2}/.migrate_manifest")
-    for n in names2:
-        assert not _os.path.exists(f"{sink2}/{n}"), n
-    got = sorted(
-        (r["doc_id"], r["batch_id"]) for r in spark.read.parquet(sink2).collect()
-    )
-    assert got == [(1, -3), (2, -3)], got
-
-    # (c) MULTISET containment (r17 self-review): a flat row present
-    # TWICE (legacy double-append) but only once in the old partition
-    # passes a set-level anti-join, yet adopting would delete one of
-    # the two copies — the guard must compare per-row COUNTS and
-    # refuse.
-    sink3, names3 = reappeared_sink("reappeared_multiset", [(1, "a"), (1, "a")])
-    with _pytest.raises(ValueError, match="does NOT contain"):
-        migrate_admitted_sink(spark, sink3)
-    assert _os.path.exists(f"{sink3}/.migrate_manifest")
-    for n in names3:
-        assert _os.path.exists(f"{sink3}/{n}"), n
 
 
 def test_stream_span_reports_vs_previously_indexed(spark, tmp_path):

@@ -73,14 +73,14 @@ def main() -> int:
             fn = specs[name].fn
         ckpt_plans: list[str] = []
 
-        def hooked(self, eager=True, _plans=ckpt_plans):
+        def hooked(self, *args, _plans=ckpt_plans, **kwargs):
             # Record the frame ABOUT TO BE materialized — the job whose
             # partitioning/pushdown the optimization claims are about.
             try:
                 _plans.append(_formatted(self))
             except Exception as exc:  # noqa: BLE001 — evidence best-effort
                 _plans.append(f"CKPT CAPTURE ERROR: {type(exc).__name__}: {exc}")
-            return orig_ckpt(self, eager=eager)
+            return orig_ckpt(self, *args, **kwargs)
 
         DataFrame.localCheckpoint = hooked
         try:
