@@ -4,23 +4,20 @@ queries at $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on
 local[$SPARK_GRAFT_CPUS] and prints ONE JSON line:
 {"metric": ..., "value": N, "unit": "sec", "queries": {...}, "sf": ...}
 
-Each query executes to completion through the noop sink (full plan runs,
-nothing collected to the driver — the honest way to time a distributed
-plan). Methodology: one UNMEASURED pass over every headline query warms
-JVM/JIT/codegen and the parquet read path, then THREE passes are timed
-and the per-query MINIMUM is reported — steady-state numbers with a
-noise bound, which is what a long-running engine's latency actually is.
-(r1 numbers were cold-start; r2 added the warmup pass; r3 added
-min-of-2 because single-pass deltas of +-0.4s on sub-2s queries were
-run noise; r7 added a third pass for sub-second queries; r9 made the
-third pass universal after min-of-2 left a ~20% band on multi-second
-queries, and added the env_factor micro-anchor for host drift; r20
-BRACKETED the anchors — measured min-of-5 both BEFORE and AFTER the
-timed passes, effective wall = per-anchor min of the two brackets,
-per-anchor drift recorded — after the r18->r19 corrected-total swing
-(~19% on flat raw walls) turned out to be single-shot anchor noise:
-one mismeasured anchor run silently rescaled every corrected wall of
-its round, and nothing in the record could bound it.)
+Each query executes to completion through the noop sink (the full plan
+runs, nothing is collected to the driver). One unmeasured pass over
+every headline query warms the JVM, codegen and the parquet read path;
+three timed passes follow and each query reports its minimum. A query
+that throws records an `errors` entry and a None timing; the line still
+prints.
+
+Host drift is measured by three fixed anchor workloads (a codegen CPU
+loop, a fixed-key shuffle, a parquet scan-aggregate) whose plans never
+change with engine code. They run min-of-5 in two brackets, before and
+after the timed passes. The effective anchor wall is the per-anchor
+minimum of the brackets, `env_anchor_drift` records post/pre, and
+`env_factor` is the geometric mean of the effective walls over their
+reference values; `value_env_corrected` divides the total by it.
 """
 
 from __future__ import annotations
@@ -177,188 +174,24 @@ HEADLINE = [
 ]
 
 
-# --- environment micro-anchor (VERDICT r8 item 6) -------------------------
-# Three fixed queries whose PLANS never change with engine code: a codegen
-# CPU loop, a fixed-key shuffle, and a parquet scan-aggregate. Their
-# min-of-5 wall, against the reference values recorded on the r9 bench
-# host, quantifies per-run environment drift — three rounds (r6-r8)
-# explained +8-16% like-for-like totals as sandbox drift via ad-hoc
-# worktree experiments; env_factor makes that a standing, recorded
-# number. REF values assume the default sf0.1 fixture for the scan
-# anchor (the driver's per-round configuration). Replication noise of
-# the anchors themselves (measured r9, 3 sessions x min-of-5): cpu +-6%,
-# shuffle +-3%, scan +-20%; the geometric mean resolves the >=8% drifts
-# the factor exists to catch. REF calibrated from anchors run INSIDE a
-# full r9 bench process (post-warmup JIT state differs measurably from a
-# bare session — standalone probes read ~15% slower).
+# Reference walls of the anchor workloads, measured inside a full bench
+# process (post-warmup JIT state; a bare session reads ~15% slower) on
+# the reference host at sf0.1. The scan anchor's reference only holds
+# against the sf0.1 fixture. Replication noise of the anchors themselves
+# (3 sessions x min-of-5): cpu +-6%, shuffle +-3%, scan +-20%.
 _ANCHOR_REF = {
     "anchor_cpu": 0.42,
     "anchor_shuffle": 0.31,
     "anchor_scan": 0.125,
-    # seeded r18 (same idle-host, in-process protocol as the r9 trio):
-    # Arrow-batched mapInPandas with a pure-Python per-row loop — the
-    # Python-WORKER axis the JVM anchors cannot see. Motivated by the
-    # r18 pre-commit probe: the host read cpu 0.88 / shuffle 1.60, and
-    # pack_sequences_bpe (Python-encode-dominated) banded +20% under
-    # the 3-class blend but re-banded to +4% under min-of-5 — the
-    # drift it actually sees lives on this axis.
-    "anchor_python": 0.48,
 }
-
-# --- per-anchor-class correction (VERDICT r16 item 1) ---------------------
-# A single composite env_factor cannot correct a shuffle-only host
-# regression: on the r16 driver host the shuffle anchor read 1.51x REF
-# while cpu read 0.82x, the composite read 1.12x, and 19 code-unchanged
-# queries were manufactured into movers. Each query therefore carries a
-# WEIGHT VECTOR over the three anchor classes; its corrected wall is
-# wall / (w . class_drift). Weights were fitted over the r9-r16 recorded
-# min-walls against the per-round anchor drift ratios (grid search on
-# the 2-simplex minimizing log-residual variance — `tools/anchor_fit.py`
-# reproduces the table), then sanity-checked against each plan's shape:
-# graph_pagerank (six exchange rounds) fits 0.75 shuffle,
-# text_quality_score (scan + map-only scoring) fits 0.80 scan,
-# dedup_incremental_probe (signature hashing + band equi-join) fits
-# 0.50/0.45/0.05 — the fit recovers what the plans say. Entries whose
-# bench shape changed mid-history are fitted on their stable window
-# only (sim_ann_ivf_topk from r11, rmse 0.40 -> 0.095). Entries too new
-# to fit (<4 rounds) are assigned from their plan shape and marked
-# provisional; unknown names fall back to the composite factor.
-# Python shares (final state, r20): anchor_fit fits the 4-class model —
-# pre-r18 rounds constrain the JVM proportions through the same
-# renormalized blend _class_corrected applies, python-anchored rounds
-# identify the python share. The build ends with TWO python-anchored
-# rounds recorded (r18, r19; r20 pending), below the >= 4 criterion, so
-# the provisional r20 fit is RECORDED (SURVEY §25) but NOT promoted:
-# every >= 4-round query fits w_python = 0.00 at n_python = 2 (no
-# python-share evidence either way — two rounds of python drift are
-# absorbable by the JVM classes), and pack_sequences_bpe — the one
-# genuinely Python-dominated headline — has only 2 anchored bench
-# rounds total (r17's anchors died with its truncated record), so its
-# 4-tuple below stays PLAN-SHAPE assigned, provisional, and excluded
-# from any gating. Caveat for a future refit: against a history with
-# JVM-only rounds the fittable python share is censored at 0.95
-# (anchor_fit reports the edge — ADVICE r19 #3).
-_ANCHOR_WEIGHTS: dict[str, tuple[float, float, float]] = {
-    # name: (w_cpu, w_shuffle, w_scan)
-    "agg_pricing_summary": (0.25, 0.55, 0.20),
-    "filter_project_revenue": (0.45, 0.50, 0.05),
-    "join_broadcast_star": (0.15, 0.45, 0.40),
-    "join_theta_range": (0.35, 0.25, 0.40),
-    "agg_distinct_counts": (0.20, 0.40, 0.40),
-    "window_rank_topk_per_group": (0.30, 0.45, 0.25),
-    "window_range_rolling_7d": (0.35, 0.35, 0.30),
-    "sessionize_gap_surface": (0.45, 0.20, 0.35),
-    "q3_shipping_priority": (0.45, 0.40, 0.15),
-    "dedup_exact_union": (0.30, 0.50, 0.20),
-    "dedup_minhash_lsh": (0.45, 0.45, 0.10),
-    "sim_cosine_topk_bruteforce": (0.35, 0.45, 0.20),
-    "sim_ann_lsh_topk": (0.35, 0.65, 0.00),
-    "sim_ann_ivf_topk": (0.00, 0.75, 0.25),  # fitted r11+ (shape change)
-    "text_quality_score": (0.05, 0.15, 0.80),
-    "fn_json_surface": (0.35, 0.35, 0.30),
-    "sim_ann_ivf_fixed_topk": (0.45, 0.40, 0.15),
-    "pack_sequences_offsets": (0.30, 0.55, 0.15),
-    "sim_ann_ivf_q8_serve": (0.40, 0.50, 0.10),
-    "stateful_twin_surface": (0.00, 0.65, 0.35),
-    "graph_pagerank_fixed": (0.15, 0.75, 0.10),
-    "dedup_containment_prefix": (0.40, 0.30, 0.30),
-    "ivf_kmeans_int_train": (0.45, 0.55, 0.00),
-    "dedup_incremental_probe": (0.50, 0.45, 0.05),
-    "sim_incremental_probe": (0.35, 0.45, 0.20),
-    "stream_admission_twin": (0.45, 0.50, 0.05),
-    "curation_pipeline": (0.35, 0.55, 0.10),  # fitted r14+ (shape change)
-    "flagship": (0.25, 0.55, 0.20),
-    # provisional (plan-shape assigned; <4 fitted rounds as of r17):
-    "dedup_exact_substring_spans": (0.60, 0.25, 0.15),  # md5 window pass
-    "dedup_incremental_spans": (0.35, 0.45, 0.20),  # DPP probe join
-    "dedup_semantic_embedding": (0.50, 0.40, 0.10),  # exact-cos compare
-    "stream_ann_admission_twin": (0.40, 0.50, 0.10),  # admission lifecycle
-    # 4-tuple (cpu, shuffle, scan, python): the encode dominates and
-    # lives on the Python-worker axis (r18 — the +20%-banded/-+4%-real
-    # mover that motivated anchor_python)
-    "pack_sequences_bpe": (0.20, 0.20, 0.05, 0.55),
-    "decon_leak_spans": (0.50, 0.35, 0.15),  # window md5 + hash equi-join
-}
-
-_CLASS_TO_ANCHOR = {
-    "cpu": "anchor_cpu",
-    "shuffle": "anchor_shuffle",
-    "scan": "anchor_scan",
-    # r18: the Python-worker axis (Arrow transfer + Python bytecode) —
-    # drifts independently of JVM cpu (a host can JIT fast and fork
-    # Python workers slow). Weight vectors are 3-tuples unless a query
-    # is Python-hot; zip() pads the missing class with weight 0.
-    "python": "anchor_python",
-}
-
-
-def _class_corrected(
-    timings: dict[str, float | None],
-    anchor_walls: dict[str, float],
-    env_factor: float | None,
-) -> tuple[dict[str, float], dict[str, float], dict[str, str]]:
-    """(per-class drift factors, per-query corrected walls, per-query
-    dominant-class tags). A query's corrected wall divides by the
-    weight-blended drift over the anchor classes that actually produced
-    a wall this run (weights renormalized when e.g. the scan anchor is
-    absent at sf != 0.1); unfitted names divide by the composite, and
-    when no correction is derivable at all the RAW wall is recorded
-    (divide by 1.0) so `value_env_corrected_by_class` always sums the
-    same query set as `value` — a varying subset would make the
-    headline class-corrected total non-like-for-like across rounds
-    (ADVICE r17)."""
-    drift = {
-        cls: round(anchor_walls[a] / _ANCHOR_REF[a], 3)
-        for cls, a in _CLASS_TO_ANCHOR.items()
-        if a in anchor_walls
-    }
-    corrected: dict[str, float] = {}
-    classes: dict[str, str] = {}
-    for name, wall in timings.items():
-        if wall is None:
-            continue
-        w = _ANCHOR_WEIGHTS.get(name)
-        if w is not None:
-            order = ("cpu", "shuffle", "scan", "python")
-            avail = [(c, wt) for c, wt in zip(order, w) if c in drift and wt > 0]
-            mass = sum(wt for _, wt in avail)
-            if avail and mass > 0:
-                blended = sum(wt / mass * drift[c] for c, wt in avail)
-                corrected[name] = round(wall / blended, 3)
-                classes[name] = max(avail, key=lambda t: t[1])[0]
-                continue
-        corrected[name] = round(wall / env_factor, 3) if env_factor else wall
-    return drift, corrected, classes
-
-
-def _anchor_python_work(batches):
-    """The python-anchor workload: a pure-Python per-row loop with a
-    dict memo over Arrow batches — the `bpe_token_counts` cost shape
-    (Python bytecode + Arrow transfer), fixed at 4M rows over 8
-    partitions so the measurement is host-drift, never plan drift.
-    (4M rows ~ 0.9s: the 1.5M draft read +-30% run noise.)"""
-    import pandas as pd
-
-    for pdf in batches:
-        cache: dict[int, int] = {}
-        acc = 0
-        for v in pdf["id"]:
-            k = int(v) % 997
-            c = cache.get(k)
-            if c is None:
-                c = cache[k] = (k * 31 + 7) % 101
-            acc += c
-        yield pd.DataFrame({"s": [acc]})
 
 
 def _env_anchor(spark, sf_dir: str, sf: float) -> dict[str, float]:
-    """One anchor BRACKET: each fixed workload warmed once then timed
-    min-of-5. The scan anchor's REF is only meaningful against the
-    sf0.1 fixture, so at any other sf it is skipped and the factor is
-    derived from the data-independent anchors alone (cpu, shuffle,
-    and — since r18 — python). An anchor that throws is simply absent
-    from the returned walls — an anchor failure must never cost the
-    round its query numbers (the r4 lesson; r9 self-review)."""
+    """One anchor bracket: each fixed workload warmed once then timed
+    min-of-5. At any sf other than 0.1 the scan anchor is skipped and
+    the factor comes from the data-independent anchors alone. An anchor
+    that throws is simply absent from the returned walls — an anchor
+    failure must never cost the run its query numbers."""
     anchors = {
         "anchor_cpu": lambda: spark.range(4_000_000_000)
         .selectExpr("sum(id % 7) AS s")
@@ -368,10 +201,6 @@ def _env_anchor(spark, sf_dir: str, sf: float) -> dict[str, float]:
         .groupBy("k")
         .count()
         .selectExpr("sum(count) AS s")
-        .collect(),
-        "anchor_python": lambda: spark.range(4_000_000, numPartitions=8)
-        .mapInPandas(_anchor_python_work, "s long")
-        .selectExpr("sum(s) AS s")
         .collect(),
     }
     if sf == 0.1:
@@ -401,14 +230,11 @@ def _bracket_anchors(
     pre: dict[str, float], post: dict[str, float]
 ) -> tuple[dict[str, float], dict[str, float], float | None]:
     """(effective walls, per-anchor drift, composite env_factor) from
-    the two brackets (r20, VERDICT r19 item 1). Effective wall = the
-    per-anchor MIN of the brackets — min-of-10 across the suite, and
-    comparable to the REF values (calibrated post-warmup: min favors
-    the warmed reading). Drift = post/pre, the recorded bound on how
-    much the host moved UNDER the suite; a drift far from 1.0 says the
-    corrected walls of that class carry that much anchor uncertainty.
-    An anchor present in only one bracket contributes its single wall
-    and reports no drift."""
+    the two brackets. Effective wall = the per-anchor MIN of the
+    brackets (comparable to the post-warmup reference values). Drift =
+    post/pre, the bound on how much the host moved under the suite. An
+    anchor present in only one bracket contributes its single wall and
+    reports no drift."""
     walls = {
         k: min(v for v in (pre.get(k), post.get(k)) if v is not None)
         for k in {*pre, *post}
@@ -425,6 +251,41 @@ def _bracket_anchors(
     return walls, drift, round(geomean ** (1 / len(ratios)), 3)
 
 
+def final_record(
+    timings: dict[str, float | None],
+    errors: dict[str, str],
+    sf: float,
+    anchor_pre: dict[str, float],
+    anchor_post: dict[str, float],
+) -> dict:
+    """The final JSON line: raw walls and total, the bracketed anchors
+    and the env_factor-corrected total. Without any anchor wall there
+    is no factor and the corrected total is the raw one.
+    `value_env_corrected_by_class` repeats `value_env_corrected`; the
+    key stays because the line's key set is part of the contract."""
+    anchor_walls, anchor_drift, env_factor = _bracket_anchors(
+        anchor_pre, anchor_post
+    )
+    total = round(sum(v for v in timings.values() if v is not None), 3)
+    corrected = round(total / env_factor, 3) if env_factor else total
+    out = {
+        "metric": "headline_queries_wall_total",
+        "value": total,
+        "unit": "sec",
+        "queries": timings,
+        "sf": sf,
+        "env_anchor": anchor_walls,
+        "env_anchor_drift": anchor_drift,
+        "env_factor": env_factor,
+        "value_env_corrected": corrected,
+        "value_env_corrected_by_class": corrected,
+    }
+    if errors:
+        out["errors"] = errors
+        out["failed_count"] = len(errors)
+    return out
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
@@ -437,9 +298,8 @@ def main() -> None:
     errors: dict[str, str] = {}
 
     def run(name: str) -> float | None:
-        # One broken query must not kill the whole bench (the r4 lesson:
-        # a warmup-pass AnalysisException shipped zero numbers). Record
-        # the error once, report None for the timing, keep going.
+        # One broken query must not kill the whole bench: record the
+        # error once, report None for the timing, keep going.
         if name in errors:
             return None
         # KeyError on a stale HEADLINE entry = fail loudly, never mislabel
@@ -460,21 +320,15 @@ def main() -> None:
     all_names = [*HEADLINE, "curation_pipeline", "flagship"]
     for name in all_names:  # warmup pass: JIT/codegen/read-path, unmeasured
         run(name)
-    # PRE bracket (r20): anchors measured min-of-5 after query warmup
-    # (the REF-comparable JIT state) but BEFORE the timed passes — so
-    # the suite is bracketed and single-shot anchor mismeasurement is
-    # bounded by the recorded pre/post drift instead of silently
-    # rescaling the round's corrected walls (the r18->r19 swing).
+    # The pre bracket runs after the query warmup (the reference-
+    # comparable JIT state) and before the timed passes, so the suite
+    # is bracketed and a single mismeasured anchor shows up as drift.
     try:
         anchor_pre = _env_anchor(spark, sf_dir, sf)
     except Exception:  # noqa: BLE001 — anchors must never kill the bench
         anchor_pre = {}
-    # THREE timed passes for every query (r9; r3 added min-of-2, r7 a
-    # third pass for sub-second queries only): same-code r9 runs showed
-    # min-of-2 leaving a ~20% band on multi-second queries too
-    # (graph_pagerank_fixed 3.9 <-> 4.8s), which reads as regression
-    # noise across rounds. The extra full pass costs ~35s against the
-    # driver's 550s budget and halves the per-query noise band.
+    # Three timed passes for every query: min-of-2 left a ~20% band on
+    # multi-second queries (graph_pagerank_fixed 3.9 <-> 4.8s).
     passes = [
         {name: run(name) for name in all_names},
         {name: run(name) for name in all_names},
@@ -482,7 +336,7 @@ def main() -> None:
     ]
     # A name in `errors` reports None even if one pass succeeded: a
     # timing and an error for the same query would contradict each other
-    # in the artifact (ADVICE r5). Errors alone carry the failure.
+    # in the artifact. Errors alone carry the failure.
     timings: dict[str, float | None] = {
         name: (
             min(ts)
@@ -497,71 +351,7 @@ def main() -> None:
         anchor_post = _env_anchor(spark, sf_dir, sf)
     except Exception:  # noqa: BLE001 — belt over _env_anchor's own braces
         anchor_post = {}
-    anchor_walls, anchor_drift, env_factor = _bracket_anchors(
-        anchor_pre, anchor_post
-    )
-
-    ok = {k: v for k, v in timings.items() if v is not None}
-    total = round(sum(ok.values()), 3)
-    drift_by_class, corrected_q, class_tags = _class_corrected(
-        timings, anchor_walls, env_factor
-    )
-    # Two-line output protocol (VERDICT r17 item 1): the r17 single line
-    # grew past the driver's 2,000-char capture window when the per-class
-    # fields landed, so BENCH_r17.json recorded `parsed: null`. The
-    # per-class DETAIL now goes on a PRECEDING line (and a sidecar file
-    # next to this script, for humans and bench_trend), and the FINAL
-    # printed line is the compact r16-schema object the driver's parser
-    # has consumed since r9 — plus the one scalar class-corrected total.
-    detail = {
-        "metric": "headline_queries_class_detail",
-        # r17: per-anchor-class correction (VERDICT r16 item 1). The
-        # class-corrected numbers are the ones to adjudicate movers
-        # with — a shuffle-only host regression lands on the shuffle-
-        # weighted queries and nowhere else.
-        "env_factor_by_class": drift_by_class,
-        "query_anchor_class": class_tags,
-        "queries_env_corrected": corrected_q,
-        # r20: the raw brackets behind the final line's effective
-        # (min) anchors — pre runs after query warmup, post after the
-        # timed passes; both are min-of-5 per anchor.
-        "env_anchor_pre": anchor_pre,
-        "env_anchor_post": anchor_post,
-    }
-    out = {
-        "metric": "headline_queries_wall_total",
-        "value": total,
-        "unit": "sec",
-        "queries": timings,
-        "sf": sf,
-        # env_factor ~1.0 on the r9 reference host; divide the total (or
-        # any per-query wall) by it to compare across rounds net of
-        # sandbox drift. value_env_corrected is that division, recorded.
-        # Since r20 env_anchor is the per-anchor MIN of the pre/post
-        # brackets (raw brackets on the detail line / sidecar) and
-        # env_anchor_drift records post/pre — the bound on anchor
-        # trustworthiness this round.
-        "env_anchor": anchor_walls,
-        "env_anchor_drift": anchor_drift,
-        "env_factor": env_factor,
-        "value_env_corrected": (
-            round(total / env_factor, 3) if env_factor else total
-        ),
-        "value_env_corrected_by_class": round(sum(corrected_q.values()), 3),
-    }
-    if errors:
-        out["errors"] = errors
-        out["failed_count"] = len(errors)
-    try:
-        sidecar = os.path.join(
-            os.path.dirname(os.path.abspath(__file__)), "BENCH_CLASS_DETAIL.json"
-        )
-        with open(sidecar, "w") as f:
-            json.dump({**detail, **out}, f, indent=1)
-    except OSError:
-        pass  # the sidecar is a convenience; stdout carries the record
-    print(json.dumps(detail))
-    print(json.dumps(out))
+    print(json.dumps(final_record(timings, errors, sf, anchor_pre, anchor_post)))
     spark.stop()
 
 

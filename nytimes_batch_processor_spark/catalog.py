@@ -102,49 +102,6 @@ def _load_all_modules() -> None:
 # rotation treadmill (capacity cap WINDOW * (MAX_AGE + 1) = 150).
 
 _CHANGED_BY_ROUND: dict[int, tuple[str, ...]] = {
-    # r20: spread_for_python's no-files classifier moved from a regex
-    # over the plan's string render to a structural node-name walk
-    # (ADVICE r19 #1) — the file-rooted production path the driver
-    # SFs exercise is untouched, but the r4 lesson is unconditional:
-    # every entry routed through the changed function re-enters.
-    20: (
-        "pack_sequences_bpe",
-        "mm_binary_metadata",
-        "mm_resize_thumbs",
-        "mm_frame_sample",
-        "mm_decode_features",
-        # r20 optimization round — the single-partition-scan fan-out
-        # class (guide §2.5): every entry routed through a function
-        # that gained a conditional spread re-enters (the r4 lesson).
-        # Values are identical on every path (map-only consumers);
-        # the spread only moves partitioning.
-        "stream_admission_twin",  # admit_minhash_batch spread
-        "curate_admission_twin",  # curate pipeline -> admission
-        "curate_perplexity_twin",
-        "stream_pplx_curation_twin",
-        "dedup_incremental_probe",  # sign-wide + pinned signatures
-        "dedup_resolve_surface",  # minhash sig F.expr + spread (lsh)
-        "stream_ann_admission_twin",  # probe cells pinned in checkpoint
-        # CAPACITY EXCEPTIONS (r20, documented in OPTIMIZATION_r20.md):
-        # two entries also route through r20-changed functions but
-        # listing them pushed forced entries past the 50-slot WINDOW.
-        # Both are oracle-green at sf0.01 via tools/quick_verify.py
-        # and the full pytest parity sweep, both are r19-green so the
-        # MAX_AGE=2 bound forces them into the r21 window regardless,
-        # and each one's changed subplan is exercised THIS round by an
-        # in-window sibling sharing the exact changed function:
-        # - curate_model_twin (admission spread): covered by
-        #   curate_admission_twin + curate_perplexity_twin — the model
-        #   stage itself is untouched;
-        # - dedup_shingle_containment (shingle_arrays tokenize-only
-        #   filter): covered by dedup_containment_prefix, which is in
-        #   the window by age and shares shingle_arrays verbatim.
-        # already forced by age this round (listed for the record):
-        "dedup_exact_substring_spans",
-        "dedup_incremental_spans",
-        "decon_leak_spans",
-        "decon_train_test_overlap",
-    ),
     # r21 entries accumulate here as code changes this round (the r19
     # block expired when CORRECTNESS_r19.json's successor r20 landed —
     # all 50 sweep rows green, so nothing carries over).

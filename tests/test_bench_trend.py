@@ -17,45 +17,6 @@ sys.path.insert(
 from bench_trend import trend_lines  # noqa: E402
 
 
-def test_sidecar_merge_requires_value_stamp(tmp_path, monkeypatch):
-    """ADVICE r18 #3: the BENCH_CLASS_DETAIL sidecar must attach only
-    to the round whose final-line raw total it carries — name-set + sf
-    alone silently merged a PREVIOUS round's class-corrected walls into
-    a newer round (consecutive rounds usually share the catalog) when
-    the newer bench run failed to rewrite the sidecar."""
-    import json
-
-    import bench_trend
-
-    monkeypatch.setattr(bench_trend, "REPO", str(tmp_path))
-    q1 = {"a": 1.0, "b": 2.0}
-    q2 = {"a": 1.2, "b": 2.2}  # same query set, different walls
-    (tmp_path / "BENCH_r01.json").write_text(
-        json.dumps({"parsed": {"value": 3.0, "sf": 0.1, "queries": q1}})
-    )
-    (tmp_path / "BENCH_r02.json").write_text(
-        json.dumps({"parsed": {"value": 3.4, "sf": 0.1, "queries": q2}})
-    )
-    # the sidecar was written by r01's run (value stamp 3.0); r02's run
-    # failed to rewrite it — the bug shape merged it into r02 anyway
-    side = {
-        "queries": q1,
-        "sf": 0.1,
-        "value": 3.0,
-        "queries_env_corrected": {"a": 0.9, "b": 1.8},
-    }
-    (tmp_path / "BENCH_CLASS_DETAIL.json").write_text(json.dumps(side))
-    rounds = dict(bench_trend.load_rounds())
-    assert rounds[1]["queries_env_corrected"] == {"a": 0.9, "b": 1.8}
-    assert "queries_env_corrected" not in rounds[2]
-    # a sidecar matching NO round's value stamp is ignored entirely
-    side["value"] = 99.9
-    (tmp_path / "BENCH_CLASS_DETAIL.json").write_text(json.dumps(side))
-    rounds = dict(bench_trend.load_rounds())
-    assert "queries_env_corrected" not in rounds[1]
-    assert "queries_env_corrected" not in rounds[2]
-
-
 def _parsed(queries: dict, env: float | None = None) -> dict:
     out = {"value": round(sum(queries.values()), 3), "sf": 0.1, "queries": queries}
     if env is not None:
@@ -155,156 +116,6 @@ def test_recovered_round_row_carries_only_corrected_walls():
     assert lines[2]["vs_prev"]["shared_class_corrected_ratio"] == 3.0
 
 
-def test_anchor_fit_recovers_python_share_via_renormalization():
-    """r19 (VERDICT r18 item 4 groundwork): the 4-class fit must use
-    pre-r18 rounds (no anchor_python) through the SAME renormalized
-    blend bench._class_corrected applies — those rounds pin the JVM
-    proportions, python-anchored rounds identify the python share. A
-    synthetic half-cpu/half-python query over 4 JVM-only + 2
-    python-anchored rounds recovers (0.5, 0, 0, 0.5) exactly."""
-    from anchor_fit import fit
-
-    base = 2.0
-    jvm_drifts = [
-        {"cpu": 1.0, "shuffle": 1.0, "scan": 1.0},
-        {"cpu": 1.2, "shuffle": 0.8, "scan": 1.0},
-        {"cpu": 0.9, "shuffle": 1.5, "scan": 1.1},
-        {"cpu": 1.1, "shuffle": 1.0, "scan": 0.7},
-    ]
-    py_drifts = [
-        {"cpu": 1.0, "shuffle": 1.0, "scan": 1.0, "python": 2.0},
-        {"cpu": 0.8, "shuffle": 1.2, "scan": 1.0, "python": 0.6},
-    ]
-    rounds = {}
-    for i, d in enumerate(jvm_drifts + py_drifts, start=1):
-        # true weights (0.5 cpu, 0.5 python), renormalized over the
-        # classes the round measured — JVM-only rounds blend to d_cpu
-        if "python" in d:
-            blend = 0.5 * d["cpu"] + 0.5 * d["python"]
-        else:
-            blend = d["cpu"]
-        rounds[i] = ({"p": base * blend}, d)
-    got = fit("p", rounds)
-    assert got is not None
-    w, fit_base, rmse, n, n_py, at_edge = got
-    assert w == (0.5, 0.0, 0.0, 0.5), w
-    assert abs(fit_base - base) < 1e-9
-    assert rmse < 1e-9
-    assert (n, n_py) == (6, 2)
-    assert at_edge is False  # 0.5 is interior, not censored
-
-
-def test_anchor_fit_flags_python_share_at_reachable_edge():
-    """ADVICE r19 #3: a pure-python candidate has zero blendable mass
-    for JVM-only rounds and is discarded, so against mixed history a
-    genuinely python-dominated query saturates at w_python = 0.95 —
-    the fit must FLAG that edge so the saturated value reads as
-    censored-by-history, never as a measured share. With an all-python
-    history the full simplex is reachable and the flag stays off."""
-    from anchor_fit import fit
-
-    base = 2.0
-    # truth: pure-python. JVM drifts pinned at 1.0 everywhere so no
-    # JVM mass can reduce residual variance — the ONLY fit pressure is
-    # toward the python corner, which mixed history makes unreachable.
-    jvm_drifts = [
-        {"cpu": 1.0, "shuffle": 1.0, "scan": 1.0},
-        {"cpu": 1.0, "shuffle": 1.0, "scan": 1.0},
-    ]
-    py_drifts = [
-        {"cpu": 1.0, "shuffle": 1.0, "scan": 1.0, "python": 2.0},
-        {"cpu": 1.0, "shuffle": 1.0, "scan": 1.0, "python": 0.5},
-        {"cpu": 1.0, "shuffle": 1.0, "scan": 1.0, "python": 1.5},
-    ]
-    rounds = {}
-    for i, d in enumerate(jvm_drifts + py_drifts, start=1):
-        rounds[i] = ({"p": base * d.get("python", 1.0)}, d)
-    w, _, _, n, n_py, at_edge = fit("p", rounds)
-    assert (n, n_py) == (5, 3)
-    assert w[3] == 0.95, w  # capped one grid step inside the corner
-    assert at_edge is True
-
-    # all-python history: the corner is reachable, no censoring flag
-    rounds_all = {
-        i: ({"p": base * d["python"]}, d) for i, d in enumerate(py_drifts, 1)
-    }
-    rounds_all[4] = (
-        {"p": base * 1.0},
-        {"cpu": 0.6, "shuffle": 1.2, "scan": 1.3, "python": 1.0},
-    )
-    w2, _, _, _, n_py2, at_edge2 = fit("p", rounds_all)
-    assert n_py2 == 4
-    assert w2[3] == 1.0, w2
-    assert at_edge2 is False
-
-
-def test_bench_anchor_weights_cover_all_headline_queries():
-    """Every headline query (plus the two bench-only wrappers) carries a
-    weight vector summing to 1; a name added to HEADLINE without one
-    silently falls back to the composite factor — fail here instead."""
-    sys.path.insert(
-        0, os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    )
-    from bench import _ANCHOR_WEIGHTS, HEADLINE, _class_corrected
-
-    for name in [*HEADLINE, "curation_pipeline", "flagship"]:
-        w = _ANCHOR_WEIGHTS.get(name)
-        assert w is not None, f"{name} missing from _ANCHOR_WEIGHTS"
-        assert abs(sum(w) - 1.0) < 1e-9, (name, w)
-
-    # arithmetic: a pure-shuffle query corrects by the shuffle drift
-    # alone; an unfitted name falls back to the composite factor
-    anchors = {"anchor_cpu": 0.42, "anchor_shuffle": 0.62, "anchor_scan": 0.125}
-    drift, corrected, classes = _class_corrected(
-        {"sim_ann_lsh_topk": 2.0, "not_a_query": 2.0},
-        anchors,
-        env_factor=1.26,
-    )
-    assert drift == {"cpu": 1.0, "shuffle": 2.0, "scan": 1.0}
-    # w = (0.35, 0.65, 0.0) -> blended = 0.35*1 + 0.65*2 = 1.65
-    assert corrected["sim_ann_lsh_topk"] == round(2.0 / 1.65, 3)
-    assert classes["sim_ann_lsh_topk"] == "shuffle"
-    assert corrected["not_a_query"] == round(2.0 / 1.26, 3)
-
-    # missing scan anchor (sf != 0.1): weights renormalize over the
-    # available classes instead of silently dropping mass
-    drift2, corrected2, _ = _class_corrected(
-        {"join_theta_range": 1.0},
-        {"anchor_cpu": 0.42, "anchor_shuffle": 0.31},
-        env_factor=1.0,
-    )
-    assert "scan" not in drift2
-    assert corrected2["join_theta_range"] == 1.0  # both drifts 1.0
-
-    # r18: the python anchor class — a Python-worker-only slowdown
-    # corrects the Python-hot query and leaves a JVM-only query alone
-    from bench import _ANCHOR_REF
-
-    drift3, corrected3, classes3 = _class_corrected(
-        {"pack_sequences_bpe": 3.0, "agg_pricing_summary": 1.0},
-        {
-            "anchor_cpu": 0.42,
-            "anchor_shuffle": 0.31,
-            "anchor_scan": 0.125,
-            "anchor_python": _ANCHOR_REF["anchor_python"] * 2,  # 2x REF
-        },
-        env_factor=1.0,
-    )
-    assert drift3["python"] == 2.0
-    # (0.20, 0.20, 0.05, 0.55) -> blended = 0.45*1 + 0.55*2 = 1.55
-    assert corrected3["pack_sequences_bpe"] == round(3.0 / 1.55, 3)
-    assert classes3["pack_sequences_bpe"] == "python"
-    assert corrected3["agg_pricing_summary"] == 1.0  # no python weight
-
-    # ADVICE r17 #5 (closed r18): with NO anchors and NO env_factor the
-    # corrected dict still covers every timed query (raw walls, /1.0)
-    # so the class-corrected total stays like-for-like across rounds
-    _, corrected4, _ = _class_corrected(
-        {"agg_pricing_summary": 1.3, "not_a_query": 0.7}, {}, env_factor=None
-    )
-    assert corrected4 == {"agg_pricing_summary": 1.3, "not_a_query": 0.7}
-
-
 def test_bracketed_anchor_effective_min_and_drift():
     """r20 (VERDICT r19 item 1): the effective anchor wall is the
     per-anchor MIN of the pre/post brackets (REF-comparable: min
@@ -316,19 +127,20 @@ def test_bracketed_anchor_effective_min_and_drift():
     )
     from bench import _ANCHOR_REF, _bracket_anchors
 
-    pre = {"anchor_cpu": 0.50, "anchor_shuffle": 0.31, "anchor_python": 0.48}
-    post = {"anchor_cpu": 0.42, "anchor_shuffle": 0.62, "anchor_scan": 0.125}
+    pre = {"anchor_cpu": 0.50, "anchor_shuffle": 0.31}
+    post = {"anchor_cpu": 0.42, "anchor_scan": 0.125}
     walls, drift, env = _bracket_anchors(pre, post)
     assert walls == {
         "anchor_cpu": 0.42,      # min(0.50, 0.42)
-        "anchor_shuffle": 0.31,  # min(0.31, 0.62)
-        "anchor_python": 0.48,   # pre only
+        "anchor_shuffle": 0.31,  # pre only
         "anchor_scan": 0.125,    # post only
     }
-    assert drift == {"anchor_cpu": 0.84, "anchor_shuffle": 2.0}
+    assert drift == {"anchor_cpu": 0.84}
     # all effective walls equal REF -> geomean exactly 1.0
     assert all(walls[k] == _ANCHOR_REF[k] for k in walls)
     assert env == 1.0
+    # swapped brackets: the min now comes from pre, drift inverts
+    assert _bracket_anchors(post, pre) == (walls, {"anchor_cpu": 1.19}, 1.0)
 
     # a failed bracket degrades to the other bracket alone, no drift
     walls2, drift2, env2 = _bracket_anchors({}, post)

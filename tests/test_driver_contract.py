@@ -122,3 +122,55 @@ def test_entry_flagship_schema_is_pinned(spark):
         ("day_revenue", "double"),
         ("avg_7d", "double"),
     ], got
+
+
+FINAL_LINE_KEYS = {
+    "metric",
+    "value",
+    "unit",
+    "queries",
+    "sf",
+    "env_anchor",
+    "env_anchor_drift",
+    "env_factor",
+    "value_env_corrected",
+    "value_env_corrected_by_class",
+}
+
+
+def test_bench_final_line_key_set_is_pinned():
+    """The keys of bench.py's final JSON line are a driver contract:
+    pin the exact set with and without anchors, and with and without
+    failed queries (which add only `errors` and `failed_count`)."""
+    import json
+    import os
+    import sys
+
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+    from bench import _ANCHOR_REF, final_record
+
+    timings = {"agg_pricing_summary": 1.25, "flagship": 0.75}
+    anchors = {k: 2 * v for k, v in _ANCHOR_REF.items()}  # host 2x slower
+    out = final_record(timings, {}, 0.1, anchors, anchors)
+    assert set(out) == FINAL_LINE_KEYS
+    assert out["metric"] == "headline_queries_wall_total"
+    assert out["unit"] == "sec"
+    assert out["value"] == 2.0
+    assert out["env_anchor"] == anchors
+    assert out["env_anchor_drift"] == {k: 1.0 for k in anchors}
+    assert out["env_factor"] == 2.0
+    assert out["value_env_corrected"] == 1.0
+    assert out["value_env_corrected_by_class"] == out["value_env_corrected"]
+    json.dumps(out)  # the line must serialize
+
+    # no anchor in either bracket: no factor, corrected == raw
+    failed = {"agg_pricing_summary": None, "flagship": 0.75}
+    errors = {"agg_pricing_summary": "AnalysisException: boom"}
+    out = final_record(failed, errors, 0.01, {}, {})
+    assert set(out) == FINAL_LINE_KEYS | {"errors", "failed_count"}
+    assert out["env_factor"] is None
+    assert out["value"] == 0.75
+    assert out["value_env_corrected"] == out["value"]
+    assert out["value_env_corrected_by_class"] == out["value_env_corrected"]
+    assert out["errors"] == errors and out["failed_count"] == 1
+    assert out["queries"]["agg_pricing_summary"] is None

@@ -190,30 +190,3 @@ def test_stale_overrides_cannot_accumulate():
         "recorded; delete the expired _CHANGED_BY_ROUND / "
         "_ROWS_ONLY_FORCE_BY_ROUND entries in catalog.py"
     )
-
-
-def test_r20_capacity_exceptions_enter_the_r21_window():
-    """ADVICE r20 #2: the two r20 capacity exceptions
-    (curate_model_twin, dedup_shingle_containment — entries routed
-    through r20-changed functions but left out of the r20 sweep when
-    the forced set hit the 50-slot cap) must be swept in the very next
-    round; the exception may not silently roll forward. The r20 record
-    argued MAX_AGE would force them, but with both last green in r19
-    the age gate does NOT fire for an r21 window (19 > 21 - MAX_AGE),
-    and the EDF fill's registration-order tie-break passes them over —
-    so catalog.py pins them via _CHANGED_BY_ROUND[21], and this test
-    turns that obligation from a comment into a gate. The assertion is
-    conditional on the upcoming round being 21 so it expires with the
-    r21 sweep recording instead of going stale (the
-    test_stale_overrides_cannot_accumulate discipline)."""
-    from nytimes_batch_processor_spark.catalog import all_specs
-
-    latest, _ = _correctness_history()
-    if latest != 20:  # the obligation is specific to the r21 window
-        return
-    window = list(all_specs())[:WINDOW]
-    for name in ("curate_model_twin", "dedup_shingle_containment"):
-        assert name in window, (
-            f"{name} was excused from the r20 sweep on the promise of an "
-            "unconditional r21 re-entry; pin it in _CHANGED_BY_ROUND[21]"
-        )

@@ -64,33 +64,6 @@ def load_rounds() -> list[tuple[int, dict]]:
             if parsed is None:
                 continue  # a crashed bench run recorded no parsable line
         rounds.append((int(m.group(1)), parsed))
-    # r18+: per-query class-corrected walls live on the detail line /
-    # sidecar, not the compact final line the driver parses. Merge the
-    # sidecar into the round it belongs to — identified by the final
-    # line's raw-total `value` (bench.py writes the same float to both
-    # the sidecar and the compact record, so equality is exact — ADVICE
-    # r18 #3: name-set + sf alone silently attached a previous round's
-    # sidecar to a newer round whose own bench run failed to rewrite
-    # it), plus the query-name-set and sf as structural sanity. A stale
-    # sidecar from any other run simply matches no round and is ignored.
-    rounds.sort()
-    side_path = os.path.join(REPO, "BENCH_CLASS_DETAIL.json")
-    if os.path.exists(side_path):
-        with open(side_path) as f:
-            side = json.load(f)
-        for _, parsed in reversed(rounds):  # latest matching round only —
-            # the sidecar is overwritten per run, so it describes at most
-            # the most recent round sharing its identity
-            if (
-                "queries" in parsed
-                and set(parsed["queries"]) == set(side.get("queries", {}))
-                and parsed.get("sf") == side.get("sf")
-                and parsed.get("value") == side.get("value")
-                and parsed.get("value") is not None
-                and "queries_env_corrected" not in parsed
-            ):
-                parsed["queries_env_corrected"] = side["queries_env_corrected"]
-                break
     # sort by the ROUND NUMBER, never the filename: an unpadded
     # 'BENCH_r7.json' or a 3-digit round would otherwise misorder the
     # vs_prev chain silently
@@ -99,9 +72,9 @@ def load_rounds() -> list[tuple[int, dict]]:
 
 def corrected_walls(parsed: dict) -> dict | None:
     """Best-available drift-corrected per-query walls for one round:
-    the per-class-corrected dict when the round recorded one (r17+, via
-    tail recovery or the detail sidecar), else raw walls divided by the
-    round's composite env_factor (r9–r16), else None (pre-r9)."""
+    the per-class-corrected dict when the round recorded one (r17, via
+    tail recovery), else raw walls divided by the round's composite
+    env_factor (r9–r16, r18+), else None (pre-r9)."""
     cc = parsed.get("queries_env_corrected")
     if cc:
         return cc
