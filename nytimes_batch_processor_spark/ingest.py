@@ -17,11 +17,13 @@ Semantics preserved:
   always win).
 - O3/O4 idempotent re-run: ingesting the same file twice is a no-op.
 
-Scale notes: the target is partitioned by date — re-ingests prune to the
-incremental date range; the anti-join shuffles only new keys (existing
-side is scanned with partition pruning when a date predicate is pushed).
-At 100 TB the anti-join right side should be the last N days' partitions,
-not the full table.
+Scale notes: the target is partitioned by date, but the anti-join in
+`upsert_append` reads every key of it: no date predicate is pushed, so
+no partition is pruned and a re-ingest costs in proportion to the table,
+not to the batch. Each ingest call lists the target once and returns
+nothing; a caller that needs the table reads it. Open: at 100 TB the
+anti-join right side should be the last N days' partitions, not the
+full table.
 """
 
 from __future__ import annotations
@@ -332,10 +334,15 @@ def upsert_append(new_rows: DataFrame, target_path: str, keys: list[str]) -> Non
     never by swallowing read errors: a transient failure reading an
     EXISTING target must propagate, not silently disable dedup and
     append duplicates (the one corruption the reference's ON CONFLICT
-    could never produce)."""
+    could never produce).
+
+    The existing side is read with ``new_rows``' schema, so the read
+    lists the target's directories and infers nothing from a footer. A
+    corrupt target therefore raises when the scan reaches it, while the
+    append runs, and nothing is committed."""
     spark = new_rows.sparkSession
     if target_exists(spark, target_path):
-        existing = spark.read.parquet(target_path).select(*keys)
+        existing = spark.read.schema(new_rows.schema).parquet(target_path).select(*keys)
         to_insert = new_rows.join(existing, on=keys, how="left_anti")
     else:
         to_insert = new_rows
@@ -349,9 +356,12 @@ def ingest_covid_csv(
     *,
     has_county: bool,
     metrics_out: dict | None = None,
-) -> DataFrame:
+) -> None:
     """EP1/EP2 collapsed into one declarative pipeline: scan -> type ->
     sentinel -> in-batch dedup -> cross-batch anti-join append.
+
+    Returns ``None``: the call is a command, like the reference's job.
+    A caller that needs the table reads ``target_path`` itself.
 
     Pass ``metrics_out={}`` to collect batch data-quality counters via
     ``df.observe`` — row count, sentinel'd null-fips count, null-date
@@ -391,7 +401,6 @@ def ingest_covid_csv(
     upsert_append(deduped, target_path, keys)
     if obs is not None:
         metrics_out.update(obs.get)
-    return spark.read.parquet(target_path)
 
 
 def derive_states_fixture(orders: DataFrame) -> DataFrame:
@@ -467,8 +476,8 @@ def ingest_covid_states(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     target = os.path.join(workdir, "covid_states")
     ingest_covid_csv(spark, csv_path, target, has_county=False)
-    out = ingest_covid_csv(spark, csv_path, target, has_county=False)
-    return out.select(
+    ingest_covid_csv(spark, csv_path, target, has_county=False)
+    return spark.read.parquet(target).select(
         F.col("date").cast("date").alias("date"),
         "state",
         F.col("fips").cast("int").alias("fips"),
@@ -503,7 +512,7 @@ def ingest_covid_csv_audited(
     *,
     batch_id: int,
     has_county: bool,
-) -> DataFrame:
+) -> None:
     """The ingest chain with LINEAGE/AUDIT columns (O3 made queryable —
     VERDICT r9 item 4b): every row written to the target carries
 
@@ -523,6 +532,7 @@ def ingest_covid_csv_audited(
     columns are scan-time literals/metadata — no extra shuffle, no
     second pass; a delete of "everything batch N wrote" is then
     ``delete_rows_partition_scoped(..., F.col('batch_id') == N)``.
+    Returns ``None``, like ``ingest_covid_csv``.
     """
     schema = schemas.COVID_COUNTIES_CSV if has_county else schemas.COVID_STATES_CSV
     keys = schemas.COVID_COUNTIES_KEYS if has_county else schemas.COVID_STATES_KEYS
@@ -540,7 +550,6 @@ def ingest_covid_csv_audited(
     )
     deduped = first_write_wins(typed, keys, "_arrival").drop("_arrival")
     upsert_append(deduped, target_path, keys)
-    return spark.read.parquet(target_path)
 
 
 _HIGH_STATES = ("1-URGENT", "2-HIGH")
@@ -632,7 +641,8 @@ def ingest_rollback_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale notes: the delete rewrites only the partitions batch 2's
     rows live in; the replay's anti-join re-inserts exactly the
-    re-delivered rows (cost ∝ those rows, not the table); landing-zone
+    re-delivered rows (writes ∝ those rows; the anti-join still scans
+    every key of the table, see `upsert_append`); landing-zone
     retention supplies the replay sources (`rollback_interior_batch`
     docstring)."""
     target, sources = _three_batch_audited_fixture(spark, sf_dir, "ingest_replay_")
@@ -747,7 +757,8 @@ def rollback_interior_batch(
        order from its ORIGINAL source files with its ORIGINAL batch
        id: the upsert's anti-join re-inserts ONLY the rows the delete
        removed that the later batch re-delivered, now attributed to
-       that batch — replay cost ∝ re-delivered rows, not table size.
+       that batch — replay writes ∝ re-delivered rows (its anti-join
+       still scans every key of the target, like every ingest).
 
     First-write-wins makes the outcome exact, case by case: rows only
     batch N-1 introduced are gone (nothing re-delivers them — and if a

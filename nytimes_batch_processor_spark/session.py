@@ -56,7 +56,12 @@ def get_spark(
     single JVM with ``cpus`` executor threads; shuffle partitions match
     the core count (not Spark's default 200 — at local scale 200 tiny
     partitions is pure scheduling overhead, and on a real cluster this
-    knob is set per deployment).
+    knob is set per deployment). For the same reason a distributed file
+    listing (a read of a table with more than 32 partition directories)
+    runs one task per core, not one task per directory: it stays a job,
+    so it still scales to thousands of directories on an object store.
+    The cores are the running context's, which is ``cpus`` for a session
+    this call builds; a session fetched by a later call keeps its master.
     """
     from .config import EngineConfig
 
@@ -79,5 +84,9 @@ def get_spark(
     for key, value in (extra_confs or {}).items():
         builder = builder.config(key, value)
     spark = builder.getOrCreate()
+    spark.conf.set(
+        "spark.sql.sources.parallelPartitionDiscovery.parallelism",
+        str(spark.sparkContext.defaultParallelism),
+    )
     spark.sparkContext.setLogLevel("WARN")
     return ensure_runtime_confs(spark)

@@ -15,7 +15,9 @@ updates (first write wins). Here that becomes:
 
 Scale notes: file-source listing is incremental (checkpointed); state
 stores for windows/dedup are bounded by the watermark horizon; the
-foreachBatch upsert prunes the target by partition before anti-joining.
+foreachBatch upsert is `ingest.upsert_append`, whose anti-join scans
+every key of the target per micro-batch (no partition is pruned; a
+last-N-days bound is an open item there).
 """
 
 from __future__ import annotations

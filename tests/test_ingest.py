@@ -41,7 +41,8 @@ def test_ingest_first_write_wins_and_idempotent(spark, tmp_path, staging):
     target = str(tmp_path / "covid_states")
     src1 = _write(staging, "day1.csv", STATES_CSV)
 
-    out1 = ingest_covid_csv(spark, src1, target, has_county=False)
+    ingest_covid_csv(spark, src1, target, has_county=False)
+    out1 = spark.read.parquet(target)
     rows = {(str(r["date"]), r["state"], r["fips"]): (r["cases"], r["deaths"]) for r in out1.collect()}
     # in-batch duplicate key (2020-01-22, Washington, 53): first row wins
     assert rows[("2020-01-22", "Washington", 53)] == (2, 0)
@@ -50,12 +51,13 @@ def test_ingest_first_write_wins_and_idempotent(spark, tmp_path, staging):
     assert len(rows) == 4
 
     # re-run same input: no growth (O3/O4 idempotency)
-    out2 = ingest_covid_csv(spark, src1, target, has_county=False)
-    assert out2.count() == 4
+    ingest_covid_csv(spark, src1, target, has_county=False)
+    assert spark.read.parquet(target).count() == 4
 
     # day-2 drop: existing keys kept (DO NOTHING), new keys appended
     src2 = _write(staging, "day2.csv", STATES_CSV_DAY2)
-    out3 = ingest_covid_csv(spark, src2, target, has_county=False)
+    ingest_covid_csv(spark, src2, target, has_county=False)
+    out3 = spark.read.parquet(target)
     rows3 = {(str(r["date"]), r["state"], r["fips"]): (r["cases"], r["deaths"]) for r in out3.collect()}
     assert rows3[("2020-01-22", "Washington", 53)] == (2, 0)  # not 777
     assert rows3[("2020-12-31", "Guam", -1)] == (100, 2)  # not 777
@@ -105,6 +107,86 @@ def test_upsert_read_failure_does_not_double_insert(spark, tmp_path, staging):
     assert {p.name for p in target.iterdir()} == {"part-00000.parquet"}
 
 
+def _data_files(root):
+    """Relative paths of every committed data file and ``_SUCCESS``
+    marker under ``root`` (hidden files and dirs are not committed data)."""
+    import os
+
+    out = set()
+    for d, dirs, files in os.walk(root):
+        dirs[:] = [x for x in dirs if not x.startswith((".", "_"))]
+        out |= {
+            os.path.relpath(os.path.join(d, f), root)
+            for f in files
+            if f == "_SUCCESS" or not f.startswith((".", "_"))
+        }
+    return out
+
+
+def test_upsert_corrupt_partition_file_raises_and_commits_nothing(
+    spark, tmp_path, staging
+):
+    """The existing keys are read with the batch's schema, so a corrupt
+    part file inside a ``date=`` directory is found by the anti-join's
+    scan, not by schema inference: the call must still raise, and the
+    append must commit no data file and no ``_SUCCESS`` marker."""
+    import os
+
+    from nytimes_batch_processor_spark.ingest import ingest_covid_csv
+
+    target = tmp_path / "covid_states"
+    ingest_covid_csv(spark, _write(staging, "day1.csv", STATES_CSV), str(target),
+                     has_county=False)
+    date_dir = sorted(p for p in target.iterdir() if p.name.startswith("date="))[0]
+    (date_dir / "part-99999-corrupt.snappy.parquet").write_bytes(b"not a parquet file")
+    os.remove(target / "_SUCCESS")  # a marker after the call is its commit
+    before = _data_files(target)
+    # day 2 carries new keys: an append that got past the error would land them
+    src2 = _write(staging, "day2.csv", STATES_CSV_DAY2)
+    with pytest.raises(Exception):
+        ingest_covid_csv(spark, src2, str(target), has_county=False)
+    assert _data_files(target) == before
+
+
+def test_redelivery_lists_target_once_with_bounded_tasks(spark, tmp_path, staging):
+    """The cron's common case as a counter gate: re-delivering the
+    snapshot that backfilled a 40-date target (past the 32-directory
+    distributed-listing threshold) lands nothing, runs at most 4 Spark
+    jobs and no job with more tasks than the cores. The target is listed
+    once, in one task per core, and not read again after the write."""
+    import datetime
+
+    from nytimes_batch_processor_spark.ingest import ingest_covid_csv
+
+    day0 = datetime.date(2020, 3, 1)
+    src = _write(staging, "backfill.csv", "date,state,fips,cases,deaths\n" + "".join(
+        f"{day0 + datetime.timedelta(days=d)},Washington,53,{d},0\n" for d in range(40)
+    ))
+    target = str(tmp_path / "covid_states")
+    ingest_covid_csv(spark, src, target, has_county=False)
+    rows = spark.read.parquet(target).count()
+    assert rows == 40
+
+    sc = spark.sparkContext
+    group = "test-redelivery-counter-gate"
+    sc.setJobGroup(group, "re-delivery")
+    try:
+        ingest_covid_csv(spark, src, target, has_county=False)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert spark.read.parquet(target).count() == rows
+
+    # tasks per job; a stage a later job reuses (skipped) counts once
+    tracker, seen, tasks = sc.statusTracker(), set(), []
+    for job in sorted(tracker.getJobIdsForGroup(group)):
+        stages = set(tracker.getJobInfo(job).stageIds) - seen
+        seen |= stages
+        tasks.append(sum(tracker.getStageInfo(st).numTasks for st in stages))
+    assert 0 < len(tasks) <= 4, tasks
+    assert max(tasks) <= sc.defaultParallelism, tasks
+
+
 def test_ingest_counties_schema(spark, tmp_path, staging):
     from nytimes_batch_processor_spark.ingest import ingest_covid_csv
 
@@ -114,7 +196,9 @@ def test_ingest_counties_schema(spark, tmp_path, staging):
         "2020-03-01,Unknown,Washington,,5,0\n"
     )
     src = _write(staging, "c.csv", csv)
-    out = ingest_covid_csv(spark, src, str(tmp_path / "covid_counties"), has_county=True)
+    target = str(tmp_path / "covid_counties")
+    ingest_covid_csv(spark, src, target, has_county=True)
+    out = spark.read.parquet(target)
     got = {(r["county"], r["fips"]) for r in out.collect()}
     assert got == {("King", 53033), ("Unknown", -1)}
     assert [f.name for f in out.schema.fields if f.name != "date"] == [
@@ -141,8 +225,8 @@ def test_fetch_to_staging_file_url_feeds_ingest(spark, tmp_path, staging):
         assert f.read() == STATES_CSV
 
     target = str(tmp_path / "covid_states_fetched")
-    out = ingest_covid_csv(spark, staged, target, has_county=False)
-    assert out.count() == 4
+    ingest_covid_csv(spark, staged, target, has_county=False)
+    assert spark.read.parquet(target).count() == 4
 
     # re-fetch overwrites atomically (15-min re-pull, deploy.sh:29);
     # no stray temp files remain in the staging dir
@@ -201,9 +285,9 @@ def test_ingest_observe_metrics_collected_during_write(spark, tmp_path, staging)
 
     # re-run: metrics describe the candidate batch, table doesn't grow
     metrics2: dict = {}
-    out = ingest_covid_csv(spark, src, target, has_county=False, metrics_out=metrics2)
+    ingest_covid_csv(spark, src, target, has_county=False, metrics_out=metrics2)
     assert metrics2["batch_rows"] == 4
-    assert out.count() == 4
+    assert spark.read.parquet(target).count() == 4
 
 
 # ---------------------------------------------------------------------------
@@ -417,7 +501,8 @@ def test_audited_ingest_lineage_survives_redelivery(spark, tmp_path):
 
     target = str(tmp_path / "audited")
     ingest_covid_csv_audited(spark, str(b1), target, batch_id=1, has_county=False)
-    out = ingest_covid_csv_audited(spark, str(b2), target, batch_id=2, has_county=False)
+    ingest_covid_csv_audited(spark, str(b2), target, batch_id=2, has_county=False)
+    out = spark.read.parquet(target)
 
     rows = {
         (str(r["date"]), r["state"], r["fips"]): (r["batch_id"], r["source_file"], r["cases"])
@@ -453,12 +538,8 @@ def test_rollback_ingest_batch_restores_prior_state(spark, tmp_path):
     (b2 / "day2.csv").write_text(STATES_CSV_DAY2)  # the bad rows
 
     target = str(tmp_path / "audited")
-    after_b1 = {
-        tuple(r)
-        for r in ingest_covid_csv_audited(
-            spark, str(b1), target, batch_id=1, has_county=False
-        ).collect()
-    }
+    ingest_covid_csv_audited(spark, str(b1), target, batch_id=1, has_county=False)
+    after_b1 = {tuple(r) for r in spark.read.parquet(target).collect()}
     ingest_covid_csv_audited(spark, str(b2), target, batch_id=2, has_county=False)
 
     n = rollback_ingest_batch(spark, target, 2)
