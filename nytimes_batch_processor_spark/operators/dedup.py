@@ -22,7 +22,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
 
-from .. import checkpoints
 from ..catalog import query
 from ..functions import money, ratio
 from ..sources import load_tables
@@ -326,11 +325,6 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     self-join -> verify candidates with estimated Jaccard (signature
     agreement fraction) >= 0.9.
 
-    RETENTION CONTRACT (checkpoints.rotate, key "dedup.minhash_sig"):
-    two generations stay live, so one interleaved re-invocation is
-    safe; consume a result before calling this entry a SECOND time —
-    localCheckpoint blocks are unrecomputable after unpersist.
-
     Shuffle discipline (the fixture's templated docs make candidate
     volume ~1000x the corpus size, so the design never shuffles the pair
     set AT ALL — the only shuffle is the |docs|-row signature
@@ -379,9 +373,6 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .localCheckpoint(eager=True)
     )
-    # Bounded retention (ADVICE r9): rotating under a fixed key keeps at
-    # most two generations of signature blocks — see checkpoints.rotate.
-    checkpoints.rotate("dedup.minhash_sig", sig)
     rows_per_band = _MINHASH_PERMS // _MINHASH_BANDS
     band_hashes = [
         F.xxhash64(
@@ -798,7 +789,6 @@ def dedup_incremental_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", "sig", *_band_hash_cols())
         .localCheckpoint(eager=True)
     )
-    checkpoints.rotate("dedup.probe_sigs", batch_sigs)
     matches = probe_minhash_index(index, batch_sigs)
     agg = matches.groupBy(F.col("doc_id")).agg(
         F.count(F.lit(1)).cast("long").alias("n_matches"),
@@ -1621,15 +1611,6 @@ def containment_prefix_plan(
     pos = ranked.withColumn(
         "rn", F.row_number().over(W.partitionBy("doc_id").orderBy("df", "s"))
     ).localCheckpoint(eager=True)
-    # Bounded retention (ADVICE r9): bench invokes the entry 4x/round
-    # (warmup + 3 timed passes) and each invocation checkpointed a fresh
-    # rank table that only JVM GC ever reclaimed. Rotating under a fixed
-    # key keeps at most TWO generations live (one interleaved
-    # re-invocation is safe — ADVICE r10); consume a result within one
-    # re-invocation (the bench/driver/serving pattern —
-    # tools/scale_bench.py counts both returned frames immediately
-    # after each call).
-    checkpoints.rotate("dedup.containment_pos", pos)
     # required overlap req = ceil(num*n/den) in pure integers; prefix
     # keeps n - req + 1 rarest shingles
     prefix_len = F.col("n") - F.expr(
@@ -1781,7 +1762,6 @@ def dedup_containment_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
             t.documents.filter(F.col("doc_id") < 500).select("doc_id", "text")
         )
     ).localCheckpoint(eager=True)
-    checkpoints.rotate("dedup.containment_sh", sh)
     return containment_prefix_pairs(sh)
 
 
@@ -2261,7 +2241,6 @@ def maintain_window_index(spark: SparkSession, path: str) -> dict:
         str(tmp)
     )
     rows_after = spark.read.parquet(str(tmp)).count()
-    deduped.unpersist(blocking=False)
 
     def _verify_frozen(old_path):
         rootlen = len(old_path.toUri().getPath()) + 1
@@ -2441,12 +2420,9 @@ def dedup_exact_substring_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     valve in [2, CAP] (`exact_substring_survivors`, the ONE exchange on
     h; the >= 2 side discards all non-colliding windows before any join)
     -> window-hash equi-join, cross-doc pairs only -> diagonal islands
-    merge to maximal spans (`exact_substring_spans`).
-
-    RETENTION CONTRACT (checkpoints.rotate, key "dedup.xsub_surv"): the
-    survivor table is localCheckpoint'ed so the self-join's two sides
-    read the pinned result instead of re-running tokenize + K-fold md5
-    twice; two generations stay live."""
+    merge to maximal spans (`exact_substring_spans`). The survivor
+    table is localCheckpoint'ed so the self-join's two sides read the
+    pinned result instead of re-running tokenize + K-fold md5 twice."""
     from ..functions.udfs import spread_for_python
 
     t = load_tables(spark, sf_dir, "documents")
@@ -2464,7 +2440,6 @@ def dedup_exact_substring_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
         .repartition(n_part, "h")
         .localCheckpoint(eager=True)
     )
-    checkpoints.rotate("dedup.xsub_surv", surv)
     return exact_substring_spans(surv)
 
 
@@ -2569,9 +2544,7 @@ def dedup_intradoc_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: candidates <= CAP x |doc windows| per document,
     independent across documents; both exchanges key on doc-local
     columns ((doc_id, h) then (doc, diag)), so a doc-partitioned
-    corpus runs the whole chain map-side. Retention: same
-    checkpoints.rotate discipline as the cross-doc entry, key
-    "dedup.intradoc_surv"."""
+    corpus runs the whole chain map-side."""
     t = load_tables(spark, sf_dir, "documents")
     n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
     # r21 (the r20-deferred spread, landed): the echo derivation +
@@ -2590,7 +2563,6 @@ def dedup_intradoc_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
         .repartition(n_part, "doc_id", "h")
         .localCheckpoint(eager=True)
     )
-    checkpoints.rotate("dedup.intradoc_surv", surv)
     return (
         merge_collision_spans(intradoc_candidates(surv))
         .select(

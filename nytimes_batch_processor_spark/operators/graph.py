@@ -27,7 +27,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from .. import checkpoints
 from ..catalog import query
 from ..sources import load_tables
 from .dedup import _minhash_pairs_ctes
@@ -42,12 +41,6 @@ def connected_components(
     reachable from `node` — a deterministic canonical label. Converges
     in O(diameter) iterations; raises if max_iter is hit (a safety
     valve, not an approximation: partial labels are never returned).
-
-    RETENTION CONTRACT (checkpoints.rotate, key "graph.cc_labels"):
-    two generations stay live, so one interleaved re-invocation is
-    safe; consume a result before calling this helper a SECOND time —
-    the second re-invocation releases its localCheckpoint blocks, and
-    checkpointed blocks cannot be recomputed after unpersist.
     """
     sym = edges.select(
         F.col(src).alias("a"), F.col(dst).alias("b")
@@ -81,18 +74,9 @@ def connected_components(
             .filter(F.col("n.component") != F.col("o.component"))
             .count()
         )
-        # new_labels is materialized and `changed` consumed the old
-        # frame — its checkpoint blocks are dead lineage; release them
-        # now instead of accumulating one label table per iteration.
-        labels.unpersist(blocking=False)
         labels = new_labels
         if changed == 0:
-            checkpoints.rotate("graph.cc_labels", sym, labels)
             return labels
-    # non-convergence must not leak the live checkpoints: nothing is
-    # returned, so nothing downstream can rotate them (self-review r10)
-    labels.unpersist(blocking=False)
-    sym.unpersist(blocking=False)
     raise RuntimeError(f"connected_components did not converge in {max_iter} iterations")
 
 
@@ -118,10 +102,6 @@ def connected_components_star(
     order-insensitive edge-set checksum between rounds. When `stats` is
     given, it receives {"rounds", "input_edges"} — the O(log n)
     rounds-growth claim tools/scale_bench.py measures at x1/x10.
-
-    RETENTION CONTRACT (checkpoints.rotate, key "graph.cc_star_edges"):
-    consume the result within one re-invocation — see
-    `connected_components`.
     """
     e = (
         edges.select(
@@ -168,11 +148,7 @@ def connected_components_star(
     if stats is not None:
         stats["input_edges"] = int(prev["n"])
     for rounds in range(1, max_iter + 1):
-        new_e = _star(_star(e, large=True), large=False).localCheckpoint(eager=True)
-        # new_e is materialized; the previous round's edge blocks are
-        # dead — O(1) live checkpoints instead of O(rounds).
-        e.unpersist(blocking=False)
-        e = new_e
+        e = _star(_star(e, large=True), large=False).localCheckpoint(eager=True)
         cur = _checksum(e)
         if (cur["n"], cur["h"]) == (prev["n"], prev["h"]):
             if stats is not None:
@@ -180,13 +156,9 @@ def connected_components_star(
             break
         prev = cur
     else:
-        # see connected_components: release the last round's checkpoint
-        # before raising — no caller can rotate what was never returned
-        e.unpersist(blocking=False)
         raise RuntimeError(
             f"connected_components_star did not converge in {max_iter} rounds"
         )
-    checkpoints.rotate("graph.cc_star_edges", e)
     sym = e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
     return (
         sym.groupBy("u")
@@ -301,7 +273,6 @@ def dedup_resolve_surface(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     t = load_tables(spark, sf_dir, "documents")
     pairs = dedup_minhash_lsh(spark, sf_dir).localCheckpoint(eager=True)
-    checkpoints.rotate("graph.resolve_pairs", pairs)
     greedy_dupes = pairs.select(F.col("id2").alias("doc_id")).distinct()
     comp = connected_components_star(pairs)
     cc_dupes = comp.filter(F.col("node") != F.col("component")).select(
@@ -485,10 +456,6 @@ def pagerank_fixed_ranks(trade: DataFrame) -> DataFrame:
     tools/scale_bench.py can drive the SAME loop with a replicated
     graph (the iterative-family x10 gate, VERDICT r7 item 5). Returns
     the final (node, rank) table after `_PR_ITERS` steps.
-
-    RETENTION CONTRACT (checkpoints.rotate, key "graph.pagerank"):
-    consume the result within one re-invocation — see
-    `connected_components`.
     """
     edges = trade.union(
         trade.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
@@ -550,7 +517,4 @@ def pagerank_fixed_ranks(trade: DataFrame) -> DataFrame:
     final = ranks.localCheckpoint(eager=True)
     for c in cached:
         c.unpersist()
-    # Bounded retention across invocations (ADVICE r9 pattern): the next
-    # call releases this call's edge snapshot + final table blocks.
-    checkpoints.rotate("graph.pagerank", edges_deg, final)
     return final

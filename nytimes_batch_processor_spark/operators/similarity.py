@@ -25,7 +25,6 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window as W, functions as F
 
-from .. import checkpoints
 from ..catalog import query
 from ..functions import ratio
 from ..sources import load_tables
@@ -328,9 +327,6 @@ def sim_ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .localCheckpoint(eager=True)
     )
-    # Bounded retention (ADVICE r9 pattern): re-invocation releases the
-    # previous signature-index blocks.
-    checkpoints.rotate("similarity.lsh_sig", v_sig)
     # Query side: tiny (N_QUERIES x tables x 176 probe rows) — broadcast.
     # ONE parsed expression for the 176-mask probe array — the F.lit
     # loop cost ~350 py4j round trips of pure driver wall per
@@ -910,7 +906,6 @@ def sim_ann_ivf_fixed_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .localCheckpoint(eager=True)
     )
-    checkpoints.rotate("similarity.ivf_fixed_assigned", assigned)
     probes = assigned.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("query_id"),
         F.col("e").alias("qe"),
@@ -1133,7 +1128,6 @@ def sim_ann_ivf_q8_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .localCheckpoint(eager=True)
     )
-    checkpoints.rotate("similarity.ivf_q8_assigned", assigned)
     probes = assigned.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("query_id"),
         F.col("e").alias("qe"),
@@ -1334,7 +1328,6 @@ def ivf_kmeans_int_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     qdf = spread_for_python(qdf).localCheckpoint(
         eager=True
     )  # 3 assigns + 2 updates re-read it
-    checkpoints.rotate("similarity.ikm_qdf", qdf)
 
     centers = [
         list(r["qe"]) for r in qdf.orderBy("vec_id").limit(_IVF_K).collect()
@@ -2092,7 +2085,6 @@ def sim_incremental_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .localCheckpoint(eager=True)
     )
-    checkpoints.rotate("similarity.sim_probe_batch", batch)
     # The arriving batch's size is known to any real admission pipeline;
     # with the batch pinned it is a block-count job over the
     # checkpoint, not a second parquet scan.
@@ -2167,7 +2159,6 @@ def semdedup_assigned(
         .select("vec_id", "e", "nrm", ranked.alias("cells"))
         .localCheckpoint(eager=True)
     )
-    checkpoints.rotate("similarity.semdedup_assigned", assigned)
     return assigned
 
 

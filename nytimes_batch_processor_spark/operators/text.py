@@ -686,11 +686,8 @@ def bpe_train_merges(
     scale gate's determinism retrain) pass it so the corpus is scanned
     ONCE total, not once per training call — at 100 TB the corpus pass
     dwarfs everything after it."""
-    from .. import checkpoints
-
     if vocab is None:
         vocab = bpe_vocab_frame(docs).localCheckpoint(eager=True)
-        checkpoints.rotate("text.bpe_train_vocab", vocab)
     if vocab.count() <= driver_vocab_cap:
         items = [(r["cnt"], list(r["syms"])) for r in vocab.collect()]
         return _bpe_train_local(items, n_merges)
@@ -716,7 +713,6 @@ def bpe_train_merges(
         vocab = vocab.select(
             "cnt", _merge_pair_in_syms(a, b).alias("syms")
         ).localCheckpoint(eager=True)
-        checkpoints.rotate("text.bpe_train_vocab", vocab)
     return merges
 
 
@@ -776,16 +772,11 @@ def bpe_train_merges_entry(spark: SparkSession, sf_dir: str) -> DataFrame:
       are honestly FALSE (sf0.001 ranks differently from rank 1 on;
       the first draft's VALUES oracle asserted fixture facts
       everywhere and failed the full-suite sf0.001 parity run)."""
-    from .. import checkpoints
-
     t = load_tables(spark, sf_dir, "documents")
     # ONE corpus pass feeds both training calls (the r18 self-review
     # fix: full-table + distributed-prefix each rebuilding the vocab
-    # doubled the corpus scan). Own rotate key — the distributed loop
-    # rotates "text.bpe_train_vocab" internally and would otherwise
-    # release this frame mid-use.
+    # doubled the corpus scan).
     vocab = bpe_vocab_frame(t.documents).localCheckpoint(eager=True)
-    checkpoints.rotate("text.bpe_train_vocab_entry", vocab)
     trained = bpe_train_merges(None, vocab=vocab)
     dist = bpe_train_merges(
         None, n_merges=_BPE_DIST_CHECK, driver_vocab_cap=0, vocab=vocab
@@ -1064,19 +1055,14 @@ def pack_sequences_bpe(spark: SparkSession, sf_dir: str) -> DataFrame:
     27,165 whitespace tokens at sf0.01 (the 48-merge vocab splits most
     chars; compression is the vocab's job, correctness is this
     entry's)."""
-    from .. import checkpoints
-
     t = load_tables(spark, sf_dir, "documents")
     # Pin the packed frame ONCE (r17 self-review): it feeds BOTH the
     # corpus-level flags aggregate and the panel join below, and
     # without the checkpoint the full-corpus Python BPE encode — the
-    # entry's dominant cost — evaluates twice in the one action. One
-    # row per doc, so the pinned blocks are small; rotate releases the
-    # previous invocation's generation.
+    # entry's dominant cost — evaluates twice in the one action.
     packed = packed_offsets(bpe_token_counts(t.documents)).localCheckpoint(
         eager=True
     )
-    checkpoints.rotate("text.pack_sequences_bpe", packed)
     flags = packed.agg(
         (
             (F.max(F.col("start_offset") + F.col("n_tokens")) == F.sum("n_tokens"))

@@ -228,27 +228,64 @@ def test_pagerank_core_matches_python_model(spark):
 
 
 def test_rotate_keeps_previous_generation_alive(spark):
-    """ADVICE r10: `checkpoints.rotate` keys are process-global while
-    the rotated helpers are public — "compute result A, invoke the same
-    helper again, then consume A" must not fail with removed-block
-    errors. rotate() keeps TWO generations live, so a result computed
-    before ONE re-invocation stays collectible; blocks from two
-    invocations back are released (bounded retention, ADVICE r9)."""
+    """A helper's public result stays collectible however often the
+    helper runs before it is consumed: "compute result A, invoke the
+    same helper again (twice), then consume A" must not fail with
+    removed-block errors. A returned frame references its own
+    localCheckpoint, so its blocks live exactly as long as it does."""
     from nytimes_batch_processor_spark.operators.graph import (
         connected_components,
     )
 
     e1 = spark.createDataFrame([(0, 1), (2, 3)], "id1 long, id2 long")
     e2 = spark.createDataFrame([(4, 5)], "id1 long, id2 long")
+    e3 = spark.createDataFrame([(6, 7), (7, 8)], "id1 long, id2 long")
     a = connected_components(e1)
-    b = connected_components(e2)  # re-invocation BEFORE consuming a
-    # a's checkpointed lineage must still be collectible
+    b = connected_components(e2)  # two re-invocations BEFORE consuming a
+    c = connected_components(e3)
     got_a = {r["node"]: r["component"] for r in a.collect()}
     got_b = {r["node"]: r["component"] for r in b.collect()}
+    got_c = {r["node"]: r["component"] for r in c.collect()}
     assert got_a == {0: 0, 1: 0, 2: 2, 3: 2}, got_a
     assert got_b == {4: 4, 5: 4}, got_b
+    assert got_c == {6: 6, 7: 6, 8: 6}, got_c
 
-    from nytimes_batch_processor_spark import checkpoints
 
-    # bounded retention: at most two generations tracked per key
-    assert all(len(gens) <= 2 for gens in checkpoints._LIVE.values())
+def _stored_rdd_ids(spark) -> set[int]:
+    return {i.id() for i in spark.sparkContext._jsc.sc().getRDDStorageInfo()}
+
+
+def test_unreachable_checkpoints_are_reclaimed(spark):
+    """Nothing in the engine holds a checkpoint past its result: once
+    the caller drops the frames, Spark's ContextCleaner frees every
+    block those calls stored. ``unpersist()`` cannot do it for them
+    (a localCheckpoint's blocks belong to its internal RDD), so a
+    reference kept anywhere — a registry, a module-level list — keeps
+    the blocks for the life of the session, and this test sees them.
+    Compares storage RDD ids, not counts, so garbage from earlier tests
+    that happens to be reclaimed meanwhile cannot mask a leak."""
+    import gc
+    import time
+
+    from nytimes_batch_processor_spark.operators.graph import (
+        connected_components,
+    )
+
+    gc.collect()
+    before = _stored_rdd_ids(spark)
+    edges = spark.createDataFrame([(0, 1), (1, 2), (5, 6)], "id1 long, id2 long")
+    results = [connected_components(edges) for _ in range(3)]
+    for res in results:
+        got = {r["node"]: r["component"] for r in res.collect()}
+        assert got == {0: 0, 1: 0, 2: 0, 5: 5, 6: 5}, got
+    assert _stored_rdd_ids(spark) - before, "the calls stored no checkpoint"
+    del edges, results, res
+    gc.collect()
+    deadline = time.monotonic() + 30
+    while True:
+        spark._jvm.System.gc()
+        left = _stored_rdd_ids(spark) - before
+        if not left or time.monotonic() > deadline:
+            break
+        time.sleep(0.5)
+    assert not left, f"checkpoint RDDs still stored after 30 s: {sorted(left)}"

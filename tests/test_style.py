@@ -8,14 +8,17 @@ never exercise.
 
 from __future__ import annotations
 
+import ast
 import re
 from pathlib import Path
 
 import pytest
 from pyspark.sql import types as T
 
-PKG = Path(__file__).resolve().parent.parent / "nytimes_batch_processor_spark"
+REPO = Path(__file__).resolve().parent.parent
+PKG = REPO / "nytimes_batch_processor_spark"
 SOURCES = sorted(PKG.rglob("*.py"))
+TOOL_SOURCES = sorted((REPO / "tools").glob("*.py"))
 
 
 def test_no_bare_unix_micros():
@@ -71,4 +74,63 @@ def test_no_decimal_in_catalog_output_schemas(spark, sf_dir):
     assert not offenders, (
         "catalog entries returning DECIMAL at the output boundary "
         "(cast to double):\n" + "\n".join(offenders)
+    )
+
+
+def _own_nodes(fn: ast.AST):
+    """The nodes of ``fn``'s own body, not those of functions nested in it."""
+    stack = list(fn.body)
+    while stack:
+        node = stack.pop()
+        yield node
+        stack.extend(
+            c
+            for c in ast.iter_child_nodes(node)
+            if not isinstance(c, (ast.FunctionDef, ast.AsyncFunctionDef, ast.Lambda))
+        )
+
+
+def _is_local_checkpoint(value: ast.AST) -> bool:
+    return (
+        isinstance(value, ast.Call)
+        and isinstance(value.func, ast.Attribute)
+        and value.func.attr == "localCheckpoint"
+    )
+
+
+def test_no_unpersist_of_local_checkpoints():
+    """``unpersist()`` only uncaches CacheManager entries: the blocks of
+    a ``localCheckpoint`` belong to its internal RDD, so the call frees
+    nothing (after ``unpersist(blocking=True)`` the RDD is still listed
+    by ``getRDDStorageInfo()`` and the frame still collects). Spark's
+    ContextCleaner reclaims a checkpoint once nothing references it, so
+    a "release" call reads as resource management and is none. Flags
+    ``x.unpersist(`` where ``x`` is bound from a ``.localCheckpoint(...)``
+    call in the same function."""
+    offenders = []
+    for path in SOURCES + TOOL_SOURCES:
+        tree = ast.parse(path.read_text(), filename=str(path))
+        for fn in ast.walk(tree):
+            if not isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                continue
+            nodes = list(_own_nodes(fn))
+            pinned = {
+                t.id
+                for n in nodes
+                if isinstance(n, ast.Assign) and _is_local_checkpoint(n.value)
+                for t in n.targets
+                if isinstance(t, ast.Name)
+            }
+            offenders += [
+                f"{path.relative_to(REPO)}:{n.lineno}: {n.func.value.id}.unpersist("
+                for n in nodes
+                if isinstance(n, ast.Call)
+                and isinstance(n.func, ast.Attribute)
+                and n.func.attr == "unpersist"
+                and isinstance(n.func.value, ast.Name)
+                and n.func.value.id in pinned
+            ]
+    assert not offenders, (
+        "unpersist() of a localCheckpoint frees no blocks:\n"
+        + "\n".join(offenders)
     )

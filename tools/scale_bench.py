@@ -315,7 +315,6 @@ def probe_scale_measure(spark, k: int, index_path: str) -> dict:
     n_matches = probe_minhash_index(index, batch_sigs).count()
     wall = round(time.perf_counter() - t0, 3)
     n_cand = probe_candidate_pairs(index, batch_sigs).count()
-    batch_sigs.unpersist(blocking=False)
     return {
         "probe_candidates": n_cand,
         "probe_matches": n_matches,
@@ -357,7 +356,6 @@ def pipeline_scale_measure(spark, k: int, index_path: str) -> dict:
     wall = round(time.perf_counter() - t0, 3)
     obs = metrics["observations"]
     q, a, m = obs["quality"].get, obs["admitted"].get, obs["manifest"].get
-    batch.unpersist(blocking=False)
     return {
         "pipe_batch_docs": n_batch,
         "pipe_quality_docs": int(q["n"]),
@@ -421,7 +419,6 @@ def adm_sink_scale_measure(spark, k: int, index_path: str) -> dict:
         walls.append(round(time.perf_counter() - t0, 3))
     for run in range(2):
         shutil.rmtree(os.path.join(sink, f"batch_id={next_id + run}"), ignore_errors=True)
-    base_batch.unpersist(blocking=False)
     return {
         "adm_sink_rows": n_sink_rows,
         "adm_sink_wall_sec": min(walls),
@@ -499,7 +496,6 @@ def ann_probe_scale_measure(spark, k: int, index_path: str) -> dict:
     )
     wall = round(time.perf_counter() - t0, 3)
     n_cand = scored.count()
-    batch.unpersist(blocking=False)
     return {
         "ann_probe_candidates": n_cand,
         "ann_probe_dup_queries": n_dup,
@@ -660,7 +656,6 @@ def window_probe_scale_measure(spark, k: int, sf_dir: str) -> dict:
     n_cand = cand.count()
     n_spans = merge_collision_spans(cand).count()
     wall = round(time.perf_counter() - t0, 3)
-    cand.unpersist(blocking=False)
     return {
         "ix_xsub_candidates": n_cand,
         "ix_xsub_spans": n_spans,
@@ -695,8 +690,6 @@ def xsub_scale_measure(spark, sf_dir: str) -> dict:
     n_cand = cand.count()
     n_spans = merge_collision_spans(cand).count()
     wall = round(time.perf_counter() - t0, 3)
-    surv.unpersist(blocking=False)
-    cand.unpersist(blocking=False)
     return {
         "xsub_surviving_windows": n_surv,
         "xsub_candidates": n_cand,
@@ -746,7 +739,6 @@ def semdedup_scale_measure(spark, sf_dir: str, k: int) -> dict:
     # runs), closing the timed chain
     n_drops = dup.select("id2").distinct().count()
     wall = round(time.perf_counter() - t0, 3)
-    cand.unpersist(blocking=False)
 
     # Persisted-path axis (r17, VERDICT r16 item 4): the production
     # layout buckets the exploded assignment by cell, so EVERY later
@@ -889,7 +881,6 @@ def bpe_scale_measure(spark, sf_dir: str) -> dict:
         F.max(F.col("start_offset") + F.col("n_tokens")).alias("end"),
     ).collect()[0]
     wall = round(time.perf_counter() - t0, 3)
-    counts.unpersist(blocking=False)
     return {
         "bpe_tokens": int(agg["toks"]),
         "bpe_bins": int(agg["bins"]),
@@ -940,7 +931,6 @@ def bpet_scale_measure(spark, sf_dir: str) -> dict:
     wall = round(time.perf_counter() - t0, 3)
     again = bpe_train_merges(None, vocab=vocab)
     dist6 = bpe_train_merges(None, n_merges=6, driver_vocab_cap=0, vocab=vocab)
-    vocab.unpersist(blocking=False)
     return {
         "bpet_vocab": n_vocab,
         "bpet_pair_mass": int(pair_mass),
@@ -989,8 +979,6 @@ def pplx_scale_measure(spark, sf_dir: str) -> dict:
         F.sum((F.col("xent") > _PPLX_BAR).cast("long")).alias("d"),
     ).collect()[0]
     wall = round(time.perf_counter() - t0, 3)
-    bigc.unpersist(blocking=False)
-    scores.unpersist(blocking=False)
     return {
         "pplx_vocab": int(n_vocab),
         "pplx_bigram_rows": int(n_big),
@@ -1039,7 +1027,6 @@ def dspan_scale_measure(spark, sf_dir: str) -> dict:
         )
     ).count()
     wall = round(time.perf_counter() - t0, 3)
-    leaked.unpersist(blocking=False)
     return {
         "dspan_leaked_windows": n_leaked,
         "dspan_spans": n_spans,
@@ -1117,7 +1104,6 @@ def merge_scale_measure(spark, k: int) -> dict:
         spark, path, changes, keys=["k"], partition_col="o_month"
     )
     wall = round(time.perf_counter() - t0, 3)
-    changes.unpersist(blocking=False)
     return {
         "merge_partitions_rewritten": stats["partitions_rewritten"],
         "merge_partitions_deleted": stats["partitions_deleted"],
