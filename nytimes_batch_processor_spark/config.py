@@ -71,15 +71,13 @@ def load_properties(path: str) -> dict[str, str]:
 @dataclass(frozen=True)
 class EngineConfig:
     """Typed engine settings. Fields mirror the knobs the reference
-    externalized (sources, sink, runtime) plus the Spark-specific ones
+    externalized (sources, runtime) plus the Spark-specific ones
     every deployment must own."""
 
     sf_dir: str = "/root/testdata/sf0.1"  # fixture/source data root
     cpus: int = 0  # 0 = auto (os.cpu_count)
     shuffle_partitions: int = 0  # 0 = match cpus
     driver_memory: str = "8g"
-    target_dir: str = ""  # ingest sink root ('' = caller provides)
-    checkpoint_dir: str = ""  # streaming checkpoint root
 
     @classmethod
     def resolve(

@@ -227,27 +227,20 @@ def compact_admitted_sink(
 
     This compacts partition BY partition: each ``batch_id=N`` dir with
     more than ``target_files`` data files is rewritten (coalesced) into
-    a HIDDEN sibling tmp dir — whose own ``_SUCCESS`` marker Spark
-    writes as part of the rewrite, BEFORE any rename — then two-rename
-    swapped into place via `tables._commit_swap`. At every crash point
-    a partition is therefore wholly old (marked) or wholly new
-    (marked); the idempotency ledger is never stripped. The tmp/old
-    names are dot-prefixed (``.compact_tmp_batch_id=N``) rather than
-    the index compaction's ``<path>._suffix`` shape: a crash-stranded
-    ``batch_id=N._compacting`` dir would contain ``=`` and poison the
-    sink's partition discovery until cleanup, while a dot-prefixed dir
-    is invisible to readers. A partition left missing by a crash
-    between the two renames is restored from its old dir on the next
-    run (the `_swap_paths` recovery rule, applied per partition).
+    its hidden swap dir — whose own ``_SUCCESS`` marker Spark writes as
+    part of the rewrite, BEFORE any rename — and promoted by the one
+    rewrite-in-place protocol (`tables._swap_paths` heals first,
+    `tables._commit_swap` promotes). At every crash point a partition
+    is therefore wholly old (marked) or wholly new (marked); the
+    idempotency ledger is never stripped.
 
     Offline maintenance, like the index compactions: do not run it
     concurrently with the writing stream. Returns
     ``{"partitions_compacted", "files_before", "files_after"}``."""
-    from .tables import _commit_swap
+    from .tables import _commit_swap, _swap_dirs, _swap_paths
 
-    jvm = spark._jvm
-    root = jvm.org.apache.hadoop.fs.Path(admitted_path)
-    fs = root.getFileSystem(spark._jsc.hadoopConfiguration())
+    Path = spark._jvm.org.apache.hadoop.fs.Path
+    fs, root, _, _, children = _swap_paths(spark, admitted_path)
 
     def _n_data_files(dir_path) -> int:
         return sum(
@@ -258,56 +251,16 @@ def compact_admitted_sink(
             and not f.getPath().getName().startswith(".")
         )
 
-    def _hidden(kind: str, part: str):
-        return jvm.org.apache.hadoop.fs.Path(
-            f"{admitted_path.rstrip('/')}/.compact_{kind}_{part}"
-        )
-
-    # crash recovery first: a partition missing with its old dir
-    # present means a previous run died between the two swap renames —
-    # the old dir IS the live (marked) data; restore before anything
-    for st in fs.listStatus(root):
-        name = st.getPath().getName()
-        if name.startswith(".compact_tmp_"):
-            # tmp is never the live data (the swap promotes it in the
-            # same call that wrote it): at recovery time it is always a
-            # crash leftover
-            fs.delete(st.getPath(), True)
-            continue
-        if name.startswith(".compact_old_"):
-            part = name[len(".compact_old_"):]
-            live = jvm.org.apache.hadoop.fs.Path(
-                f"{admitted_path.rstrip('/')}/{part}"
-            )
-            if not fs.exists(live):
-                if not fs.rename(st.getPath(), live):
-                    raise IOError(
-                        f"sink compaction recovery failed: could not "
-                        f"restore {name} to {part}"
-                    )
-            else:
-                # live partition present -> the old dir is a stale
-                # leftover from a crash AFTER the swap completed; a
-                # skipped (already-compact) partition would otherwise
-                # carry it forever
-                fs.delete(st.getPath(), True)
-
     stats = {"partitions_compacted": 0, "files_before": 0, "files_after": 0}
-    for st in fs.listStatus(root):
-        name = st.getPath().getName()
-        if not name.startswith("batch_id="):
-            continue
-        if not st.isDirectory():
+    for name, st in children.items():
+        if not name.startswith("batch_id=") or not st.isDirectory():
             continue
         n_files = _n_data_files(st.getPath())
         stats["files_before"] += n_files
         if n_files <= target_files:
             stats["files_after"] += n_files
             continue
-        tmp, old = _hidden("tmp", name), _hidden("old", name)
-        for stale in (tmp, old):
-            if fs.exists(stale):
-                fs.delete(stale, True)
+        tmp, old = _swap_dirs(Path, root, name)
         pdir = st.getPath().toUri().getPath()
         # the rewrite itself creates tmp's _SUCCESS — the marker is in
         # place before the swap publishes anything

@@ -2207,19 +2207,17 @@ def maintain_window_index(spark: SparkSession, path: str) -> dict:
     3. repacks the per-append small files under the same ``hb=``
        layout, so the probe's DPP pruning is untouched.
 
+    The tree is replaced by the one rewrite-in-place protocol
+    (`tables._swap_paths` heals, `tables._commit_swap` promotes).
     Offline window discipline: the rewrite snapshots the live file set
     and REFUSES — restore-and-abort, never silent row loss — if an
     append lands between snapshot and swap (`_commit_swap(verify_old=)`
-    re-checks the FROZEN set-aside tree, the `rebuild_ivf_index`
-    pattern). Returns ``{"rows_before", "rows_after",
-    "dropped_duplicates", "valved_out"}``."""
-    from ..tables import _commit_swap, _swap_paths
+    re-checks the FROZEN set-aside tree). Returns ``{"rows_before",
+    "rows_after", "dropped_duplicates", "valved_out"}``."""
+    from ..tables import _commit_swap, _data_files, _swap_paths
 
-    path = path.rstrip("/")
     jvm = spark._jvm
-    fs, hpath, tmp, old = _swap_paths(
-        spark, path, "._maintaining", "._premaintain"
-    )
+    fs, hpath, tmp, old, _ = _swap_paths(spark, path)
     idx = spark.read.parquet(path).select("doc_id", "pos", "h")
     rootlen0 = len(hpath.toUri().getPath()) + 1
     snapshot = {
@@ -2243,15 +2241,7 @@ def maintain_window_index(spark: SparkSession, path: str) -> dict:
     rows_after = spark.read.parquet(str(tmp)).count()
 
     def _verify_frozen(old_path):
-        rootlen = len(old_path.toUri().getPath()) + 1
-        live = set()
-        it = fs.listFiles(old_path, True)
-        while it.hasNext():
-            p = it.next().getPath()
-            name = p.getName()
-            if not name.startswith("_") and not name.startswith("."):
-                live.add(p.toUri().getPath()[rootlen:])
-        appended = live - snapshot
+        appended = _data_files(fs, old_path) - snapshot
         if appended:
             raise RuntimeError(
                 f"window-index maintenance aborted: {len(appended)} data "

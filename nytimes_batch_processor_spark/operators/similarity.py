@@ -1588,10 +1588,10 @@ def rebuild_ivf_index(
     most ``sample_cap`` rows — at 100 TB the retrain reads a bounded
     sample plus one full assignment pass) and rewrites the inverted
     file under the new cells: ``partitionBy("cell")`` into a temp dir
-    together with the trained-centroid sidecar, then the
-    `tables.compact_parquet` two-rename swap (crash-safe — the live
-    directory is either wholly old or wholly new, and a crash between
-    the renames restores from ``._prerebuild`` on the next run).
+    together with the trained-centroid sidecar, then the one
+    rewrite-in-place swap (`tables._swap_paths` / `tables._commit_swap`:
+    the live directory is either wholly old or wholly new, and a crash
+    between the renames restores the parked copy on the next run).
     Later probes and admission appends pick the trained quantizer up
     via `load_ivf_centers`, so the index stays self-describing.
 
@@ -1607,11 +1607,10 @@ def rebuild_ivf_index(
     r12) — a re-verification of the FROZEN set-aside tree inside
     `_commit_swap` itself, where a racing append can no longer hide.
     Returns ``{"n_vectors", "max_cell_share", "occupancy_ok"}``."""
-    from ..tables import _commit_swap, _swap_paths
+    from ..tables import _commit_swap, _data_files, _swap_paths
 
-    path = path.rstrip("/")  # 'dir/' would make tmp/old its children
     jvm = spark._jvm
-    fs, hpath, tmp, old = _swap_paths(spark, path, "._rebuilding", "._prerebuild")
+    fs, hpath, tmp, old, _ = _swap_paths(spark, path)
 
     rows = spark.read.parquet(path).select("vec_id", "e", "nrm")
     # snapshot as ROOT-RELATIVE paths: the in-swap re-verification
@@ -1625,17 +1624,6 @@ def rebuild_ivf_index(
         jvm.org.apache.hadoop.fs.Path(u).toUri().getPath()[rootlen0:]
         for u in rows.inputFiles()
     }
-
-    def _data_files(root) -> set:
-        rootlen = len(root.toUri().getPath()) + 1
-        out = set()
-        it = fs.listFiles(root, True)
-        while it.hasNext():
-            p = it.next().getPath()
-            name = p.getName()
-            if not name.startswith("_") and not name.startswith("."):
-                out.add(p.toUri().getPath()[rootlen:])
-        return out
 
     def _refuse(appended: set, where: str):
         raise RuntimeError(
@@ -1654,7 +1642,7 @@ def rebuild_ivf_index(
     # snapshot would vanish in the swap while its ledger/sink rows
     # survive — the silent-dup hole self-review r12 flagged. Cheap
     # pre-check first (aborts before the live dir is touched)...
-    appended = _data_files(hpath) - snapshot
+    appended = _data_files(fs, hpath) - snapshot
     if appended:
         fs.delete(tmp, True)
         _refuse(appended, "during the rebuild")
@@ -1663,7 +1651,7 @@ def rebuild_ivf_index(
         # ...then the authoritative check on the set-aside tree: an
         # append that raced past the pre-check landed before the
         # rename and is visible here; raising restores the old tree
-        late = _data_files(old_path) - snapshot
+        late = _data_files(fs, old_path) - snapshot
         if late:
             _refuse(late, "during the swap")
 

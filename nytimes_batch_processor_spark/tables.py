@@ -226,9 +226,12 @@ def detect_partition_columns(spark: SparkSession, path: str) -> list[str]:
 
 
 def _detect_partitions_with_leaf(
-    spark: SparkSession, path: str
+    spark: SparkSession, path: str, children: dict | None = None
 ) -> tuple[list[str], str]:
-    """(partition columns, one leaf directory holding data files)."""
+    """(partition columns, one leaf directory holding data files).
+    ``children`` is `_swap_paths`' ``{name: FileStatus}`` of ``path``,
+    which spares the root listing. Hidden (``.``/``_``) entries are
+    never partitions."""
     jvm = spark._jvm
     fs = jvm.org.apache.hadoop.fs.Path(path).getFileSystem(
         spark._jsc.hadoopConfiguration()
@@ -236,44 +239,86 @@ def _detect_partitions_with_leaf(
     cols: list[str] = []
     cur = jvm.org.apache.hadoop.fs.Path(path)
     while True:
-        subdirs = [
-            f.getPath()
-            for f in fs.listStatus(cur)
-            if f.isDirectory() and "=" in f.getPath().getName()
-        ]
-        if not subdirs:
+        if children is None:
+            children = {f.getPath().getName(): f for f in fs.listStatus(cur)}
+        sub = next(
+            (
+                st.getPath()
+                for name, st in children.items()
+                if "=" in name and not name.startswith((".", "_")) and st.isDirectory()
+            ),
+            None,
+        )
+        if sub is None:
             return cols, str(cur.toUri().getPath())
-        cols.append(subdirs[0].getName().split("=", 1)[0])
-        cur = subdirs[0]
+        cols.append(sub.getName().split("=", 1)[0])
+        cur, children = sub, None
 
 
-def _swap_paths(spark: SparkSession, path: str, tmp_suffix: str, old_suffix: str):
-    """Crash-recovery + stale-cleanup preamble of the two-rename swap —
-    ONE copy shared by `compact_parquet` and
-    `operators.similarity.rebuild_ivf_index` (self-review r12: the
-    protocol had been duplicated with only the suffixes renamed).
-    Returns ``(fs, live, tmp, old)`` ready for a fresh rewrite into
-    ``tmp``. ``path`` must already be slash-normalized (see callers)."""
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
+# The one naming rule of every rewrite-in-place: a directory ``P/d`` is
+# rewritten into ``P/.d._swap_new`` and parked at ``P/.d._swap_old``
+# while the new copy is promoted. Both names are dot-prefixed, so
+# partition discovery never lists them as data.
+_SWAP_NEW = "._swap_new"
+_SWAP_OLD = "._swap_old"
+
+
+def _swap_dirs(Path, parent, name: str):
+    """``(new, old)`` Hadoop paths of the directory ``parent/name``."""
+    return Path(parent, f".{name}{_SWAP_NEW}"), Path(parent, f".{name}{_SWAP_OLD}")
+
+
+def _swap_paths(spark: SparkSession, path: str):
+    """The one crash recovery of every rewrite-in-place, run before the
+    operation reads ``path``. The rule, for a directory ``d``: if ``d``
+    is missing and ``.d._swap_old`` exists, a swap died between its two
+    renames and the parked copy IS the live data, so restore it;
+    otherwise both residue dirs are stale, so delete them. It applies
+    to ``path`` itself (the whole-tree rewrites) and, in one root
+    listing, to every ``.<child>._swap_*`` under it (the per-partition
+    rewrites) — so whichever operation runs next heals every
+    operation's residue, never just its own.
+
+    Returns ``(fs, live, new, old, children)``: the Hadoop paths of a
+    whole-tree swap of ``path`` and ``{name: FileStatus}`` of its
+    healed root (residue excluded; empty when ``path`` is missing)."""
+    Path = spark._jvm.org.apache.hadoop.fs.Path
+    hpath = Path(path)
     fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    tmp = jvm.org.apache.hadoop.fs.Path(path + tmp_suffix)
-    old = jvm.org.apache.hadoop.fs.Path(path + old_suffix)
-    # path missing + old present = a previous run died BETWEEN the two
-    # swap renames; the old dir IS the live data — restore, never delete
-    if not fs.exists(hpath) and fs.exists(old):
-        if not fs.rename(old, hpath):
-            raise IOError(f"crash recovery failed: could not restore {old} to {path}")
-    for stale in (tmp, old):
-        if fs.exists(stale):
-            fs.delete(stale, True)
-    return fs, hpath, tmp, old
+
+    def heal(live, new, old, live_exists: bool) -> bool:
+        restore = not live_exists and fs.exists(old)
+        if restore and not fs.rename(old, live):
+            raise IOError(f"crash recovery failed: could not restore {old} to {live}")
+        fs.delete(new, True)
+        if not restore:
+            fs.delete(old, True)
+        return restore
+
+    tmp, old = _swap_dirs(Path, hpath.getParent(), hpath.getName())
+    live_exists = fs.exists(hpath)
+    live_exists |= heal(hpath, tmp, old, live_exists)
+    if not live_exists:
+        return fs, hpath, tmp, old, {}
+    children = {st.getPath().getName(): st for st in fs.listStatus(hpath)}
+    residue = [
+        n for n in children if n.startswith(".") and n.endswith((_SWAP_NEW, _SWAP_OLD))
+    ]
+    for name in {n[1 : -len(_SWAP_NEW)] for n in residue}:  # equal-length suffixes
+        live = Path(hpath, name)
+        if heal(live, *_swap_dirs(Path, hpath, name), name in children):
+            children[name] = fs.getFileStatus(live)
+    for n in residue:
+        del children[n]
+    return fs, hpath, tmp, old, children
 
 
 def _commit_swap(fs, hpath, tmp, old, path: str, verify_old=None) -> None:
-    """The two renames + rollback + cleanup half of the swap protocol
-    (see `_swap_paths`): any crash point leaves ``path`` wholly old or
-    wholly new.
+    """The one promote of every rewrite-in-place: park the live dir
+    ``hpath`` at ``old``, rename ``tmp`` into its place, drop ``old``.
+    Any crash point leaves ``path`` wholly old, wholly new, or parked
+    at ``old`` for `_swap_paths` to restore. A missing live dir (a
+    brand-new partition) is published by the one promote rename.
 
     ``verify_old``, when given, is called with the set-aside ``old``
     Path AFTER the first rename takes the live tree offline and BEFORE
@@ -287,11 +332,13 @@ def _commit_swap(fs, hpath, tmp, old, path: str, verify_old=None) -> None:
     between the two renames — is inherent to lock-free filesystems and
     stays covered by the callers' offline-maintenance-window
     contract."""
-    if not fs.rename(hpath, old):
-        raise IOError(f"swap failed: could not move {path} aside")
-    if verify_old is not None:
+    parked = fs.exists(hpath)
+    if parked:
+        if not fs.rename(hpath, old):
+            raise IOError(f"swap failed: could not move {path} aside")
         try:
-            verify_old(old)
+            if verify_old is not None:
+                verify_old(old)
         except Exception:
             # restore FIRST, clean up tmp second: the reverse order
             # leaves `path` absent if the delete throws or the process
@@ -305,9 +352,24 @@ def _commit_swap(fs, hpath, tmp, old, path: str, verify_old=None) -> None:
             fs.delete(tmp, True)
             raise
     if not fs.rename(tmp, hpath):
-        fs.rename(old, hpath)  # roll back
+        if parked:
+            fs.rename(old, hpath)  # roll back
         raise IOError(f"swap failed: could not promote {tmp}")
     fs.delete(old, True)
+
+
+def _data_files(fs, root) -> set:
+    """Root-relative paths of the data files under ``root`` (``_``/``.``
+    names skipped): the file set the whole-tree rewrites compare with
+    their read snapshot to refuse an append that would be lost."""
+    rootlen = len(root.toUri().getPath()) + 1
+    out = set()
+    it = fs.listFiles(root, True)
+    while it.hasNext():
+        p = it.next().getPath()
+        if not p.getName().startswith(("_", ".")):
+            out.add(p.toUri().getPath()[rootlen:])
+    return out
 
 
 def compact_parquet(
@@ -339,8 +401,8 @@ def compact_parquet(
     The swap is two renames through the Hadoop FileSystem API (atomic
     enough for a maintenance window on HDFS/local; object stores want a
     manifest/table format instead — this utility is the format-free
-    fallback). The recovery/cleanup and rename protocol live in
-    `_swap_paths` / `_commit_swap` (shared with the IVF rebuild).
+    fallback): the one rewrite-in-place protocol, `_swap_paths` to heal
+    and `_commit_swap` to promote.
 
     ``preserve_rootfiles`` names root-level metadata files (e.g. the
     IVF index's ``_centroids.json`` sidecar) to COPY into the rewrite
@@ -349,10 +411,9 @@ def compact_parquet(
     (self-review r12: re-creating the sidecar after the swap left a
     window where the compacted index had lost its quantizer).
     """
-    path = path.rstrip("/")  # 'dir/' would make tmp/old its children
     jvm = spark._jvm
-    fs, hpath, tmp, old = _swap_paths(spark, path, "._compacting", "._precompact")
-    part_cols, leaf_dir = _detect_partitions_with_leaf(spark, path)
+    fs, hpath, tmp, old, children = _swap_paths(spark, path)
+    part_cols, leaf_dir = _detect_partitions_with_leaf(spark, path, children)
     if part_cols:
         # Read partition values as VERBATIM strings for the roundtrip:
         # type inference would turn a zero-padded string value like
@@ -580,7 +641,8 @@ def delete_rows_partition_scoped(
     in partition values and spells NULL as __HIVE_DEFAULT_PARTITION__,
     so rebuilding paths from values is wrong for both); (2) each
     affected directory is rewritten without the matching rows and
-    swapped in via rename. Rows where the predicate evaluates to NULL
+    swapped in by the one rewrite-in-place protocol (`_swap_paths`,
+    `_commit_swap`). Rows where the predicate evaluates to NULL
     are KEPT (a takedown must only remove rows that provably match —
     three-valued logic would otherwise silently delete NULL-field
     rows). Untouched partitions keep their files byte-identical
@@ -591,15 +653,10 @@ def delete_rows_partition_scoped(
     import os as _os
     from urllib.parse import quote, unquote, urlparse
 
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path
-    fs = hpath(path).getFileSystem(spark._jsc.hadoopConfiguration())
-    # Heal a prior delete's crash residue BEFORE reading the dataset —
-    # the same crash class the merge heals (self-review r11): a crash
-    # between the aside-rename and the promote leaves the dot-prefixed
-    # `.<dir>._predelete` aside as the partition's ONLY copy; restore it
-    # when the target dir is missing, drop it as residue otherwise.
-    _heal_aside_residue(fs, hpath, path, partition_col, _PREDELETE_SUFFIX)
+    hpath = spark._jvm.org.apache.hadoop.fs.Path
+    # heal any rewrite's crash residue BEFORE reading: a partition
+    # parked mid-swap is the ONLY copy of its rows
+    fs = _swap_paths(spark, path)[0]
 
     df = spark.read.parquet(path)
     matches = F.coalesce(predicate, F.lit(False))
@@ -633,7 +690,6 @@ def delete_rows_partition_scoped(
     part_type = df.schema[partition_col].dataType
     prefix = f"{partition_col}="
     for part_dir in affected_dirs:
-        parent = _os.path.dirname(part_dir)
         dirname = _os.path.basename(part_dir)
         if not dirname.startswith(prefix):  # pragma: no cover - layout guard
             raise ValueError(f"unexpected partition directory layout: {part_dir}")
@@ -648,21 +704,10 @@ def delete_rows_partition_scoped(
         n_before = part_df.count()
         keep = part_df.filter(~matches).drop(partition_col)
         n_deleted += n_before - keep.count()
-        # dot-prefixed siblings: partition discovery ignores leading-dot
-        # dirs, so neither the rewrite output nor the parked copy can
-        # ever surface as a bogus `<col>=<val>._deleting` partition
-        # after a mid-swap crash (self-review r11 — the merge swap's
-        # discipline applied to the delete path)
-        tmp = _os.path.join(parent, "." + dirname + _DELETING_SUFFIX)
-        keep.write.mode("overwrite").parquet(tmp)
-        old = _os.path.join(parent, "." + dirname + _PREDELETE_SUFFIX)
-        fs.delete(hpath(old), True)  # unreachable residue of THIS process
-        if not fs.rename(hpath(part_dir), hpath(old)):
-            raise IOError(f"delete swap failed: could not move {part_dir} aside")
-        if not fs.rename(hpath(tmp), hpath(part_dir)):
-            fs.rename(hpath(old), hpath(part_dir))
-            raise IOError(f"delete swap failed: could not promote {tmp}")
-        fs.delete(hpath(old), True)
+        live = hpath(part_dir)
+        tmp, old = _swap_dirs(hpath, live.getParent(), live.getName())
+        keep.write.mode("overwrite").parquet(str(tmp))
+        _commit_swap(fs, live, tmp, old, part_dir)
     return n_deleted
 
 
@@ -689,63 +734,6 @@ def drop_partitions_older_than(
     return dropped
 
 
-_PREMERGE_SUFFIX = "._premerge"
-_PREDELETE_SUFFIX = "._predelete"
-_DELETING_SUFFIX = "._deleting"
-
-
-def _heal_aside_residue(
-    fs, hpath, path: str, partition_col: str, suffix: str
-) -> dict:
-    """Resolve every ``.<partition_col>=<val><suffix>`` aside dir a
-    crashed partition swap (merge OR partition-scoped delete) left
-    under ``path`` (dot-prefixed, so partition discovery never lists
-    them as data):
-
-    - target partition dir MISSING -> the crash hit between the
-      aside-rename and the promote; the aside is the only copy of the
-      partition's pre-swap rows. Restore it (rename back to target).
-    - target partition dir PRESENT -> the promote completed and only
-      the aside cleanup was lost; the aside duplicates superseded rows.
-      Delete it.
-
-    ``.<dir>._deleting`` temp dirs (an incomplete rewrite output, always
-    recomputable) are removed unconditionally when healing the delete
-    path. Returns {"restored": [...], "removed": [...]} partition dir
-    names, for callers/tests that audit the heal. O(listing) — no data
-    read."""
-    import os as _os
-
-    restored: list[str] = []
-    removed: list[str] = []
-    root_p = hpath(path)
-    if not fs.exists(root_p):
-        return {"restored": restored, "removed": removed}
-    aside_prefix = f".{partition_col}="
-    for st in fs.listStatus(root_p):
-        name = st.getPath().getName()
-        if not (st.isDirectory() and name.startswith(aside_prefix)):
-            continue
-        if suffix == _PREDELETE_SUFFIX and name.endswith(_DELETING_SUFFIX):
-            fs.delete(st.getPath(), True)  # recomputable rewrite output
-            removed.append(name)
-            continue
-        if not name.endswith(suffix):
-            continue
-        dirname = name[1 : -len(suffix)]
-        target = hpath(_os.path.join(path, dirname))
-        if fs.exists(target):
-            fs.delete(st.getPath(), True)
-            removed.append(dirname)
-        else:
-            if not fs.rename(st.getPath(), target):
-                raise IOError(
-                    f"aside heal failed: could not restore {name} -> {dirname}"
-                )
-            restored.append(dirname)
-    return {"restored": restored, "removed": removed}
-
-
 def merge_into_partitioned(
     spark: SparkSession,
     path: str,
@@ -769,8 +757,7 @@ def merge_into_partitioned(
     one change row per key — CDC batch compaction (last-writer-wins per
     key) is its own upstream step, cf. ``first_write_wins``.
 
-    Mechanics (all partition-scoped, mirroring
-    ``delete_rows_partition_scoped``'s proven swap):
+    Mechanics (all partition-scoped):
 
     1. affected = partitions of BASE rows whose key appears in the batch
        (one column-pruned scan of key+partition columns — at 100 TB
@@ -779,8 +766,9 @@ def merge_into_partitioned(
        An update whose partition value moved rewrites BOTH directories.
     2. survivors = affected base rows anti-joined against ALL change
        keys (drops deleted rows and stale update versions in one join).
-    3. survivors ∪ upserts are written partitioned to a temp dir, then
-       each affected directory is swapped in via rename; an affected
+    3. survivors ∪ upserts are written partitioned to the table's
+       ``_swap_new`` dir, then each affected directory is promoted by
+       the one rewrite-in-place protocol (`_commit_swap`); an affected
        partition with NO surviving rows is deleted outright (the edge
        dynamic-partition-overwrite silently gets wrong — an emptied
        partition would keep its old files because no output row
@@ -795,21 +783,13 @@ def merge_into_partitioned(
     Table formats (Delta/Iceberg) run this MERGE transactionally; this
     is the format-free equivalent with per-partition atomicity.
     """
-    import os as _os
     from urllib.parse import unquote
 
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path
-    fs = hpath(path).getFileSystem(spark._jsc.hadoopConfiguration())
-
-    # Heal a prior merge's crash residue BEFORE reading the base. A
-    # crash between the aside-rename and the promote leaves the aside
-    # dir as the ONLY copy of that partition (target missing) — it must
-    # be restored, or the rows are invisible forever and the next merge
-    # touching the partition would delete them (ADVICE r10). Only when
-    # the target dir EXISTS is the aside true residue (crash landed
-    # after the promote, before the aside delete) and safe to drop.
-    _heal_aside_residue(fs, hpath, path, partition_col, _PREMERGE_SUFFIX)
+    hpath = spark._jvm.org.apache.hadoop.fs.Path
+    # Heal any rewrite's crash residue BEFORE reading the base: a
+    # partition parked mid-swap is the ONLY copy of its rows, and a
+    # merge touching it would otherwise delete them (ADVICE r10).
+    fs, root, tmp, _, children = _swap_paths(spark, path)
 
     base = spark.read.parquet(path)
     data_cols = [c for c in base.columns]
@@ -860,67 +840,47 @@ def merge_into_partitioned(
     survivors = affected_base.join(change_keys, on=keys, how="left_anti")
     merged = survivors.unionByName(upserts)
 
-    # 3. write the affected slice to a temp sibling, swap dirs by name.
-    # Spark itself names the temp partition dirs, so promotion works off
-    # a LISTING (no path re-interpolation — Hive escaping stays Spark's
-    # problem); only the base-side dir lookup parses names, with the
-    # same unquote discipline as delete_rows_partition_scoped.
-    tmp = path.rstrip("/") + "._merging"
-    fs.delete(hpath(tmp), True)
+    # 3. write the affected slice to the table's swap dir, promote dirs
+    # by name. Spark itself names the new partition dirs, so promotion
+    # works off a LISTING (no path re-interpolation — Hive escaping
+    # stays Spark's problem); only the base-side dir lookup parses
+    # names, with the same unquote discipline as
+    # delete_rows_partition_scoped.
     # repartition on the partition column: one file per rewritten dir
     # instead of one sliver per task per dir (the affected set is small
     # by CDC assumption; for a huge touch set use repartition(n, col))
     merged.repartition(partition_col).write.mode("overwrite").partitionBy(
         partition_col
-    ).parquet(tmp)
+    ).parquet(str(tmp))
 
     prefix = f"{partition_col}="
 
-    def _dir_by_value(root: str) -> dict:
+    def _dir_by_value(entries: dict) -> dict:
         out = {}
-        root_p = hpath(root)
-        if not fs.exists(root_p):
-            return out
-        for st in fs.listStatus(root_p):
-            name = st.getPath().getName()
-            if st.isDirectory() and name.startswith(prefix):
+        for name, st in entries.items():
+            if name.startswith(prefix) and st.isDirectory():
                 raw = name[len(prefix):]
                 val = None if raw == "__HIVE_DEFAULT_PARTITION__" else unquote(raw)
                 out[val] = st.getPath()
         return out
 
-    base_dirs = _dir_by_value(path)
-    new_dirs = _dir_by_value(tmp)
+    base_dirs = _dir_by_value(children)
+    new_dirs = _dir_by_value({st.getPath().getName(): st for st in fs.listStatus(tmp)})
     rewritten = deleted = 0
     for value in affected:
         sval = None if value is None else str(value)
         old = base_dirs.get(sval)
         new = new_dirs.get(sval)
         if new is not None:
-            dirname = new.getName()
-            target = hpath(_os.path.join(path, dirname))
-            # dot-prefixed aside: partition discovery ignores leading-dot
-            # dirs, so a crash between the two renames can never surface
-            # the parked copy as a bogus '<col>=<val>._premerge' partition
-            aside = hpath(_os.path.join(path, "." + dirname + _PREMERGE_SUFFIX))
-            # _heal_aside_residue resolved every pre-existing aside
-            # before the base read; any dir here is unreachable residue
-            # of THIS process (rename below would otherwise fail into it)
-            fs.delete(aside, True)
-            if old is not None and not fs.rename(old, aside):
-                raise IOError(f"merge swap failed: could not move {old} aside")
-            if not fs.rename(new, target):
-                if old is not None:
-                    fs.rename(aside, target)
-                raise IOError(f"merge swap failed: could not promote {new}")
-            if old is not None:
-                fs.delete(aside, True)
+            target = hpath(root, new.getName())
+            aside = _swap_dirs(hpath, root, new.getName())[1]
+            _commit_swap(fs, target, new, aside, str(target))
             rewritten += 1
         elif old is not None:
             # every row of this partition was deleted or moved away
             fs.delete(old, True)
             deleted += 1
-    fs.delete(hpath(tmp), True)
+    fs.delete(tmp, True)
     return {
         "partitions_rewritten": rewritten,
         "partitions_deleted": deleted,

@@ -16,16 +16,14 @@ def test_properties_file_layer(tmp_path):
     p = tmp_path / "engine.properties"
     p.write_text(
         "# engine deployment knobs\n"
-        "sf_dir=/data/sf1\n"
+        "sf_dir=/data/sf1=a=b\n"  # '=' inside a value survives
         "cpus=16\n"
         "driver_memory=32g\n"
-        "target_dir=/warehouse/covid=a=b\n"  # '=' inside a value survives
     )
     cfg = EngineConfig.resolve(properties_file=str(p), env={})
-    assert cfg.sf_dir == "/data/sf1"
+    assert cfg.sf_dir == "/data/sf1=a=b"
     assert cfg.cpus == 16
     assert cfg.driver_memory == "32g"
-    assert cfg.target_dir == "/warehouse/covid=a=b"
 
 
 def test_env_overrides_file(tmp_path):

@@ -734,8 +734,8 @@ def test_rebuild_refuses_concurrent_append(spark, tmp_path, monkeypatch):
     # succeeds and keeps the row
     ids = {r["vec_id"] for r in spark.read.parquet(path).collect()}
     assert any(i >= 100000 for i in ids), "refusal must not lose the append"
-    assert not os.path.exists(path + "._rebuilding")
-    assert not os.path.exists(path + "._prerebuild")
+    assert not os.path.exists(str(tmp_path / ".ivf._swap_new"))
+    assert not os.path.exists(str(tmp_path / ".ivf._swap_old"))
     monkeypatch.setattr(S, "_train_ivf_centers", real)
     stats = S.rebuild_ivf_index(spark, path)
     ids2 = {r["vec_id"] for r in spark.read.parquet(path).collect()}
@@ -778,8 +778,8 @@ def test_rebuild_refuses_append_racing_the_swap(spark, tmp_path, monkeypatch):
     # append, no leftover swap dirs, and an offline retry succeeds
     ids = {r["vec_id"] for r in spark.read.parquet(path).collect()}
     assert any(i >= 100000 for i in ids), "restore must keep the append"
-    assert not os.path.exists(path + "._rebuilding")
-    assert not os.path.exists(path + "._prerebuild")
+    assert not os.path.exists(str(tmp_path / ".ivf._swap_new"))
+    assert not os.path.exists(str(tmp_path / ".ivf._swap_old"))
     monkeypatch.setattr(tables, "_commit_swap", real)
     stats = S.rebuild_ivf_index(spark, path)
     ids2 = {r["vec_id"] for r in spark.read.parquet(path).collect()}
@@ -1214,8 +1214,8 @@ def test_maintain_window_index_refuses_racing_append(spark, tmp_path, monkeypatc
         D.maintain_window_index(spark, path)
     ids = {r["doc_id"] for r in spark.read.parquet(path).collect()}
     assert 999 in ids, "restore must keep the racing append"
-    assert not os.path.exists(path + "._maintaining")
-    assert not os.path.exists(path + "._premaintain")
+    assert not os.path.exists(str(tmp_path / ".raced_index._swap_new"))
+    assert not os.path.exists(str(tmp_path / ".raced_index._swap_old"))
     monkeypatch.setattr(tables, "_commit_swap", real)
     report = D.maintain_window_index(spark, path)
     assert report["dropped_duplicates"] == 0

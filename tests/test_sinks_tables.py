@@ -132,15 +132,15 @@ def test_compact_parquet_preserves_data(spark, tmp_path):
     assert n_after <= 4
     after = sorted(r["id"] for r in spark.read.parquet(path).collect())
     assert after == before
-    assert not os.path.exists(path + "._precompact")
-    assert not os.path.exists(path + "._compacting")
+    assert not os.path.exists(str(tmp_path / ".frag._swap_old"))
+    assert not os.path.exists(str(tmp_path / ".frag._swap_new"))
 
 
 def test_compact_parquet_recovers_from_crashed_run(spark, tmp_path):
-    """Stale '._compacting'/'._precompact' leftovers from a killed run
+    """Stale '._swap_new'/'._swap_old' leftovers from a killed run
     must not wedge every later compaction (rename-to-existing returns
     false); and a crash BETWEEN the two swap renames (live data sitting
-    at ._precompact, nothing at path) must be restored, not deleted."""
+    at ._swap_old, nothing at path) must be restored, not deleted."""
     import os
     import shutil
 
@@ -151,18 +151,18 @@ def test_compact_parquet_recovers_from_crashed_run(spark, tmp_path):
     before = sorted(r["id"] for r in spark.read.parquet(path).collect())
 
     # Case 1: both temp dirs left behind alongside intact live data.
-    os.makedirs(path + "._compacting/junk")
-    shutil.copytree(path, path + "._precompact")
+    os.makedirs(str(tmp_path / ".frag._swap_new/junk"))
+    shutil.copytree(path, str(tmp_path / ".frag._swap_old"))
     compact_parquet(spark, path, target_partitions=2)
     assert sorted(r["id"] for r in spark.read.parquet(path).collect()) == before
-    assert not os.path.exists(path + "._precompact")
-    assert not os.path.exists(path + "._compacting")
+    assert not os.path.exists(str(tmp_path / ".frag._swap_old"))
+    assert not os.path.exists(str(tmp_path / ".frag._swap_new"))
 
-    # Case 2: crash between the renames — data only at ._precompact.
-    os.rename(path, path + "._precompact")
+    # Case 2: crash between the renames — data only at ._swap_old.
+    os.rename(path, str(tmp_path / ".frag._swap_old"))
     compact_parquet(spark, path, target_partitions=2)
     assert sorted(r["id"] for r in spark.read.parquet(path).collect()) == before
-    assert not os.path.exists(path + "._precompact")
+    assert not os.path.exists(str(tmp_path / ".frag._swap_old"))
 
 
 def test_save_as_managed_table_roundtrip(spark):
@@ -605,9 +605,9 @@ def test_merge_into_partitioned_rejects_unknown_op(spark, tmp_path):
 def test_delete_restores_orphaned_predelete_aside(spark, tmp_path):
     """The delete-path twin of the merge heal (self-review r11): a crash
     between the aside-rename and the promote leaves the dot-prefixed
-    `.date=<val>._predelete` dir as the partition's ONLY copy. The next
+    `.date=<val>._swap_old` dir as the partition's ONLY copy. The next
     delete — whatever it targets — must restore it first; stray
-    `._deleting` rewrite outputs (recomputable) are dropped."""
+    `._swap_new` rewrite outputs (recomputable) are dropped."""
     import os
     import shutil
 
@@ -628,16 +628,16 @@ def test_delete_restores_orphaned_predelete_aside(spark, tmp_path):
     }
     # simulate the mid-swap crash: partition parked aside, target gone,
     # plus an abandoned rewrite-output temp dir
-    shutil.move(f"{path}/date=2020-01-01", f"{path}/.date=2020-01-01._predelete")
-    os.makedirs(f"{path}/.date=2020-01-01._deleting")
+    shutil.move(f"{path}/date=2020-01-01", f"{path}/.date=2020-01-01._swap_old")
+    os.makedirs(f"{path}/.date=2020-01-01._swap_new")
 
     n = delete_rows_partition_scoped(
         spark, path, "date",
         (F.col("doc_id") == 1) & (F.col("date") == "2020-01-02"),
     )
     assert n == 1
-    assert not os.path.exists(f"{path}/.date=2020-01-01._predelete")
-    assert not os.path.exists(f"{path}/.date=2020-01-01._deleting")
+    assert not os.path.exists(f"{path}/.date=2020-01-01._swap_old")
+    assert not os.path.exists(f"{path}/.date=2020-01-01._swap_new")
     restored = {
         r["doc_id"]
         for r in spark.read.parquet(path)
@@ -650,7 +650,7 @@ def test_delete_restores_orphaned_predelete_aside(spark, tmp_path):
 def test_delete_aside_dirs_never_surface_as_partitions(spark, tmp_path):
     """The swap's aside/tmp siblings are dot-prefixed: even with a
     parked copy present mid-crash, partition discovery must not read it
-    as a bogus `date=...._predelete` partition (the old non-dot names
+    as a bogus `date=...._swap_old` partition (the old non-dot names
     did exactly that)."""
     import shutil
 
@@ -662,7 +662,7 @@ def test_delete_aside_dirs_never_surface_as_partitions(spark, tmp_path):
         F.col("id").alias("doc_id"),
     ).write.partitionBy("date").parquet(path)
     # a parked copy AND the target present (the post-promote crash state)
-    shutil.copytree(f"{path}/date=2020-01-01", f"{path}/.date=2020-01-01._predelete")
+    shutil.copytree(f"{path}/date=2020-01-01", f"{path}/.date=2020-01-01._swap_old")
     back = spark.read.parquet(path)
     assert back.count() == 30, "dot-prefixed aside dir leaked into the scan"
     assert back.select("date").distinct().count() == 3
@@ -670,7 +670,7 @@ def test_delete_aside_dirs_never_surface_as_partitions(spark, tmp_path):
 
 def test_merge_restores_orphaned_premerge_aside(spark, tmp_path):
     """ADVICE r10 (medium): a crash between the aside-rename and the
-    promote leaves `.month=<val>._premerge` as the ONLY copy of that
+    promote leaves `.month=<val>._swap_old` as the ONLY copy of that
     partition (target dir missing). The next merge — even one touching
     OTHER partitions — must restore it before reading the base, never
     delete it as residue."""
@@ -688,7 +688,7 @@ def test_merge_restores_orphaned_premerge_aside(spark, tmp_path):
         for r in spark.read.parquet(path).filter(F.col("month") == "2020-01").collect()
     }
     # simulate the mid-swap crash: partition parked aside, target gone
-    shutil.move(f"{path}/month=2020-01", f"{path}/.month=2020-01._premerge")
+    shutil.move(f"{path}/month=2020-01", f"{path}/.month=2020-01._swap_old")
     assert not os.path.exists(f"{path}/month=2020-01")
 
     # a merge touching a DIFFERENT partition heals the orphan first
@@ -696,7 +696,7 @@ def test_merge_restores_orphaned_premerge_aside(spark, tmp_path):
         [("2020-02", 1, 111.0, "upsert")], "month string, k long, v double, op string"
     )
     merge_into_partitioned(spark, path, changes, keys=["k"], partition_col="month")
-    assert not os.path.exists(f"{path}/.month=2020-01._premerge")
+    assert not os.path.exists(f"{path}/.month=2020-01._swap_old")
     after = spark.read.parquet(path)
     restored_01 = {
         tuple(r) for r in after.filter(F.col("month") == "2020-01").collect()
@@ -718,7 +718,7 @@ def test_merge_heals_aside_touching_same_partition(spark, tmp_path):
 
     path = str(tmp_path / "facts")
     _merge_fixture(spark, path)
-    shutil.move(f"{path}/month=2020-01", f"{path}/.month=2020-01._premerge")
+    shutil.move(f"{path}/month=2020-01", f"{path}/.month=2020-01._swap_old")
 
     # month=2020-01 held k=0,3,6,9; update k=0, the rest must survive
     changes = spark.createDataFrame(
@@ -746,15 +746,69 @@ def test_merge_removes_aside_residue_when_target_present(spark, tmp_path):
     path = str(tmp_path / "facts")
     _merge_fixture(spark, path)
     # fabricate residue: a stale COPY parked aside, target still present
-    shutil.copytree(f"{path}/month=2020-01", f"{path}/.month=2020-01._premerge")
+    shutil.copytree(f"{path}/month=2020-01", f"{path}/.month=2020-01._swap_old")
 
     changes = spark.createDataFrame(
         [("2020-02", 1, 111.0, "upsert")], "month string, k long, v double, op string"
     )
     merge_into_partitioned(spark, path, changes, keys=["k"], partition_col="month")
-    assert not os.path.exists(f"{path}/.month=2020-01._premerge")
+    assert not os.path.exists(f"{path}/.month=2020-01._swap_old")
     back = spark.read.parquet(path)
     assert back.filter(F.col("month") == "2020-01").count() == 4  # no dup rows
+
+
+def test_delete_crash_residue_survives_a_merge_then_a_delete(spark, tmp_path):
+    """Crash residue is healed by whichever rewrite runs next, not only
+    by the operation that left it: a partition parked mid-swap by a
+    crashed delete must be restored by a following merge — so the
+    merge upserts INTO the restored rows — and must still be whole
+    after the next delete."""
+    import shutil
+
+    from pyspark.sql import functions as F
+
+    from nytimes_batch_processor_spark.tables import (
+        delete_rows_partition_scoped,
+        merge_into_partitioned,
+    )
+
+    path = str(tmp_path / "facts")
+    _merge_fixture(spark, path)
+    # month=2020-01 held k=0,3,6,9: park it as a crashed swap leaves it
+    shutil.move(f"{path}/month=2020-01", f"{path}/.month=2020-01._swap_old")
+
+    changes = spark.createDataFrame(
+        [("2020-01", 0, 999.0, "upsert")], "month string, k long, v double, op string"
+    )
+    merge_into_partitioned(spark, path, changes, keys=["k"], partition_col="month")
+    delete_rows_partition_scoped(spark, path, "month", F.col("k") == 1)
+    got = {
+        (r["k"], r["v"])
+        for r in spark.read.parquet(path).filter(F.col("month") == "2020-01").collect()
+    }
+    assert got == {(0, 999.0), (3, 30.0), (6, 60.0), (9, 90.0)}, got
+
+
+def test_compact_parquet_restores_a_parked_partition(spark, tmp_path):
+    """A whole-tree compaction heals per-partition crash residue before
+    it reads: a partition parked mid-swap is restored and compacted,
+    never moved aside with the old tree and deleted."""
+    import shutil
+
+    from pyspark.sql import functions as F
+
+    from nytimes_batch_processor_spark.tables import compact_parquet
+
+    path = str(tmp_path / "facts")
+    _merge_fixture(spark, path)
+    shutil.move(f"{path}/month=2020-01", f"{path}/.month=2020-01._swap_old")
+
+    compact_parquet(spark, path, 2)
+    got = {
+        (r["k"], r["v"])
+        for r in spark.read.parquet(path).filter(F.col("month") == "2020-01").collect()
+    }
+    assert got == {(0, 0.0), (3, 30.0), (6, 60.0), (9, 90.0)}, got
 
 
 def test_merge_into_partitioned_idempotent_replay(spark, tmp_path):

@@ -1942,20 +1942,20 @@ def test_compact_admitted_sink_preserves_markers(spark, tmp_path):
     # holds the (marked) data -> next run restores it before compacting
     import os as _os
 
-    _os.rename(f"{sink}/batch_id=2", f"{sink}/.compact_old_batch_id=2")
+    _os.rename(f"{sink}/batch_id=2", f"{sink}/.batch_id=2._swap_old")
     assert {r["batch_id"] for r in spark.read.parquet(sink).collect()} == {0, 1}
     # ...plus the two stale-leftover shapes: a tmp dir (always garbage)
     # and an old dir whose live partition exists (post-swap crash)
-    _os.makedirs(f"{sink}/.compact_tmp_batch_id=0")
-    _os.makedirs(f"{sink}/.compact_old_batch_id=1")
+    _os.makedirs(f"{sink}/.batch_id=0._swap_new")
+    _os.makedirs(f"{sink}/.batch_id=1._swap_old")
     compact_admitted_sink(spark, sink)
     assert sorted(
         (r["doc_id"], r["text"], r["batch_id"])
         for r in spark.read.parquet(sink).collect()
     ) == before
     assert job_commit_succeeded(spark, f"{sink}/batch_id=2")
-    assert not _os.path.exists(f"{sink}/.compact_tmp_batch_id=0")
-    assert not _os.path.exists(f"{sink}/.compact_old_batch_id=1")
+    assert not _os.path.exists(f"{sink}/.batch_id=0._swap_new")
+    assert not _os.path.exists(f"{sink}/.batch_id=1._swap_old")
 
 
 def test_compact_admitted_sink_files_after_is_recounted(spark, tmp_path):

@@ -134,3 +134,35 @@ def test_no_unpersist_of_local_checkpoints():
         "unpersist() of a localCheckpoint frees no blocks:\n"
         + "\n".join(offenders)
     )
+
+
+_SWAP_HELPERS = {"_swap_paths", "_commit_swap"}
+
+
+def test_renames_only_in_the_swap_helpers():
+    """Every rewrite-in-place replaces a directory through ONE protocol
+    (`tables._swap_paths` heals, `tables._commit_swap` promotes). A
+    hand-rolled rename elsewhere is a second copy of it, with its own
+    residue names that the one heal cannot see — so another operation
+    would later delete that residue as stale. Flags any ``.rename(``
+    call in the package outside those two functions."""
+    offenders = []
+    for path in SOURCES:
+        tree = ast.parse(path.read_text(), filename=str(path))
+        allowed: set[int] = set()
+        if path == PKG / "tables.py":
+            for fn in tree.body:
+                if isinstance(fn, ast.FunctionDef) and fn.name in _SWAP_HELPERS:
+                    allowed |= {id(n) for n in ast.walk(fn)}
+        offenders += [
+            f"{path.relative_to(REPO)}:{n.lineno}"
+            for n in ast.walk(tree)
+            if isinstance(n, ast.Call)
+            and isinstance(n.func, ast.Attribute)
+            and n.func.attr == "rename"
+            and id(n) not in allowed
+        ]
+    assert not offenders, (
+        "directory renames outside tables._swap_paths/_commit_swap:\n"
+        + "\n".join(offenders)
+    )

@@ -6,9 +6,10 @@ sorted by name, floats rounded to 6dp, dates normalized to ISO, rows
 order-insensitively. Usage: python tools/quick_verify.py name [name...]
 (no names = every entry in the upcoming sweep window)."""
 import datetime
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import duckdb
 
 import __spark_entry__ as E
