@@ -33,7 +33,9 @@ def foreach_batch_upsert(target_path: str, keys: list[str], *, has_county: bool)
     """Returns the foreachBatch function: type, dedup within the batch,
     anti-join upsert into the target — the W3 sink as a streaming sink.
     Replay safety comes from the upsert itself (existing keys always
-    win), so a retried micro-batch is a no-op regardless of batch_id."""
+    win), so a retried micro-batch is a no-op regardless of batch_id.
+    A row with a NULL key part fails its micro-batch before any write,
+    as in batch ingest."""
 
     def _apply(batch_df: DataFrame, batch_id: int) -> None:
         typed = parse_covid_rows(batch_df, has_county=has_county)

@@ -19,6 +19,7 @@ from __future__ import annotations
 
 import hashlib
 import logging
+import os
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql import types as T
@@ -261,6 +262,11 @@ def _detect_partitions_with_leaf(
 # partition discovery never lists them as data.
 _SWAP_NEW = "._swap_new"
 _SWAP_OLD = "._swap_old"
+# `ingest`'s delivery ledger at a target's root. A ledger hit lands
+# nothing, which is exact only while the table has gained keys since the
+# recorded delivery, so every operation that may remove rows deletes it
+# first (`_swap_paths`, `drop_partitions_older_than`).
+INGEST_LEDGER = "_ingest_ledger"
 
 
 def _swap_dirs(Path, parent, name: str):
@@ -279,9 +285,13 @@ def _swap_paths(spark: SparkSession, path: str):
     rewrites) — so whichever operation runs next heals every
     operation's residue, never just its own.
 
+    A delivery ledger (`INGEST_LEDGER`) in the root listing is deleted
+    before anything else: every caller may remove rows under ``path``.
+
     Returns ``(fs, live, new, old, children)``: the Hadoop paths of a
     whole-tree swap of ``path`` and ``{name: FileStatus}`` of its
-    healed root (residue excluded; empty when ``path`` is missing)."""
+    healed root (residue and ledger excluded; empty when ``path`` is
+    missing)."""
     Path = spark._jvm.org.apache.hadoop.fs.Path
     hpath = Path(path)
     fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
@@ -301,6 +311,8 @@ def _swap_paths(spark: SparkSession, path: str):
     if not live_exists:
         return fs, hpath, tmp, old, {}
     children = {st.getPath().getName(): st for st in fs.listStatus(hpath)}
+    if INGEST_LEDGER in children:
+        fs.delete(children.pop(INGEST_LEDGER).getPath(), False)
     residue = [
         n for n in children if n.startswith(".") and n.endswith((_SWAP_NEW, _SWAP_OLD))
     ]
@@ -626,6 +638,27 @@ def write_range_partitioned(
     )
 
 
+def _literal_dir(uri: str) -> str:
+    """The directory of the file at ``uri`` (an ``input_file_name()``
+    value) as a literal path string for Hadoop ``Path``. The URI path
+    is unquoted once to recover the literal name (a dir named
+    ``src=a b`` appears as ``src=a%20b``); the scheme and authority are
+    kept, or the rewrite would resolve against the default filesystem
+    for ``s3a://bucket/...`` or cross-namenode ``hdfs://`` datasets.
+    ``Path`` does not decode a string again, scheme-qualified or not
+    (``Path("s3a://b/src=a%20b").getName()`` is ``src=a%20b``), so the
+    literal is never re-quoted. The partition VALUE is unquoted a second
+    time by the caller, for the Hive escaping layer (a value ``a%b`` is
+    stored as dir ``a%25b``)."""
+    from urllib.parse import unquote, urlparse
+
+    p = urlparse(uri)
+    d = os.path.dirname(unquote(p.path))
+    if not p.scheme or p.scheme == "file":
+        return d
+    return f"{p.scheme}://{p.netloc}{d}"
+
+
 def delete_rows_partition_scoped(
     spark: SparkSession, path: str, partition_col: str, predicate
 ) -> int:
@@ -650,8 +683,7 @@ def delete_rows_partition_scoped(
     formats (Delta/Iceberg) do this transactionally; this is the
     format-free equivalent with per-partition atomicity.
     """
-    import os as _os
-    from urllib.parse import quote, unquote, urlparse
+    from urllib.parse import unquote
 
     hpath = spark._jvm.org.apache.hadoop.fs.Path
     # heal any rewrite's crash residue BEFORE reading: a partition
@@ -661,23 +693,6 @@ def delete_rows_partition_scoped(
     df = spark.read.parquet(path)
     matches = F.coalesce(predicate, F.lit(False))
     hits = df.filter(matches)
-    # input_file_name returns a URI: unquote the PATH once to recover the
-    # literal name (a dir named 'src=a b' appears as 'src=a%20b'), but
-    # KEEP the scheme/authority — dropping them would resolve the
-    # rewrite against the default filesystem for s3a://bucket/... or
-    # cross-namenode hdfs:// datasets. The partition VALUE below
-    # unquotes a second time for the Hive escaping layer (a value 'a%b'
-    # is stored as dir 'a%25b').
-    def _literal_dir(uri: str) -> str:
-        p = urlparse(uri)
-        d = _os.path.dirname(unquote(p.path))
-        if not p.scheme or p.scheme == "file":
-            # plain paths are NOT URI-parsed by Hadoop: pass the literal
-            return d
-        # scheme-qualified strings ARE URI-parsed (and %-decoded) again
-        # by Hadoop Path — re-quote so the literal name round-trips
-        return f"{p.scheme}://{p.netloc}{quote(d, safe='/')}"
-
     affected_dirs = sorted(
         {
             _literal_dir(r[0])
@@ -690,7 +705,7 @@ def delete_rows_partition_scoped(
     part_type = df.schema[partition_col].dataType
     prefix = f"{partition_col}="
     for part_dir in affected_dirs:
-        dirname = _os.path.basename(part_dir)
+        dirname = os.path.basename(part_dir)
         if not dirname.startswith(prefix):  # pragma: no cover - layout guard
             raise ValueError(f"unexpected partition directory layout: {part_dir}")
         raw = dirname[len(prefix):]
@@ -718,14 +733,15 @@ def drop_partitions_older_than(
     value sorts strictly below ``cutoff`` (ISO dates compare correctly as
     strings). Pure directory deletes — no data rewrite, O(partitions
     dropped) — the reference's append-forever table made finite.
-    Returns the dropped partition values."""
-    jvm = spark._jvm
-    root = jvm.org.apache.hadoop.fs.Path(path)
-    fs = root.getFileSystem(spark._jsc.hadoopConfiguration())
+    Returns the dropped partition values.
+
+    `_swap_paths` runs first: it deletes the delivery ledger before any
+    row goes, and restores a partition a crashed rewrite parked, so a
+    later heal cannot bring back a partition this call dropped."""
+    fs, _, _, _, children = _swap_paths(spark, path)
     dropped: list[str] = []
     prefix = f"{partition_col}="
-    for st in fs.listStatus(root):
-        name = st.getPath().getName()
+    for name, st in children.items():
         if st.isDirectory() and name.startswith(prefix):
             value = name[len(prefix):]
             if value < cutoff:

@@ -148,43 +148,61 @@ def test_upsert_corrupt_partition_file_raises_and_commits_nothing(
     assert _data_files(target) == before
 
 
-def test_redelivery_lists_target_once_with_bounded_tasks(spark, tmp_path, staging):
-    """The cron's common case as a counter gate: re-delivering the
-    snapshot that backfilled a 40-date target (past the 32-directory
-    distributed-listing threshold) lands nothing, runs at most 4 Spark
-    jobs and no job with more tasks than the cores. The target is listed
-    once, in one task per core, and not read again after the write."""
-    import datetime
-
-    from nytimes_batch_processor_spark.ingest import ingest_covid_csv
-
-    day0 = datetime.date(2020, 3, 1)
-    src = _write(staging, "backfill.csv", "date,state,fips,cases,deaths\n" + "".join(
-        f"{day0 + datetime.timedelta(days=d)},Washington,53,{d},0\n" for d in range(40)
-    ))
-    target = str(tmp_path / "covid_states")
-    ingest_covid_csv(spark, src, target, has_county=False)
-    rows = spark.read.parquet(target).count()
-    assert rows == 40
+def _job_tasks(spark, call) -> list[int]:
+    """Run ``call()`` in its own job group; tasks per Spark job it ran
+    (a stage a later job reuses, i.e. skipped, counts once)."""
+    import uuid
 
     sc = spark.sparkContext
-    group = "test-redelivery-counter-gate"
-    sc.setJobGroup(group, "re-delivery")
+    group = f"test-ingest-jobs-{uuid.uuid4()}"
+    sc.setJobGroup(group, "ingest call")
     try:
-        ingest_covid_csv(spark, src, target, has_county=False)
+        call()
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
-    assert spark.read.parquet(target).count() == rows
-
-    # tasks per job; a stage a later job reuses (skipped) counts once
     tracker, seen, tasks = sc.statusTracker(), set(), []
     for job in sorted(tracker.getJobIdsForGroup(group)):
         stages = set(tracker.getJobInfo(job).stageIds) - seen
         seen |= stages
         tasks.append(sum(tracker.getStageInfo(st).numTasks for st in stages))
+    return tasks
+
+
+def _days_csv(days: int) -> str:
+    import datetime
+
+    day0 = datetime.date(2020, 3, 1)
+    return "date,state,fips,cases,deaths\n" + "".join(
+        f"{day0 + datetime.timedelta(days=d)},Washington,53,{d},0\n" for d in range(days)
+    )
+
+
+def test_redelivery_lists_target_once_with_bounded_tasks(spark, tmp_path, staging):
+    """The cron's two tick kinds as a counter gate. Re-delivering the
+    snapshot that backfilled a 40-date target (past the 32-directory
+    distributed-listing threshold) is a ledger hit: it lands nothing and
+    runs no Spark job. A ledger miss (the same file grown by a 41st day)
+    lands the new day with at most 4 Spark jobs and no job with more
+    tasks than the cores: the target is listed once, in one task per
+    core, and not read again after the write."""
+    from nytimes_batch_processor_spark.ingest import ingest_covid_csv
+
+    src = _write(staging, "backfill.csv", _days_csv(40))
+    target = str(tmp_path / "covid_states")
+    ingest_covid_csv(spark, src, target, has_county=False)
+    rows = spark.read.parquet(target).count()
+    assert rows == 40
+
+    ingest = lambda: ingest_covid_csv(spark, src, target, has_county=False)  # noqa: E731
+    assert _job_tasks(spark, ingest) == []
+    assert spark.read.parquet(target).count() == rows
+
+    _write(staging, "backfill.csv", _days_csv(41))
+    tasks = _job_tasks(spark, ingest)
+    assert spark.read.parquet(target).count() == rows + 1
     assert 0 < len(tasks) <= 4, tasks
-    assert max(tasks) <= sc.defaultParallelism, tasks
+    assert max(tasks) <= spark.sparkContext.defaultParallelism, tasks
 
 
 def test_ingest_counties_schema(spark, tmp_path, staging):
@@ -660,3 +678,228 @@ def test_rollback_interior_batch_replays_fully_shadowed_batch(spark, tmp_path):
         (("2020-01-21", "Washington", 53), 1),
         (("2020-01-22", "Illinois", 17), 3),
     }, rows
+
+
+# ---------------------------------------------------------------------------
+# Delivery ledger (ingest._ingest_delivery) and the NULL-key guard
+# ---------------------------------------------------------------------------
+
+
+def _rows(spark, target):
+    return {tuple(r) for r in spark.read.parquet(str(target)).collect()}
+
+
+def _drop_ledger(target):
+    """Delete the ledger as a crash after the append's commit leaves it
+    (the Hadoop local filesystem keeps a ``.crc`` beside it)."""
+    import os
+
+    for name in ("_ingest_ledger", "._ingest_ledger.crc"):
+        if os.path.exists(f"{target}/{name}"):
+            os.remove(f"{target}/{name}")
+
+
+def test_null_key_parts_fail_every_delivery_and_write_nothing(spark, tmp_path, staging):
+    """A blank date or a blank state is a NULL key part. The equi
+    anti-join never matches NULL, so such rows used to land again on
+    every re-delivery (3 -> 5 -> 7 rows). Each delivery now raises
+    before anything is written, through either ingest call."""
+    from nytimes_batch_processor_spark.ingest import (
+        ingest_covid_csv,
+        ingest_covid_csv_audited,
+    )
+
+    target = tmp_path / "covid_states"
+    ingest_covid_csv(spark, _write(staging, "day1.csv", STATES_CSV), str(target),
+                     has_county=False)
+    before = _data_files(target)
+    bad = _write(staging, "nulls.csv", (
+        "date,state,fips,cases,deaths\n"
+        "2020-02-01,Ohio,39,1,0\n"
+        ",Ohio,39,2,0\n"
+        "2020-02-02,,39,3,0\n"
+    ))
+    for _ in range(3):
+        with pytest.raises(Exception, match="NULL key part"):
+            ingest_covid_csv(spark, bad, str(target), has_county=False)
+        assert _data_files(target) == before
+    assert spark.read.parquet(str(target)).count() == 4
+
+    audited = tmp_path / "audited"
+    with pytest.raises(Exception, match="NULL key part"):
+        ingest_covid_csv_audited(spark, bad, str(audited), batch_id=1, has_county=False)
+    assert not _data_files(audited)
+
+
+def test_upsert_heals_a_parked_partition_before_reading(spark, tmp_path, staging):
+    """A crashed rollback parks ``date=X`` at ``.date=X._swap_old``. The
+    next delivery that misses must restore it before its anti-join, so
+    the parked rows come back once and keep their first-written values;
+    unhealed, the delivery re-landed them as a live ``date=X`` and the
+    next heal deleted the parked copy."""
+    import os
+
+    from nytimes_batch_processor_spark.ingest import ingest_covid_csv
+
+    target = tmp_path / "covid_states"
+    ingest_covid_csv(spark, _write(staging, "day1.csv", STATES_CSV), str(target),
+                     has_county=False)
+    before = _rows(spark, target)
+    os.rename(target / "date=2020-01-22", target / ".date=2020-01-22._swap_old")
+    # the miss re-delivers 2020-01-22 with other values, plus new keys
+    ingest_covid_csv(spark, _write(staging, "day2.csv", STATES_CSV_DAY2), str(target),
+                     has_county=False)
+    after = _rows(spark, target)
+    assert before <= after and len(after) == len(before) + 2
+    assert not os.path.exists(target / ".date=2020-01-22._swap_old")
+
+
+def test_ledger_hit_on_refetched_identical_bytes(spark, tmp_path, staging):
+    """Re-staging the same bytes through fetch_to_staging gives the file
+    a new mtime; the content fingerprint still matches, so the call runs
+    no Spark job, lands nothing and reports the full path's counters."""
+    import os
+
+    from nytimes_batch_processor_spark.ingest import ingest_covid_csv
+    from nytimes_batch_processor_spark.sources import fetch_to_staging
+
+    url = f"file://{_write(staging, 'us-states.csv', STATES_CSV)}"
+    staged = fetch_to_staging(url, str(tmp_path / "staged"))
+    target = str(tmp_path / "covid_states")
+    full: dict = {}
+    ingest_covid_csv(spark, staged, target, has_county=False, metrics_out=full)
+    rows = _rows(spark, target)
+
+    mtime = os.stat(staged).st_mtime_ns
+    os.utime(staged, ns=(mtime - 10**9, mtime - 10**9))
+    fetch_to_staging(url, str(tmp_path / "staged"))
+    assert os.stat(staged).st_mtime_ns != mtime - 10**9
+    hit: dict = {}
+    assert _job_tasks(spark, lambda: ingest_covid_csv(
+        spark, staged, target, has_county=False, metrics_out=hit)) == []
+    assert hit == full == {"batch_rows": 4, "null_fips_rows": 1, "null_date_rows": 0}
+    assert _rows(spark, target) == rows
+
+
+def test_ledger_miss_on_equal_length_one_byte_change(spark, tmp_path, staging):
+    from nytimes_batch_processor_spark.ingest import ingest_covid_csv
+
+    src = _write(staging, "day1.csv", STATES_CSV)
+    target = str(tmp_path / "covid_states")
+    ingest_covid_csv(spark, src, target, has_county=False)
+    changed = STATES_CSV.replace("Illinois", "Illinoiz")
+    assert len(changed) == len(STATES_CSV)
+    _write(staging, "day1.csv", changed)
+    assert _job_tasks(spark, lambda: ingest_covid_csv(
+        spark, src, target, has_county=False))
+    got = {(str(r["date"]), r["state"]) for r in spark.read.parquet(target).collect()}
+    assert ("2020-01-22", "Illinoiz") in got and len(got) == 5
+
+
+@pytest.mark.parametrize("damage", ["garbage", "deleted"])
+def test_damaged_ledger_misses_lands_nothing_and_is_rewritten(
+    spark, tmp_path, staging, damage
+):
+    """A torn record (garbage) or none at all (a crash after the append
+    committed) is a miss: the full path re-runs, lands nothing new, and
+    writes the record again, so the next re-delivery hits."""
+    from nytimes_batch_processor_spark.ingest import ingest_covid_csv
+
+    src = _write(staging, "day1.csv", STATES_CSV)
+    target = str(tmp_path / "covid_states")
+    ingest_covid_csv(spark, src, target, has_county=False)
+    rows = _rows(spark, target)
+    _drop_ledger(target)
+    if damage == "garbage":
+        with open(f"{target}/_ingest_ledger", "w") as f:
+            f.write('{"variant": "plain", "files": [')
+    ingest = lambda: ingest_covid_csv(spark, src, target, has_county=False)  # noqa: E731
+    assert _job_tasks(spark, ingest)
+    assert _rows(spark, target) == rows
+    assert _job_tasks(spark, ingest) == []
+
+
+def test_ledger_miss_on_a_file_added_to_a_directory_delivery(spark, tmp_path):
+    from nytimes_batch_processor_spark.ingest import ingest_covid_csv_audited
+
+    drop = tmp_path / "drop"
+    drop.mkdir()
+    (drop / "day1.csv").write_text(STATES_CSV)
+    target = str(tmp_path / "audited")
+    ingest = lambda b: ingest_covid_csv_audited(  # noqa: E731
+        spark, str(drop), target, batch_id=b, has_county=False)
+    ingest(1)
+    assert _job_tasks(spark, lambda: ingest(2)) == []
+    (drop / "day2.csv").write_text(STATES_CSV_DAY2)
+    assert _job_tasks(spark, lambda: ingest(3))
+    got = {r["batch_id"] for r in spark.read.parquet(target).collect()}
+    assert got == {1, 3} and spark.read.parquet(target).count() == 6
+
+
+def _audited_batches(spark, tmp_path, target):
+    """Three audited batches into ``target``; the replay sources of the
+    later ones."""
+    csv_b3 = STATES_CSV_DAY2 + "2020-02-01,Ohio,39,9,0\n"
+    dirs = {}
+    for i, text in ((1, STATES_CSV), (2, STATES_CSV_DAY2), (3, csv_b3)):
+        d = tmp_path / f"b{i}"
+        d.mkdir(exist_ok=True)
+        (d / "drop.csv").write_text(text)
+        dirs[i] = str(d)
+    from nytimes_batch_processor_spark.ingest import ingest_covid_csv_audited
+
+    for i, d in dirs.items():
+        ingest_covid_csv_audited(spark, d, target, batch_id=i, has_county=False)
+    return dirs
+
+
+def _apply_row_op(spark, op, target, dirs):
+    from pyspark.sql import functions as F
+
+    from nytimes_batch_processor_spark import ingest, tables
+
+    if op == "rollback_ingest_batch":
+        ingest.rollback_ingest_batch(spark, target, 3)
+    elif op == "rollback_interior_batch":
+        ingest.rollback_interior_batch(spark, target, 2, {3: dirs[3]}, has_county=False)
+    elif op == "delete_rows_partition_scoped":
+        tables.delete_rows_partition_scoped(
+            spark, target, "date", F.col("state") == "Washington")
+    elif op == "merge_into_partitioned":
+        guam = spark.read.parquet(target).filter(F.col("state") == "Guam")
+        tables.merge_into_partitioned(
+            spark, target, guam.withColumn("op", F.lit("delete")),
+            keys=["date", "state", "fips"], partition_col="date")
+    elif op == "drop_partitions_older_than":
+        tables.drop_partitions_older_than(spark, target, "date", "2020-12-31")
+    else:
+        tables.compact_parquet(spark, target, 1)
+
+
+_ROW_OPS = (
+    "rollback_ingest_batch", "rollback_interior_batch", "delete_rows_partition_scoped",
+    "merge_into_partitioned", "drop_partitions_older_than", "compact_parquet",
+)
+
+
+@pytest.mark.parametrize("op", _ROW_OPS)
+def test_redelivery_after_row_operation_equals_a_ledgerless_target(spark, tmp_path, op):
+    """Every operation that can remove rows deletes the ledger first, so
+    re-delivering the last delivery after it lands exactly what a target
+    without a ledger lands: T1 keeps whatever the operation left of its
+    ledger, T2's is deleted by hand, and both must end with the same
+    rows."""
+    from nytimes_batch_processor_spark.ingest import ingest_covid_csv_audited
+
+    targets = [str(tmp_path / "t1"), str(tmp_path / "t2")]
+    for t in targets:
+        dirs = _audited_batches(spark, tmp_path, t)
+    before = _rows(spark, targets[0])
+    for t in targets:
+        _apply_row_op(spark, op, t, dirs)
+    if op != "compact_parquet":  # the operation changed the rows
+        assert _rows(spark, targets[0]) != before
+    _drop_ledger(targets[1])
+    for t in targets:
+        ingest_covid_csv_audited(spark, dirs[3], t, batch_id=3, has_county=False)
+    assert _rows(spark, targets[0]) == _rows(spark, targets[1])

@@ -10,6 +10,8 @@ from __future__ import annotations
 import os
 import sqlite3
 
+import pytest
+
 from pyspark.sql import functions as F
 
 SCHEMA = "date string, state string, fips int, cases long, deaths long"
@@ -379,6 +381,20 @@ def test_delete_rows_keeps_null_predicate_rows(spark, tmp_path):
     assert remaining == {(1, "alice"), (2, None), (5, "bob")}, remaining
     # escaped partition dir (src='a b' -> src=a%20b) survived the rewrite
     assert back.filter(F.col("src") == "a b").count() == 2
+
+
+@pytest.mark.parametrize("scheme", ["s3a://bk", "hdfs://nn:8020", "file://"])
+def test_literal_dir_names_the_partition_dir_on_any_scheme(spark, scheme):
+    """``input_file_name()`` quotes a dir named ``src=a b`` as
+    ``src=a%20b``. Hadoop ``Path`` does not decode a string, so the
+    delete must hand it the literal name on every scheme: a re-quoted
+    ``src=a%20b`` would address a dir whose name is ``src=a%2520b``."""
+    from nytimes_batch_processor_spark.tables import _literal_dir
+
+    d = _literal_dir(f"{scheme}/x/src=a%20b/part-0.parquet")
+    path = spark._jvm.org.apache.hadoop.fs.Path(d)
+    assert path.getName() == "src=a b"
+    assert path.getParent().toUri().getPath() == "/x"
 
 
 def test_save_as_managed_table_catalog_qualified(spark):
