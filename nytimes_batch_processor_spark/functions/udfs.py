@@ -79,62 +79,48 @@ def _plan_is_narrow(df: DataFrame) -> bool:
 
 
 def spread_for_python(df: DataFrame) -> DataFrame:
-    """Parallelism guard for Python hot paths (r17, ONE shared copy —
-    used by the BPE encode and the multimodal mapInPandas chains): a
-    small corpus (one parquet file) scans as ONE partition, which
-    serializes the entire mapInPandas stage onto a single core — the
-    `semdedup_assigned` single-partition class. The spread is
-    CONDITIONAL: round-robin repartition to session parallelism only
-    when the input's partitioning is below it, so a production-scale
-    scan (thousands of input splits) flows through with ZERO added
-    exchange while the degenerate small scan fans out. Map-only
-    consumers see identical values either way.
+    """Parallelism guard for the Python hot paths (the BPE encode and
+    the multimodal mapInPandas chains): a small corpus (one parquet
+    file) scans as one partition, which serializes the whole
+    mapInPandas stage onto a single core. The spread is conditional:
+    round-robin repartition to session parallelism only when the
+    input's partitioning is below it, so a production-scale scan
+    (thousands of input splits) flows through with no added exchange
+    while the degenerate small scan fans out. Map-only consumers see
+    identical values either way.
 
-    The width probe deliberately avoids ``df.rdd`` (ADVICE r17): under
-    AQE, materializing the RDD finalizes the physical plan and eagerly
-    EXECUTES any upstream shuffle stages — fine for the scan-rooted
-    map-only frames this guard serves, but a silent double-execution
-    trap for any future caller with a shuffle upstream. Instead the
-    probe works from the scan's input-file LISTING (`inputFiles`, pure
-    metadata, never runs the plan), refined per ADVICE r18 #1 — raw
-    file COUNT under-estimates scan width because Spark splits large
-    splittable (parquet) files, so a few-big-files scan used to eat a
-    redundant full round-robin exchange:
+    The width probe avoids ``df.rdd``: under AQE, materializing the RDD
+    finalizes the physical plan and executes any upstream shuffle
+    stages, a double execution for a caller with a shuffle upstream. It
+    works from the scan's input-file listing (`inputFiles`, metadata
+    only) instead, and does not trust the raw file count, which
+    under-estimates the width of a scan Spark splits:
 
-    - ``files >= parallelism``: pass through with no further work —
-      every file yields at least one partition, so the scan is already
-      wide (this is the production path: thousands of splits, zero
-      driver-side stats).
-    - ``files < parallelism``: stat those few files (bounded by
-      parallelism, so a handful of driver-side FS calls) and replay
-      Spark's own split-packing estimate
-      (``FilePartition.maxSplitBytes``): maxSplit = min(
-      maxPartitionBytes, max(openCostInBytes, paddedBytes/parallelism))
-      with paddedBytes = bytes + openCost per file; estimated
-      partitions = ceil(paddedBytes / maxSplit). Spread only when the
-      ESTIMATE is under parallelism — a scan of a few large files that
-      Spark will split 32 ways flows through untouched.
-    - no input files (non-file-rooted — e.g. an in-memory local
-      relation): classify by WALKING the ANALYZED logical plan's node
-      names (py4j tree walk; never optimizes or executes — ADVICE r19
-      #1 replaced the r19-draft regex over the plan's string render,
-      whose word-boundary match false-positived on a column ALIAS
-      named `Join`/`Sort` and whose blacklist missed shuffle-inducing
-      nodes like FlatMapGroupsInPandas, sending them to the `.rdd`
-      probe — the double-execution trap under AQE). The classifier is
-      a WHITELIST of known-narrow nodes (project/filter/local-
-      relation/coalesce …): only a tree that is narrow END TO END has
-      no upstream query stages, so there `.rdd` is execution-free and
-      the probe reads the true width, fanning out the degenerate
-      single-slice case the guard exists for (pinned by
-      test_bpe_counts_fans_out_degenerate_scans). ANY other node —
-      shuffle-inducing or merely unknown — passes through: its width
-      is already the session shuffle-partition count (or unknowable
-      without executing), and a round-robin repartition could only
-      SHRINK it (the r18 advice's last case).
+    - ``files >= parallelism``: pass through; every file yields at
+      least one partition, so the scan is already wide (the production
+      path: no driver-side stats).
+    - ``files < parallelism``: stat those few files and replay Spark's
+      own split packing (``FilePartition.maxSplitBytes``): maxSplit =
+      min(maxPartitionBytes, max(openCostInBytes,
+      paddedBytes/parallelism)) with paddedBytes = bytes + openCost
+      per file; estimated partitions = ceil(paddedBytes / maxSplit).
+      Spread only when the estimate is under parallelism, so a scan of
+      a few large files that Spark splits 32 ways flows through.
+    - no input files (non-file-rooted, e.g. an in-memory local
+      relation): walk the analyzed logical plan's node names (py4j tree
+      walk; never optimizes or executes). The classifier is a whitelist
+      of known-narrow nodes (project/filter/local-relation/coalesce …):
+      only a tree narrow end to end has no upstream query stages, so
+      there ``.rdd`` is execution-free and reads the true width, fanning
+      out the degenerate single-slice case (pinned by
+      test_bpe_counts_fans_out_degenerate_scans). Any other node passes
+      through: its width is already the session shuffle-partition count
+      (or unknowable without executing), and a round-robin repartition
+      could only shrink it. A regex over the plan's string render is no
+      substitute: it matches a column alias named `Join`/`Sort`.
 
     Residual: a post-shuffle frame rooted in tiny leaf files still
-    spreads, costing one exchange — but only when total listed bytes
+    spreads, costing one exchange, but only when total listed bytes
     are under ~openCost*parallelism (~128 MiB), where the exchange is
     noise. Values are identical on every path (map-only consumers)."""
     sc = df.sparkSession.sparkContext
@@ -148,12 +134,12 @@ def spread_for_python(df: DataFrame) -> DataFrame:
         return df
     if len(files) >= par:
         return df
-    jvm = sc._jvm
-    hconf = sc._jsc.hadoopConfiguration()
+    from ..tables import _hfs
+
     total = 0
     for uri in files:
-        p = jvm.org.apache.hadoop.fs.Path(uri)
-        total += p.getFileSystem(hconf).getFileStatus(p).getLen()
+        fs, p = _hfs(df.sparkSession, uri)
+        total += fs.getFileStatus(p).getLen()
     conf = df.sparkSession._jsparkSession.sessionState().conf()
     open_cost = conf.filesOpenCostInBytes()
     padded = total + open_cost * len(files)

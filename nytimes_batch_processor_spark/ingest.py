@@ -44,7 +44,6 @@ grown file should parse only its new suffix.
 
 from __future__ import annotations
 
-import json
 import os
 import tempfile
 from collections.abc import Callable
@@ -58,8 +57,11 @@ from .sources import load_tables, read_csv
 from .tables import (
     INGEST_LEDGER,
     _commit_swap,
+    _hfs,
+    _read_json,
     _swap_dirs,
     _swap_paths,
+    _write_json,
     delete_rows_partition_scoped,
 )
 
@@ -94,47 +96,52 @@ def first_write_wins(df: DataFrame, keys: list[str], arrival_col: str) -> DataFr
     return df.withColumn("_rn", rn).filter("_rn = 1").drop("_rn")
 
 
-def target_exists(spark: SparkSession, target_path: str) -> bool:
-    """Existence check through the Hadoop FileSystem API, so it works on
-    any supported filesystem (local, HDFS, object stores) — not just
-    local paths."""
-    jvm = spark._jvm
-    path = jvm.org.apache.hadoop.fs.Path(target_path)
-    fs = path.getFileSystem(spark._jsc.hadoopConfiguration())
-    return bool(fs.exists(path))
+def typed_batch(
+    raw: DataFrame, keys: list[str], *, has_county: bool, lineage: dict | None = None
+) -> DataFrame:
+    """One NYT batch typed and deduplicated, the chain every ingest path
+    shares: arrival order stamped on the raw rows, the P1-P5 parse, the
+    P5 null-fips sentinel (-1, so a NULL fips takes part in the key as
+    in Postgres' unique index, …kt:133,171), then W3 first write per
+    key. ``lineage`` maps extra column names to expressions computed on
+    the raw rows and carried through (the audited ingest's source file
+    and batch id)."""
+    raw = raw.withColumn("_arrival", F.monotonically_increasing_id())
+    if lineage:
+        raw = raw.withColumns(lineage)
+    typed = parse_covid_rows(
+        raw, has_county=has_county, passthrough=("_arrival", *(lineage or ()))
+    )
+    typed = typed.withColumn("fips", F.expr("coalesce(fips, -1)"))
+    return first_write_wins(typed, keys, "_arrival").drop("_arrival")
 
 
 def job_commit_succeeded(spark: SparkSession, path: str) -> bool:
     """True iff a Spark write to ``path`` ran its job commit to
-    completion — i.e. the ``_SUCCESS`` marker exists. This is the ONLY
+    completion, i.e. the ``_SUCCESS`` marker exists. This is the only
     safe 'already written' test for an idempotent sink partition:
 
     - a dir holding only ``_temporary`` contents (crash mid-task) has
       no marker -> rewrite;
-    - a dir holding SOME part files but no marker (crash mid-JOB-commit,
+    - a dir holding some part files but no marker (crash mid-job-commit,
       after the committer moved task 1's output but before task 2's)
-      has no marker -> rewrite. The earlier draft checked for 'any
-      committed-looking data file', which called this half-published
-      state done and permanently dropped the missing tasks' rows
-      (self-review r14);
+      has no marker -> rewrite. A test for 'any committed-looking data
+      file' would call this half-published state done and drop the
+      missing tasks' rows for good;
     - a fully committed dir (marker present) -> skip.
 
     If ``mapreduce.fileoutputcommitter.marksuccessfuljobs`` is disabled
-    the marker never appears and every replay rewrites — wasted work,
+    the marker never appears and every replay rewrites: wasted work,
     never lost rows (the overwrite is deterministic), which is the
     right failure direction for an exactly-once sink."""
-    jvm = spark._jvm
-    p = jvm.org.apache.hadoop.fs.Path(f"{path.rstrip('/')}/_SUCCESS")
-    fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
+    fs, p = _hfs(spark, f"{path.rstrip('/')}/_SUCCESS")
     return bool(fs.exists(p))
 
 
 def _flat_data_files_at_root(spark: SparkSession, path: str) -> bool:
     """True iff ``path`` holds non-hidden data FILES directly at its
     root — flat data a ``batch_id=`` partitioned sink must not mix with."""
-    jvm = spark._jvm
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
+    fs, p = _hfs(spark, path)
     if not fs.exists(p):
         return False
     for st in fs.listStatus(p):
@@ -353,13 +360,11 @@ def _delivery_files(spark: SparkSession, src_path: str) -> list | None:
     reads, so an extra file can only cause a miss). Hashed in the JVM
     over the Hadoop stream: no Spark job, any Hadoop filesystem. None
     when ``src_path`` matches nothing, which never hits."""
-    jvm = spark._jvm
-    pattern = jvm.org.apache.hadoop.fs.Path(src_path)
-    fs = pattern.getFileSystem(spark._jsc.hadoopConfiguration())
+    fs, pattern = _hfs(spark, src_path)
     matches = fs.globStatus(pattern)
     if not matches:
         return None
-    sha256 = jvm.org.apache.commons.codec.digest.DigestUtils.sha256Hex
+    sha256 = spark._jvm.org.apache.commons.codec.digest.DigestUtils.sha256Hex
     out = []
 
     def add(st) -> None:
@@ -379,22 +384,12 @@ def _delivery_files(spark: SparkSession, src_path: str) -> list | None:
     return sorted(out)
 
 
-def _ledger(spark: SparkSession, target_path: str):
-    """``(fs, path)`` of the target's delivery ledger."""
-    p = spark._jvm.org.apache.hadoop.fs.Path(target_path, INGEST_LEDGER)
-    return p.getFileSystem(spark._jsc.hadoopConfiguration()), p
-
-
-def _read_ledger(spark: SparkSession, target_path: str):
-    """The ledger record, or None when it is missing or unreadable."""
-    fs, p = _ledger(spark, target_path)
+def _read_ledger(spark: SparkSession, ledger: str):
+    """The ledger record at ``ledger``, or None when it is missing,
+    unreadable or not JSON. Each of those is a miss, and a miss only
+    costs one full-path call, which is exact."""
     try:
-        stream = fs.open(p)
-        try:
-            text = spark._jvm.org.apache.commons.io.IOUtils.toString(stream, "UTF-8")
-            return json.loads(text)
-        finally:
-            stream.close()
+        return _read_json(spark, ledger)
     except (Py4JJavaError, ValueError):
         return None
 
@@ -419,9 +414,10 @@ def _ingest_delivery(
     foreign record is a miss, so a crash before the record is written
     costs one full-path call and never loses a row."""
     keys = schemas.COVID_COUNTIES_KEYS if has_county else schemas.COVID_STATES_KEYS
+    ledger = f"{target_path.rstrip('/')}/{INGEST_LEDGER}"
     files = _delivery_files(spark, src_path)
     entry = {"variant": variant, "has_county": has_county, "keys": keys, "files": files}
-    record = _read_ledger(spark, target_path)
+    record = _read_ledger(spark, ledger)
     if (
         files is not None
         and isinstance(record, dict)
@@ -444,12 +440,7 @@ def _ingest_delivery(
     upsert_append(rows, target_path, keys)
     metrics = dict(obs.get)
     if files is not None and _delivery_files(spark, src_path) == files:
-        fs, p = _ledger(spark, target_path)
-        out = fs.create(p, True)
-        try:
-            out.write(bytearray(json.dumps({**entry, "metrics": metrics}).encode()))
-        finally:
-            out.close()
+        _write_json(spark, ledger, {**entry, "metrics": metrics})
     if metrics_out is not None:
         metrics_out.update(metrics)
 
@@ -487,14 +478,7 @@ def ingest_covid_csv(
     keys = schemas.COVID_COUNTIES_KEYS if has_county else schemas.COVID_STATES_KEYS
 
     def deduped() -> DataFrame:
-        raw = read_csv(spark, src_path, schema).withColumn(
-            "_arrival", F.monotonically_increasing_id()
-        )
-        typed = parse_covid_rows(raw, has_county=has_county, passthrough=("_arrival",))
-        # P5: null fips -> -1 sentinel so it participates in the unique key
-        # (Postgres unique indexes treat NULLs as distinct; …kt:133,171).
-        typed = typed.withColumn("fips", F.expr("coalesce(fips, -1)"))
-        return first_write_wins(typed, keys, "_arrival").drop("_arrival")
+        return typed_batch(read_csv(spark, src_path, schema), keys, has_county=has_county)
 
     _ingest_delivery(
         spark, src_path, target_path, variant="plain", has_county=has_county,
@@ -613,8 +597,8 @@ def ingest_covid_csv_audited(
     batch_id: int,
     has_county: bool,
 ) -> None:
-    """The ingest chain with LINEAGE/AUDIT columns (O3 made queryable —
-    VERDICT r9 item 4b): every row written to the target carries
+    """The ingest chain with lineage/audit columns (O3 made queryable):
+    every row written to the target carries
 
     - ``source_file``: basename of the CSV file the row came from,
       captured at scan time via ``input_file_name()`` — per-ROW file
@@ -640,19 +624,13 @@ def ingest_covid_csv_audited(
     keys = schemas.COVID_COUNTIES_KEYS if has_county else schemas.COVID_STATES_KEYS
 
     def deduped() -> DataFrame:
-        raw = read_csv(spark, src_path, schema).withColumns(
-            {
-                "_arrival": F.monotonically_increasing_id(),
-                "source_file": F.regexp_extract(F.input_file_name(), r"([^/]+)$", 1),
-            }
+        lineage = {
+            "source_file": F.regexp_extract(F.input_file_name(), r"([^/]+)$", 1),
+            "batch_id": F.lit(batch_id).cast("int"),
+        }
+        return typed_batch(
+            read_csv(spark, src_path, schema), keys, has_county=has_county, lineage=lineage
         )
-        typed = parse_covid_rows(
-            raw, has_county=has_county, passthrough=("_arrival", "source_file")
-        )
-        typed = typed.withColumns(
-            {"fips": F.expr("coalesce(fips, -1)"), "batch_id": F.lit(batch_id).cast("int")}
-        )
-        return first_write_wins(typed, keys, "_arrival").drop("_arrival")
 
     _ingest_delivery(
         spark, src_path, target_path, variant="audited", has_county=has_county,

@@ -1544,58 +1544,39 @@ def dedup_shingle_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
 _CONTAIN_NUM, _CONTAIN_DEN = 7, 10
 
 
-def containment_prefix_candidates(
-    sh: DataFrame, num: int = _CONTAIN_NUM, den: int = _CONTAIN_DEN
-) -> DataFrame:
-    """The candidate subplan of `containment_prefix_pairs`: distinct
-    directed (id_src, id_dst) pairs sharing >= 1 probe-prefix shingle
-    at containment threshold num/den (a RATIONAL — the integer prefix
-    bound must never pass through a float). Factored out so
-    tools/scale_bench.py counts the EXACT candidate set the operator
-    joins (no copy to drift).
-
-    Beyond the bare prefix filter, two zero-recall-loss prunes (VERDICT
-    r8 item 3, the AllPairs/PPJoin length + positional bounds —
-    measured together 484,838 -> 301,538 candidates (1.6x) at the
-    scale gate's x1 corpus, pairs exactly unchanged at 512. Honest
-    ceiling, also measured: adding the last-match bound
-    (overlap <= #prefix-matches + min-remaining-suffix) prunes ZERO
-    further candidates here — the residual mass is pairs of
-    similar-size docs sharing one rare shingle EARLY in both prefixes,
-    where every O(1)-evidence upper bound degenerates to ~n; cutting
-    deeper requires suffix probing (PPJoin+), whose per-pair binary
-    search does not decompose into a relational join and would buy at
-    most the 1.6x-pruned verify step this already has):
-
-    - LENGTH filter, in the join condition (prunes before the
-      candidate shuffle): the overlap can never exceed |S(dst)|, so
-      C(src->dst) >= num/den needs n_dst*den >= num*n_src — integer
-      form of n_dst >= ceil(num*n_src/den).
-    - POSITIONAL filter, per pair (PPJoin ubound): both docs' shingles
-      carry their rank i/j in the SAME global rarest-first total order
-      (df, s), so at the pair's FIRST prefix match (minimal i) no
-      earlier-ordered shingle can be shared (an earlier shared shingle
-      would itself be a prefix match — prefixes are order-downward
-      closed), hence overlap <= 1 + min(n_src - i, n_dst - j); pairs
-      whose upper bound misses req = ceil(num*n_src/den) are dropped
-      before the array_intersect verification."""
-    return containment_prefix_plan(sh, num, den)[0]
-
-
 def containment_prefix_plan(
     sh: DataFrame, num: int = _CONTAIN_NUM, den: int = _CONTAIN_DEN
 ) -> tuple[DataFrame, DataFrame]:
-    """(candidates, verified pairs) built over ONE shared checkpointed
-    rank table — callers needing both (tools/scale_bench.py counts the
-    candidate set AND the pair set) must use this instead of calling
-    the two wrappers separately, which would materialize the rank
-    checkpoint twice. Scale-gate walls for the full
-    count(candidates)+count(pairs) workload at x1/x10 (seconds):
-    r8 bare prefix 4.6/14.3 -> r9 prune, pos per-wrapper 6.7/19.1 ->
-    r9 prune, shared pos 5.5/15.3 — the prune costs ~1s of rank
-    checkpoint at x1 and buys 1.6x fewer array_intersect
-    verifications; reused (warm pos), the pruned form measures 2.7s
-    against 4.6s bare."""
+    """(candidates, verified pairs) of the containment prefix join at
+    threshold num/den (a rational: the integer prefix bound never
+    passes through a float), built over one shared checkpointed rank
+    table. Candidates are the distinct directed (id_src, id_dst) pairs
+    sharing >= 1 probe-prefix shingle that pass two zero-recall-loss
+    prunes (the AllPairs/PPJoin length and positional bounds):
+
+    - length, in the join condition (prunes before the candidate
+      shuffle): the overlap never exceeds |S(dst)|, so C(src->dst) >=
+      num/den needs n_dst*den >= num*n_src;
+    - positional, per pair (PPJoin ubound): both docs rank their
+      shingles i/j in the same global rarest-first order (df, s), so at
+      the pair's first prefix match no earlier shingle can be shared
+      (prefixes are order-downward closed), hence overlap <= 1 +
+      min(n_src - i, n_dst - j); pairs whose bound misses
+      req = ceil(num*n_src/den) drop before the array_intersect verify.
+
+    Measured at the scale gate's x1 corpus:
+    - the two prunes: 484,838 -> 301,538 candidates (1.6x), pairs
+      unchanged at 512;
+    - the last-match bound (overlap <= #prefix-matches + min remaining
+      suffix) prunes 0 further candidates: the residual is similar-size
+      doc pairs sharing one rare shingle early in both prefixes, and
+      suffix probing (PPJoin+) does not decompose into a relational join;
+    - count(candidates)+count(pairs) walls at x1/x10: bare prefix
+      4.6/14.3 s, pruned 5.5/15.3 s (the rank checkpoint costs ~1 s at
+      x1), pruned with a warm rank table 2.7 s at x1.
+
+    tools/scale_bench.py counts both sets through this one plan, so the
+    rank checkpoint materializes once."""
     tok = sh.select(
         "doc_id", F.size("shingles").alias("n"), F.explode("shingles").alias("s")
     )
@@ -1603,11 +1584,9 @@ def containment_prefix_plan(
     ranked = tok.join(dfreq, "s")
     # rank within each doc by the GLOBAL total order (df, s): df is a
     # function of s, so every doc ranks its shingles consistently.
-    # localCheckpoint: BOTH join sides (probe and index) read this
-    # table, and Spark does not common-subexpression subtrees — the
-    # uncheckpointed form re-runs explode+df-join+window per side (r9
-    # self-review; measured walls in containment_prefix_plan's
-    # docstring).
+    # localCheckpoint: both join sides (probe and index) read this
+    # table, and Spark does not common-subexpression subtrees; the
+    # uncheckpointed form re-runs explode+df-join+window per side.
     pos = ranked.withColumn(
         "rn", F.row_number().over(W.partitionBy("doc_id").orderBy("df", "s"))
     ).localCheckpoint(eager=True)
@@ -1649,7 +1628,7 @@ def containment_prefix_plan(
             & (F.col("n_dst") * den >= F.col("n_src") * num)
             # row-level positional prune, BEFORE the candidate shuffle:
             # safe because a qualifying pair's true first match always
-            # satisfies its own ubound (see the proof above), so it is
+            # satisfies its own ubound (see the docstring), so it is
             # never dropped here — only witness rows that could not
             # seed a qualifying pair are
             & ubound_ok,
@@ -2087,47 +2066,41 @@ def append_to_window_index(docs: DataFrame, path: str) -> None:
 def window_index_or_empty(
     spark: SparkSession, path: str, docs_like: DataFrame
 ) -> DataFrame:
-    """Read the persisted window index — or, when ``path`` does not
-    exist yet, an EMPTY window frame with the index's exact schema
-    (derived from the production window builder over ``docs_like``'s
-    zero-row slice, so the two can never drift). This is the fresh-
-    deployment bootstrap (ADVICE r15): the first micro-batch of
-    `stream_span_reports` probes against nothing, reports no spans,
-    and its own `append_to_window_index` CREATES the index under the
-    standard ``hb=`` bucket layout — no `build_window_index`
-    precondition. A pre-built corpus index, when one exists, is still
-    the right starting point (its build-time frequency valve filters
+    """Read the persisted window index or, when ``path`` does not exist
+    yet, an empty window frame with the index's exact schema (the
+    production window builder over ``docs_like``'s zero-row slice, so
+    the two never drift). This is the fresh-deployment bootstrap: the
+    first micro-batch of `stream_span_reports` probes against nothing,
+    reports no spans, and its own `append_to_window_index` creates the
+    index under the standard ``hb=`` bucket layout, so no
+    `build_window_index` is needed first. A pre-built corpus index is
+    still the better start (its build-time frequency valve filters
     corpus boilerplate; appends bypass the valve by design).
 
-    The EXISTING-path read uses the bootstrap frame's EXPLICIT schema,
-    never inference (ADVICE r16): if batch 0's bootstrapping append
-    crashes mid-write, the dir exists but holds only ``_temporary``
-    droppings — no parquet footers — and an inferring read would fail
-    'Unable to infer schema' on EVERY subsequent replay, a permanent
-    poison pill (the footerless-husk class the admitted sink also has
-    to survive). With the schema pinned, a footerless dir reads as
-    zero rows and the replay re-creates the index; the schema is
-    derived from the zero-row slice of the production builder, so it
-    cannot drift from what appends write.
+    An existing path is read with the bootstrap frame's explicit
+    schema, never inference: if batch 0's bootstrapping append crashes
+    mid-write, the dir holds only ``_temporary`` droppings and no
+    parquet footer, and an inferring read would fail 'Unable to infer
+    schema' on every later replay. With the schema pinned, a footerless
+    dir reads as zero rows and the replay re-creates the index.
 
-    The pinned read has one blind spot (ADVICE r17): a SCHEMA-DRIFTED
-    existing index (column added/renamed by a different builder
-    version) would read silently as nulls/dropped columns and feed null
-    hashes into the probe join. So when the dir holds real footers, the
-    on-disk column set is checked against the builder schema first — a
-    cheap footer-only inference — and a mismatch fails loud instead of
-    probing garbage. Only ``AnalysisException`` (UNABLE_TO_INFER_SCHEMA
-    — probed empirically: a dir holding only ``_temporary`` droppings)
-    is the footerless case; any OTHER inference failure (corrupt
-    footer surfaces as a SparkException FAILED_READ_FILE, permission/IO
-    errors likewise) propagates instead of being silently reclassified
-    as a fresh bootstrap (ADVICE r18 #4)."""
+    The pinned read would read a schema-drifted index (a column added
+    or renamed by another builder version) silently as nulls, feeding
+    null hashes into the probe join. So when the dir holds footers, the
+    on-disk column set is checked against the builder schema first (a
+    footer-only inference) and a mismatch raises. Only
+    ``AnalysisException`` (UNABLE_TO_INFER_SCHEMA, what a dir holding
+    only ``_temporary`` droppings raises) is the footerless case; any
+    other inference failure (a corrupt footer surfaces as a
+    SparkException FAILED_READ_FILE, permission and IO errors likewise)
+    propagates instead of passing for a fresh bootstrap."""
     from pyspark.errors import AnalysisException
 
-    from ..ingest import target_exists
+    from ..tables import _hfs
 
     empty = _with_bucket(exact_substring_windows(docs_like.limit(0)))
-    if target_exists(spark, path):
+    fs, hpath = _hfs(spark, path)
+    if fs.exists(hpath):
         try:
             on_disk = set(spark.read.parquet(path).schema.names)
         except AnalysisException:  # footerless dir: no footers to check

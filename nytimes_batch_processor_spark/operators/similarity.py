@@ -1382,83 +1382,59 @@ def build_ivf_parquet_index(corpus: DataFrame, path: str) -> None:
 _IVF_CENTROIDS_SIDECAR = "_centroids.json"
 
 
-def _ivf_sidecar(spark: SparkSession, path: str):
-    """(hadoop Path of the sidecar, its FileSystem)."""
-    jvm = spark._jvm
-    p = jvm.org.apache.hadoop.fs.Path(
-        f"{path.rstrip('/')}/{_IVF_CENTROIDS_SIDECAR}"
-    )
-    return p, p.getFileSystem(spark._jsc.hadoopConfiguration())
-
-
 def save_ivf_centers(
     spark: SparkSession, path: str, centers: list[list[float]]
 ) -> None:
-    """Persist an index's TRAINED centroids next to its cell
+    """Persist an index's trained centroids next to its cell
     directories (underscore-prefixed, so parquet readers and the
     partition detector ignore it). The sidecar is the index's quantizer
-    DEFINITION: a reader probing with any other centroids probes the
-    wrong cells. A plain `build_ivf_parquet_index` carries no sidecar —
+    definition: a reader probing with any other centroids probes the
+    wrong cells. A plain `build_ivf_parquet_index` carries no sidecar;
     absence means the fixed quantizer (`load_ivf_centers`)."""
-    import json
+    from ..tables import _write_json
 
-    p, fs = _ivf_sidecar(spark, path)
-    out = fs.create(p, True)
-    try:
-        out.write(bytearray(json.dumps(centers).encode("utf-8")))
-    finally:
-        out.close()
+    _write_json(spark, f"{path.rstrip('/')}/{_IVF_CENTROIDS_SIDECAR}", centers)
 
 
 def load_ivf_centers(spark: SparkSession, path: str) -> list[list[float]]:
     """The centroids index ``path`` was built with: the trained sidecar
     when present (a `rebuild_ivf_index` product), else the fixed
-    quantizer."""
-    import json
+    quantizer. A sidecar that exists but cannot be read or parsed
+    raises: the fixed quantizer would probe a trained index's wrong
+    cells."""
+    from ..tables import _read_json
 
-    p, fs = _ivf_sidecar(spark, path)
-    if not fs.exists(p):
+    centers = _read_json(spark, f"{path.rstrip('/')}/{_IVF_CENTROIDS_SIDECAR}")
+    if centers is None:
         return ivf_fixed_centers()
-    reader = spark._jvm.java.io.BufferedReader(
-        spark._jvm.java.io.InputStreamReader(fs.open(p), "UTF-8")
-    )
-    try:
-        lines = []
-        while True:
-            line = reader.readLine()
-            if line is None:
-                break
-            lines.append(line)
-    finally:
-        reader.close()
-    return [[float(x) for x in c] for c in json.loads("".join(lines))]
+    return [[float(x) for x in c] for c in centers]
 
 
 def _write_ivf_index(vectors: DataFrame, path: str, mode: str) -> None:
     """Normalize + assign raw (vec_id, embedding) vectors and write
-    them through the ONE index projection
+    them through the one index projection
     (`_write_ivf_index_assigned`). Zero/null-norm vectors are
-    UNINDEXABLE (cosine against them is undefined; under ANSI mode the
+    unindexable (cosine against them is undefined; under ANSI mode the
     probe's division would throw on every later query touching their
-    cell — self-review r12) and are excluded here, at the single
-    chokepoint every index write passes through.
+    cell) and are excluded here, where every index write passes.
 
-    Quantizer selection: APPENDS assign with the index's OWN centroids
-    (`load_ivf_centers` — appending under foreign cells would corrupt a
-    rebuilt index's inverted file); a fresh overwrite build uses the
-    fixed quantizer and DELETES any stale trained sidecar explicitly —
+    Quantizer selection: appends assign with the index's own centroids
+    (`load_ivf_centers`; appending under foreign cells would corrupt a
+    rebuilt index's inverted file). A fresh overwrite build uses the
+    fixed quantizer and deletes any stale trained sidecar itself:
     Spark's static overwrite would wipe it with the directory, but
     under spark.sql.sources.partitionOverwriteMode=dynamic only cell=
     partitions are replaced and a surviving sidecar would poison every
-    later read (self-review r12)."""
+    later read."""
+    from ..tables import _hfs
+
     spark = vectors.sparkSession
     if mode == "append":
         centers = load_ivf_centers(spark, path)
     else:
         centers = ivf_fixed_centers()
-        p, fs = _ivf_sidecar(spark, path)
-        if fs.exists(p):
-            fs.delete(p, False)
+        fs, p = _hfs(spark, f"{path.rstrip('/')}/{_IVF_CENTROIDS_SIDECAR}")
+        fs.delete(p, False)
     v = (
         vectors.select(
             F.col("vec_id").cast("long").alias("vec_id"),
@@ -2245,18 +2221,17 @@ def load_semdedup_centers(spark: SparkSession, name: str) -> list[list[float]]:
     A plain IVF index legitimately omits the sidecar (fixed-quantizer
     builds never write one), which is why ITS loader may fall back and
     this one must not."""
-    from ..tables import managed_table_dir
+    from ..tables import _read_json, managed_table_dir
 
-    path = managed_table_dir(spark, name)
-    p, fs = _ivf_sidecar(spark, path)
-    if not fs.exists(p):
+    centers = _read_json(spark, f"{managed_table_dir(spark, name)}/{_IVF_CENTROIDS_SIDECAR}")
+    if centers is None:
         raise ValueError(
             f"semdedup assignment table '{name}' has no _centroids.json "
             "sidecar — the build crashed before publishing its quantizer; "
             "rebuild with build_semdedup_assignment instead of guessing "
             "centroids"
         )
-    return load_ivf_centers(spark, path)
+    return [[float(x) for x in c] for c in centers]
 
 
 def semdedup_pairs_persisted(spark: SparkSession, name: str) -> DataFrame:

@@ -861,20 +861,9 @@ def bpe_encode_word_by_rank(word: str) -> list[str]:
     return sym
 
 
+# Underscore-prefixed, so parquet readers and the partition detector
+# ignore it next to data.
 _BPE_TOKENIZER_SIDECAR = "_bpe_tokenizer.json"
-
-
-def _bpe_sidecar(spark: SparkSession, path: str):
-    """(hadoop Path of the tokenizer artifact, its FileSystem) — the
-    `_centroids.json` idiom: underscore-prefixed so parquet readers
-    and the partition detector ignore it, written through the Hadoop
-    FS API so the artifact lands wherever the data does (local, HDFS,
-    object store) without a second IO stack."""
-    jvm = spark._jvm
-    p = jvm.org.apache.hadoop.fs.Path(
-        f"{path.rstrip('/')}/{_BPE_TOKENIZER_SIDECAR}"
-    )
-    return p, p.getFileSystem(spark._jsc.hadoopConfiguration())
 
 
 def save_bpe_tokenizer(
@@ -883,68 +872,47 @@ def save_bpe_tokenizer(
     merges,
     provenance: tuple[int, int] | None = None,
 ) -> None:
-    """Persist a TRAINED merge table as a tokenizer artifact (r19,
-    VERDICT r18 item 6 — the `_centroids.json` precedent for the BPE
-    family): the artifact is the tokenizer's DEFINITION, exactly as a
-    trained-IVF sidecar is the index's quantizer definition — a packer
-    encoding with any other table writes token counts and offsets that
-    no later reader can reproduce. JSON round-trips the merge strings
-    exactly (no float wobble to manage), so saved == loaded is
-    string-equality-exact. ``provenance`` optionally records the
-    (doc count, token mass) fingerprint of the training corpus (the
+    """Persist a trained merge table as a tokenizer artifact
+    ``<path>/_bpe_tokenizer.json``. The artifact is the tokenizer's
+    definition, as a trained-IVF ``_centroids.json`` is the index's
+    quantizer definition: a packer encoding with any other table writes
+    token counts and offsets that no later reader can reproduce. JSON
+    round-trips the merge strings exactly, so saved == loaded is
+    string equality. ``provenance`` optionally records the (doc count,
+    token mass) fingerprint of the training corpus (the
     `_BPE_PROVENANCE` shape) so a loader can refuse a table on the
     wrong corpus if it cares."""
-    import json
+    from ..tables import _write_json
 
     payload = {
         "version": 1,
         "merges": [list(m) for m in merges],
-        # `is not None`, never truthiness (ADVICE r19 #2): the valid
-        # (int, int) shapes are all truthy, but an accidental () would
-        # silently persist as None instead of failing the reader's
-        # shape expectations downstream
+        # `is not None`, never truthiness: an accidental () must not
+        # persist as None past the reader's shape expectations
         "provenance": list(provenance) if provenance is not None else None,
     }
-    p, fs = _bpe_sidecar(spark, path)
-    out = fs.create(p, True)
-    try:
-        out.write(bytearray(json.dumps(payload).encode("utf-8")))
-    finally:
-        out.close()
+    _write_json(spark, f"{path.rstrip('/')}/{_BPE_TOKENIZER_SIDECAR}", payload)
 
 
 def load_bpe_tokenizer(
     spark: SparkSession, path: str
 ) -> tuple[tuple[tuple[str, str], ...], tuple[int, int] | None]:
-    """(merges, provenance) from a saved tokenizer artifact — STRICT,
-    the `load_semdedup_centers` discipline: a missing or malformed
+    """(merges, provenance) from a saved tokenizer artifact. Strict, as
+    `load_semdedup_centers` is: a missing, truncated or malformed
     artifact raises instead of falling back to the shipped literal,
-    because silently encoding with the WRONG merge table produces
-    token counts and pack offsets that are plausible and irreproducible
-    (the silent-wrong-verdict failure class). The shipped `_BPE_MERGES`
-    literal is an explicit caller choice, never a fallback."""
-    import json
+    because encoding with the wrong merge table produces token counts
+    and pack offsets that are plausible and irreproducible. The shipped
+    `_BPE_MERGES` literal is an explicit caller choice, never a
+    fallback."""
+    from ..tables import _read_json
 
-    p, fs = _bpe_sidecar(spark, path)
-    if not fs.exists(p):
+    payload = _read_json(spark, f"{path.rstrip('/')}/{_BPE_TOKENIZER_SIDECAR}")
+    if payload is None:
         raise ValueError(
             f"no {_BPE_TOKENIZER_SIDECAR} under {path} — train with "
             "bpe_train_merges and save_bpe_tokenizer first; refusing to "
             "guess a merge table"
         )
-    reader = spark._jvm.java.io.BufferedReader(
-        spark._jvm.java.io.InputStreamReader(fs.open(p), "UTF-8")
-    )
-    try:
-        lines = []
-        while True:
-            line = reader.readLine()
-            if line is None:
-                break
-            lines.append(line)
-    finally:
-        reader.close()
-    payload = json.loads("".join(lines))
     if payload.get("version") != 1:
         raise ValueError(
             f"unsupported tokenizer artifact version {payload.get('version')!r}"
@@ -2475,55 +2443,42 @@ def _doc_bigrams(docs: DataFrame) -> DataFrame:
 _LM_META_SIDECAR = "_lm_meta.json"
 
 
+def _lm_meta_path(spark: SparkSession, name: str) -> str:
+    """The LM's ``_lm_meta.json``, inside its bigrams table dir."""
+    from ..tables import managed_table_dir
+
+    return f"{managed_table_dir(spark, f'{name}_bigrams')}/{_LM_META_SIDECAR}"
+
+
 def save_perplexity_lm(spark: SparkSession, name: str, lm, n_buckets: int = 8) -> None:
     """Persist a trained bigram LM so it amortizes across scoring runs
-    and sessions (r19 — the persistence path behind the 100 TB posture
-    the perplexity docstrings claim): the count tables land as MANAGED
-    TABLES BUCKETED BY ``w1`` (``{name}_bigrams`` (w1, w2, cb) and
-    ``{name}_contexts`` (w1, cl) — `write_bucketed`, the co-located
-    layout, so a production-vocab scoring join on w1 reuses the
-    on-disk hash partitioning instead of exchanging the counts per
-    run), and the scalar vocabulary size V — one row, the bounded
-    collect class — rides a ``_lm_meta.json`` sidecar in the bigrams
-    table dir (the `_centroids.json` idiom). At fixture scale Catalyst
-    broadcasts the tiny tables anyway; the bucketing is the contract
-    that survives when V no longer fits a broadcast."""
-    import json
-
-    from ..tables import managed_table_dir, write_bucketed
+    and sessions. The count tables land as managed tables bucketed by
+    ``w1`` (``{name}_bigrams`` (w1, w2, cb) and ``{name}_contexts``
+    (w1, cl), `write_bucketed`), so a production-vocab scoring join on
+    w1 reuses the on-disk hash partitioning instead of exchanging the
+    counts per run. The scalar vocabulary size V (one row) rides a
+    ``_lm_meta.json`` sidecar in the bigrams table dir, written last.
+    At fixture scale Catalyst broadcasts the tiny tables anyway; the
+    bucketing is the contract that survives when V no longer fits a
+    broadcast."""
+    from ..tables import _write_json, write_bucketed
 
     bigc, unic, v = lm
     write_bucketed(bigc, f"{name}_bigrams", "w1", n_buckets)
     write_bucketed(unic, f"{name}_contexts", "w1", n_buckets)
     vval = int(v.collect()[0]["v"])  # bounded: the one-row V aggregate
-    jvm = spark._jvm
-    p = jvm.org.apache.hadoop.fs.Path(
-        f"{managed_table_dir(spark, f'{name}_bigrams')}/{_LM_META_SIDECAR}"
-    )
-    out = p.getFileSystem(spark._jsc.hadoopConfiguration()).create(p, True)
-    try:
-        out.write(
-            bytearray(
-                json.dumps({"version": 1, "v": vval, "k": _PPLX_K}).encode(
-                    "utf-8"
-                )
-            )
-        )
-    finally:
-        out.close()
+    _write_json(spark, _lm_meta_path(spark, name), {"version": 1, "v": vval, "k": _PPLX_K})
 
 
 def load_perplexity_lm(spark: SparkSession, name: str):
-    """The `perplexity_counts` triple back from a saved LM — STRICT
-    (the `load_semdedup_centers` discipline): missing tables or a
-    missing/foreign-version sidecar raise, because scoring against a
-    partial LM (counts without their V, or one count table of two)
-    produces plausible, wrong cross-entropies with no error anywhere
-    downstream. The sidecar is written LAST by `save_perplexity_lm`,
-    so its presence witnesses a complete publish."""
-    import json
-
-    from ..tables import managed_table_dir
+    """The `perplexity_counts` triple back from a saved LM. Strict, as
+    `load_semdedup_centers` is: missing tables or a missing, truncated
+    or foreign-version sidecar raise, because scoring against a partial
+    LM (counts without their V, or one count table of two) produces
+    plausible, wrong cross-entropies with no error anywhere downstream.
+    `save_perplexity_lm` writes the sidecar last, so its presence
+    witnesses a complete publish."""
+    from ..tables import _read_json
 
     for suffix in ("_bigrams", "_contexts"):
         if not spark.catalog.tableExists(f"{name}{suffix}"):
@@ -2531,30 +2486,13 @@ def load_perplexity_lm(spark: SparkSession, name: str):
                 f"perplexity LM '{name}' is missing its {suffix} table — "
                 "save with save_perplexity_lm first"
             )
-    jvm = spark._jvm
-    p = jvm.org.apache.hadoop.fs.Path(
-        f"{managed_table_dir(spark, f'{name}_bigrams')}/{_LM_META_SIDECAR}"
-    )
-    fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(p):
+    meta = _read_json(spark, _lm_meta_path(spark, name))
+    if meta is None:
         raise ValueError(
             f"perplexity LM '{name}' has no {_LM_META_SIDECAR} sidecar — "
             "the save crashed before publishing V; re-save instead of "
             "guessing the vocabulary size"
         )
-    reader = jvm.java.io.BufferedReader(
-        jvm.java.io.InputStreamReader(fs.open(p), "UTF-8")
-    )
-    try:
-        lines = []
-        while True:
-            line = reader.readLine()
-            if line is None:
-                break
-            lines.append(line)
-    finally:
-        reader.close()
-    meta = json.loads("".join(lines))
     if meta.get("version") != 1:
         raise ValueError(
             f"unsupported perplexity LM sidecar version {meta.get('version')!r}"

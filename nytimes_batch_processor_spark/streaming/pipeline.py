@@ -26,23 +26,20 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.streaming import DataStreamWriter
 
 from .. import schemas
-from ..ingest import first_write_wins, parse_covid_rows, upsert_append
+from ..ingest import typed_batch, upsert_append
 
 
 def foreach_batch_upsert(target_path: str, keys: list[str], *, has_county: bool):
-    """Returns the foreachBatch function: type, dedup within the batch,
-    anti-join upsert into the target — the W3 sink as a streaming sink.
+    """Returns the foreachBatch function: the batch ingest's typed chain
+    (`ingest.typed_batch`), then the anti-join upsert into the target —
+    the W3 sink as a streaming sink.
     Replay safety comes from the upsert itself (existing keys always
     win), so a retried micro-batch is a no-op regardless of batch_id.
     A row with a NULL key part fails its micro-batch before any write,
     as in batch ingest."""
 
     def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        typed = parse_covid_rows(batch_df, has_county=has_county)
-        typed = typed.withColumn("fips", F.coalesce("fips", F.lit(-1)))
-        typed = typed.withColumn("_arrival", F.monotonically_increasing_id())
-        deduped = first_write_wins(typed, keys, "_arrival").drop("_arrival")
-        upsert_append(deduped, target_path, keys)
+        upsert_append(typed_batch(batch_df, keys, has_county=has_county), target_path, keys)
 
     return _apply
 

@@ -77,9 +77,9 @@ def read_state(
 def rollback_checkpoint(
     spark: SparkSession, checkpoint: str, to_batch_id: int
 ) -> list[str]:
-    """Roll a streaming checkpoint back to ``to_batch_id`` — the OFFLINE
-    REPAIR for a corrupted or wrong-results batch (VERDICT r9 stretch
-    8): delete every offsets/commits entry past the target batch and
+    """Roll a streaming checkpoint back to ``to_batch_id``, the offline
+    repair for a corrupted or wrong-results batch: delete every
+    offsets/commits entry past the target batch and
     every state-store version file past ``to_batch_id + 1`` (batch N
     commits store version N+1), so the restarted query re-executes
     batch ``to_batch_id + 1`` onward from the last good state. Replay
@@ -100,7 +100,7 @@ def rollback_checkpoint(
     corrupt the latest version, prove the restart fails, roll back,
     prove the replayed query converges to the batch ground truth.
 
-    SINK SCOPE (ADVICE r10): this trims the CHECKPOINT only, never the
+    Sink scope: this trims the checkpoint only, never the
     sink's own commit log. That is correct for the sinks the repair is
     meant for — memory/complete-mode sinks (replayed batches overwrite
     the result) and ``foreachBatch`` upserts (first-write-wins/MERGE
@@ -114,9 +114,10 @@ def rollback_checkpoint(
     checkpoint."""
     import re
 
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path
-    fs = hpath(checkpoint).getFileSystem(spark._jsc.hadoopConfiguration())
+    from ..tables import _hfs
+
+    hpath = spark._jvm.org.apache.hadoop.fs.Path
+    fs = _hfs(spark, checkpoint)[0]
     removed: list[str] = []
 
     def _delete(p) -> None:
@@ -172,9 +173,9 @@ def rollback_file_sink(
     sink's own commit log (``_spark_metadata``) back to ``to_batch_id``
     and delete the output files the dropped batches wrote, so a
     replayed batch cannot leave duplicates committed next to its
-    originals (the ADVICE r10 limit on the checkpoint-only repair —
-    rolling back an append-mode file sink's checkpoint alone replays
-    batches whose original output is still committed downstream).
+    originals (rolling back an append-mode file sink's checkpoint alone
+    replays batches whose original output is still committed
+    downstream).
 
     Mechanics: a file sink logs one entry per batch under
     ``<sink>/_spark_metadata/<batchId>`` (``v1`` header + one JSON
@@ -200,7 +201,7 @@ def rollback_file_sink(
     the dropped entries' file lists; the flag is required on re-run
     because a rollback that drops no log entries otherwise refuses the
     reconcile sweep, since against a live stream log-unreferenced files
-    are in-flight task output, not orphans — ADVICE r11), never a
+    are in-flight task output, not orphans), never a
     committed entry whose files are gone (that would both break reads
     AND make a restarted stream skip re-writing the batch, since the
     sink skips any batchId <= its log's latest entry). Works on any
@@ -209,9 +210,11 @@ def rollback_file_sink(
     import json
     import re
 
+    from ..tables import _hfs
+
     jvm = spark._jvm
     hpath = jvm.org.apache.hadoop.fs.Path
-    fs = hpath(sink_path).getFileSystem(spark._jsc.hadoopConfiguration())
+    fs = _hfs(spark, sink_path)[0]
     meta_dir = f"{sink_path.rstrip('/')}/_spark_metadata"
     if not fs.exists(hpath(meta_dir)):
         raise ValueError(f"not a file-sink output (no _spark_metadata): {sink_path}")
@@ -235,8 +238,8 @@ def rollback_file_sink(
         # batch): nothing to un-commit, so the reconcile pass below
         # would ONLY delete log-unreferenced files — which, against a
         # live stream, are in-flight task output about to be committed
-        # (ADVICE r11: nothing else enforces the documented
-        # stopped-stream precondition on this path). Deleting them here
+        # (nothing else enforces the documented stopped-stream
+        # precondition on this path). Deleting them here
         # repairs nothing and can corrupt a running job, so refuse the
         # sweep unless the caller explicitly asserts the stream is
         # stopped and wants orphans cleaned (force_reconcile=True —

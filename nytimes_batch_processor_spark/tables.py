@@ -18,8 +18,10 @@ DDL played for the reference).
 from __future__ import annotations
 
 import hashlib
+import json
 import logging
 import os
+from urllib.parse import unquote, urlparse
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql import types as T
@@ -55,6 +57,56 @@ CREATE TABLE IF NOT EXISTS {name} (
 """
 
 
+def _hfs(spark: SparkSession, path):
+    """``(fs, hpath)``: the Hadoop FileSystem serving ``path`` and its
+    Hadoop ``Path``. ``path`` is a string or already a Hadoop ``Path``.
+    The one place the package resolves a FileSystem, so every file kept
+    next to data lands wherever the data does (local, HDFS, object
+    store)."""
+    if isinstance(path, str):
+        path = spark._jvm.org.apache.hadoop.fs.Path(path)
+    return path.getFileSystem(spark._jsc.hadoopConfiguration()), path
+
+
+def _read_json(spark: SparkSession, path: str):
+    """The JSON document in the file at ``path``, or None when no file
+    exists there. A file that exists but cannot be read or parsed
+    raises: each caller decides what a missing file means, never what a
+    damaged one means. An existence check, not a caught
+    FileNotFoundException: PySpark's Java-exception conversion makes a
+    failed ``open`` cost 85 py4j calls against 9."""
+    fs, p = _hfs(spark, path)
+    if not fs.exists(p):
+        return None
+    stream = fs.open(p)
+    try:
+        return json.loads(stream.readAllBytes().decode("utf-8"))
+    finally:
+        stream.close()
+
+
+def _write_json(spark: SparkSession, path: str, obj) -> None:
+    """Write ``obj`` as one line of JSON (UTF-8) to ``path``, replacing
+    any file there."""
+    fs, p = _hfs(spark, path)
+    out = fs.create(p, True)
+    try:
+        out.write(bytearray(json.dumps(obj).encode("utf-8")))
+    finally:
+        out.close()
+
+
+def _warehouse_dir(spark: SparkSession) -> str:
+    """The session warehouse dir with a ``file:``/``file://`` scheme
+    stripped, so Spark writers and plain-path readers agree on the
+    literal local path."""
+    warehouse = spark.conf.get("spark.sql.warehouse.dir").rstrip("/")
+    for scheme in ("file://", "file:"):
+        if warehouse.startswith(scheme):
+            return warehouse[len(scheme):]
+    return warehouse
+
+
 def warehouse_scratch_path(
     spark: SparkSession,
     name: str,
@@ -63,56 +115,38 @@ def warehouse_scratch_path(
     per_app: bool = False,
 ) -> str:
     """Scratch path under the session warehouse for entry-staged data:
-    ``<warehouse>/engine_<name>[_<md5(sf_dir)[:12]>][_<appId>]``. Strips
-    the ``file:``/``file://`` scheme so Spark writers and plain-path
-    readers agree on the literal local path; keying by ``sf_dir``
-    prevents concurrent invocations at different scale factors racing
-    one shared overwrite-then-read directory. ONE copy of the idiom
-    (self-review r11: it had been pasted verbatim at eight sites).
+    ``<warehouse>/engine_<name>[_<md5(sf_dir)[:12]>][_<appId>]``.
+    Keying by ``sf_dir`` keeps concurrent invocations at different
+    scale factors from racing one shared overwrite-then-read directory.
 
-    ``per_app=True`` additionally keys by the Spark applicationId —
-    required for any path CACHED for the session's lifetime (the
-    persisted MinHash/IVF probe indexes): an entry-scoped scratch dir
-    is written and read within one invocation, but a session-cached
-    index is read for as long as the session lives, so two concurrent
-    applications sharing a warehouse dir at the same sf could race
-    one's build (mode=overwrite) against the other's probe reads
-    (ADVICE r11)."""
-    warehouse = spark.conf.get("spark.sql.warehouse.dir").rstrip("/")
-    for scheme in ("file://", "file:"):
-        if warehouse.startswith(scheme):
-            warehouse = warehouse[len(scheme):]
-            break
+    ``per_app=True`` also keys by the Spark applicationId. Any path
+    cached for the session's lifetime (the persisted MinHash/IVF probe
+    indexes) needs it: such an index is read for as long as the session
+    lives, so two applications sharing a warehouse dir at the same sf
+    would race one's overwrite build against the other's probe reads."""
     if sf_dir is not None:
         name = f"{name}_{hashlib.md5(sf_dir.encode()).hexdigest()[:12]}"
     if per_app:
         name = f"{name}_{spark.sparkContext.applicationId}"
-    return f"{warehouse}/engine_{name}"
+    return f"{_warehouse_dir(spark)}/engine_{name}"
 
 
 def managed_table_dir(spark: SparkSession, name: str) -> str:
     """The session-catalog data directory of a default-db managed table
-    (``<warehouse>/<name>``, scheme-stripped) — where sidecar artifacts
-    (e.g. the semdedup quantizer's ``_centroids.json``) live next to
-    the table's files. Matches `_clean_orphaned_table_dir`'s layout
-    derivation; only valid for the default database of the session
-    catalog, which is the only place this repo creates tables.
+    (``<warehouse>/<name>``, scheme-stripped), where sidecar files (the
+    semdedup quantizer's ``_centroids.json``, the LM's
+    ``_lm_meta.json``) live next to the table's files. Only valid for
+    the default database of the session catalog, the only place this
+    package creates tables.
 
-    The name is LOWERCASED to match the session catalog's identifier
-    normalization (ADVICE r17): `saveAsTable("MyTable")` stores its
-    data under `<warehouse>/mytable`, so deriving the dir from the
-    caller's casing verbatim would park sidecar artifacts (e.g. the
-    semdedup `_centroids.json`) OUTSIDE the table directory — breaking
-    orphan cleanup and the 'sidecar is scan-invisible because it lives
-    inside the table dir' assumption."""
+    The name is lowercased as the session catalog normalizes it:
+    `saveAsTable("MyTable")` stores its data under
+    ``<warehouse>/mytable``, and a sidecar parked under the caller's
+    casing would sit outside the table directory, where orphan cleanup
+    misses it and scans are no longer blind to it."""
     if "." in name:
         raise ValueError(f"default-db table name expected, got: {name}")
-    warehouse = spark.conf.get("spark.sql.warehouse.dir").rstrip("/")
-    for scheme in ("file://", "file:"):
-        if warehouse.startswith(scheme):
-            warehouse = warehouse[len(scheme):]
-            break
-    return f"{warehouse}/{name.lower()}"
+    return f"{_warehouse_dir(spark)}/{name.lower()}"
 
 
 def clone_parquet_dir(path: str) -> str:
@@ -201,9 +235,7 @@ def _clean_orphaned_table_dir(spark: SparkSession, name: str) -> None:
         loc_path = (
             f"{warehouse}/{table}" if db == "default" else f"{warehouse}/{db}.db/{table}"
         )
-        jvm = spark._jvm
-        p = jvm.org.apache.hadoop.fs.Path(loc_path)
-        fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
+        fs, p = _hfs(spark, loc_path)
         if fs.exists(p):
             children = [f.getPath().getName() for f in fs.listStatus(p)]
             looks_like_table = not children or any(
@@ -233,12 +265,8 @@ def _detect_partitions_with_leaf(
     ``children`` is `_swap_paths`' ``{name: FileStatus}`` of ``path``,
     which spares the root listing. Hidden (``.``/``_``) entries are
     never partitions."""
-    jvm = spark._jvm
-    fs = jvm.org.apache.hadoop.fs.Path(path).getFileSystem(
-        spark._jsc.hadoopConfiguration()
-    )
+    fs, cur = _hfs(spark, path)
     cols: list[str] = []
-    cur = jvm.org.apache.hadoop.fs.Path(path)
     while True:
         if children is None:
             children = {f.getPath().getName(): f for f in fs.listStatus(cur)}
@@ -293,8 +321,7 @@ def _swap_paths(spark: SparkSession, path: str):
     healed root (residue and ledger excluded; empty when ``path`` is
     missing)."""
     Path = spark._jvm.org.apache.hadoop.fs.Path
-    hpath = Path(path)
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    fs, hpath = _hfs(spark, Path(path))
 
     def heal(live, new, old, live_exists: bool) -> bool:
         restore = not live_exists and fs.exists(old)
@@ -371,16 +398,19 @@ def _commit_swap(fs, hpath, tmp, old, path: str, verify_old=None) -> None:
 
 
 def _data_files(fs, root) -> set:
-    """Root-relative paths of the data files under ``root`` (``_``/``.``
-    names skipped): the file set the whole-tree rewrites compare with
-    their read snapshot to refuse an append that would be lost."""
+    """Root-relative paths of the data files under ``root``: the file
+    set the whole-tree rewrites compare with their read snapshot
+    (``inputFiles()``) to refuse an append that would be lost. A file
+    with any ``_``/``.``-prefixed path component below ``root`` is
+    skipped, as Spark's reader skips it: the ``part-*`` husks a crashed
+    append leaves under ``_temporary/`` are no append."""
     rootlen = len(root.toUri().getPath()) + 1
     out = set()
     it = fs.listFiles(root, True)
     while it.hasNext():
-        p = it.next().getPath()
-        if not p.getName().startswith(("_", ".")):
-            out.add(p.toUri().getPath()[rootlen:])
+        rel = it.next().getPath().toUri().getPath()[rootlen:]
+        if not any(part.startswith(("_", ".")) for part in rel.split("/")):
+            out.add(rel)
     return out
 
 
@@ -650,13 +680,18 @@ def _literal_dir(uri: str) -> str:
     literal is never re-quoted. The partition VALUE is unquoted a second
     time by the caller, for the Hive escaping layer (a value ``a%b`` is
     stored as dir ``a%25b``)."""
-    from urllib.parse import unquote, urlparse
-
     p = urlparse(uri)
     d = os.path.dirname(unquote(p.path))
     if not p.scheme or p.scheme == "file":
         return d
     return f"{p.scheme}://{p.netloc}{d}"
+
+
+def _hive_value(raw: str):
+    """The partition value a Hive-style ``col=<raw>`` directory name
+    holds: None for ``__HIVE_DEFAULT_PARTITION__`` (Hive's NULL), else
+    ``raw`` percent-unquoted (a value ``a%b`` is stored as ``a%25b``)."""
+    return None if raw == "__HIVE_DEFAULT_PARTITION__" else unquote(raw)
 
 
 def delete_rows_partition_scoped(
@@ -683,8 +718,6 @@ def delete_rows_partition_scoped(
     formats (Delta/Iceberg) do this transactionally; this is the
     format-free equivalent with per-partition atomicity.
     """
-    from urllib.parse import unquote
-
     hpath = spark._jvm.org.apache.hadoop.fs.Path
     # heal any rewrite's crash residue BEFORE reading: a partition
     # parked mid-swap is the ONLY copy of its rows
@@ -708,8 +741,7 @@ def delete_rows_partition_scoped(
         dirname = os.path.basename(part_dir)
         if not dirname.startswith(prefix):  # pragma: no cover - layout guard
             raise ValueError(f"unexpected partition directory layout: {part_dir}")
-        raw = dirname[len(prefix):]
-        value = None if raw == "__HIVE_DEFAULT_PARTITION__" else unquote(raw)
+        value = _hive_value(dirname[len(prefix):])
         # A single partition dir has no partition column in its files —
         # re-attach it as a literal so predicates may reference it, and
         # drop it again before writing (the dir name carries it).
@@ -759,60 +791,64 @@ def merge_into_partitioned(
     partition_col: str,
     op_col: str = "op",
 ) -> dict:
-    """Keyed MERGE (upsert + delete in ONE pass) into a ``partition_col``-
-    partitioned parquet table, rewriting ONLY the partitions the change
-    batch touches — the incremental/CDC primitive that generalizes the
-    reference's ON CONFLICT upsert (W3, ``…kt:138-141``) beyond
-    append-only: in-place keyed updates and deletes at fact scale
-    (VERDICT r9 item 4a). ``merge_scd2_dimension`` keeps history; this
-    is the current-state table.
+    """Keyed MERGE (upsert + delete in one pass) into a ``partition_col``-
+    partitioned parquet table, rewriting only the partitions the change
+    batch touches: the reference's ON CONFLICT upsert (W3,
+    ``…kt:138-141``) extended to in-place keyed updates and deletes.
+    ``merge_scd2_dimension`` keeps history; this is the current-state
+    table.
 
     ``changes`` carries the full target schema plus ``op_col`` with
     ``'upsert'`` (insert-or-replace by key) or ``'delete'`` (key-only
     tombstone; non-key columns ignored). The caller guarantees at most
-    one change row per key — CDC batch compaction (last-writer-wins per
+    one change row per key; CDC batch compaction (last-writer-wins per
     key) is its own upstream step, cf. ``first_write_wins``.
+
+    Refused with ``ValueError`` before anything is written, in the one
+    collect that reads the batch's distinct ops:
+    - an ``op_col`` value other than the two ops;
+    - a NULL key part: the equi-joins below never match NULL, so such a
+      row would neither replace nor delete its base row.
 
     Mechanics (all partition-scoped):
 
-    1. affected = partitions of BASE rows whose key appears in the batch
-       (one column-pruned scan of key+partition columns — at 100 TB
-       that scan reads two columns, and a layout with key bloom
-       filters/indexes skips it) ∪ partitions upsert rows land in.
-       An update whose partition value moved rewrites BOTH directories.
-    2. survivors = affected base rows anti-joined against ALL change
+    1. affected = partitions of base rows whose key appears in the batch
+       (one column-pruned scan of key and partition columns) ∪
+       partitions upsert rows land in. An update whose partition value
+       moved rewrites both directories.
+    2. survivors = affected base rows anti-joined against all change
        keys (drops deleted rows and stale update versions in one join).
     3. survivors ∪ upserts are written partitioned to the table's
        ``_swap_new`` dir, then each affected directory is promoted by
-       the one rewrite-in-place protocol (`_commit_swap`); an affected
-       partition with NO surviving rows is deleted outright (the edge
-       dynamic-partition-overwrite silently gets wrong — an emptied
-       partition would keep its old files because no output row
-       replaces it). Untouched partitions keep their files
+       the one rewrite-in-place protocol (`_commit_swap`). An affected
+       partition with no surviving rows is deleted outright, the case
+       dynamic partition overwrite gets wrong (no output row replaces
+       its old files). Untouched partitions keep their files
        byte-identical (asserted in tests/test_sinks_tables.py).
 
     The anti-join shuffles only the affected partitions' rows against
-    the change keys (broadcast while the batch is small — the common
-    CDC shape; AQE decides past that). Returns counters:
+    the change keys (broadcast while the batch is small, the common CDC
+    shape; AQE decides past that). Returns counters:
     ``{"partitions_rewritten", "partitions_deleted", "rows_upserted",
-    "rows_deleted"}`` (deletes counted as keys matched in base).
-    Table formats (Delta/Iceberg) run this MERGE transactionally; this
-    is the format-free equivalent with per-partition atomicity.
+    "rows_deleted"}`` (deletes counted as keys matched in base). Table
+    formats (Delta/Iceberg) run this MERGE transactionally; this is the
+    format-free equivalent with per-partition atomicity.
     """
-    from urllib.parse import unquote
-
     hpath = spark._jvm.org.apache.hadoop.fs.Path
-    # Heal any rewrite's crash residue BEFORE reading the base: a
-    # partition parked mid-swap is the ONLY copy of its rows, and a
-    # merge touching it would otherwise delete them (ADVICE r10).
+    # Heal any rewrite's crash residue before reading the base: a
+    # partition parked mid-swap is the only copy of its rows, and a
+    # merge touching it would otherwise delete them.
     fs, root, tmp, _, children = _swap_paths(spark, path)
 
     base = spark.read.parquet(path)
-    data_cols = [c for c in base.columns]
-    ops = changes.select(op_col).distinct()
-    bad = [r[0] for r in ops.collect() if r[0] not in ("upsert", "delete")]
+    data_cols = base.columns
+    null_key = " OR ".join(f"`{k}` IS NULL" for k in keys)
+    ops = changes.selectExpr(f"`{op_col}`", f"{null_key} AS null_key").distinct().collect()
+    bad = list(dict.fromkeys(r[0] for r in ops if r[0] not in ("upsert", "delete")))
     if bad:
         raise ValueError(f"unknown {op_col!r} values in change batch: {bad}")
+    if any(r[1] for r in ops):
+        raise ValueError(f"change batch has a NULL key part in ({', '.join(keys)})")
     upserts = changes.filter(F.col(op_col) == "upsert").select(*data_cols)
     change_keys = changes.select(*keys).distinct()
 
@@ -860,8 +896,7 @@ def merge_into_partitioned(
     # by name. Spark itself names the new partition dirs, so promotion
     # works off a LISTING (no path re-interpolation — Hive escaping
     # stays Spark's problem); only the base-side dir lookup parses
-    # names, with the same unquote discipline as
-    # delete_rows_partition_scoped.
+    # names, through `_hive_value` as delete_rows_partition_scoped does.
     # repartition on the partition column: one file per rewritten dir
     # instead of one sliver per task per dir (the affected set is small
     # by CDC assumption; for a huge touch set use repartition(n, col))
@@ -875,9 +910,7 @@ def merge_into_partitioned(
         out = {}
         for name, st in entries.items():
             if name.startswith(prefix) and st.isDirectory():
-                raw = name[len(prefix):]
-                val = None if raw == "__HIVE_DEFAULT_PARTITION__" else unquote(raw)
-                out[val] = st.getPath()
+                out[_hive_value(name[len(prefix):])] = st.getPath()
         return out
 
     base_dirs = _dir_by_value(children)
@@ -1202,13 +1235,11 @@ def scan_binaryfile_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = warehouse_scratch_path(spark, "documents_bin", sf_dir)
 
     # pyarrow.fs in the executor tasks makes s3://gs://hdfs:// targets
-    # genuinely work off local mode — but a scheme-less (or file:)
-    # warehouse still means LOCAL filesystem semantics, and on a real
-    # cluster each task would then scatter objects across
-    # executor-local disks with the read-back seeing a partial
-    # directory (ADVICE r7; re-pinned in the r9 self-review when this
-    # guard was briefly deleted). Fail loud BEFORE the re-runnable
-    # delete below destroys the previous successful export.
+    # work off local mode, but a scheme-less (or file:) warehouse means
+    # local filesystem semantics: on a real cluster each task would
+    # scatter objects across executor-local disks and the read-back
+    # would see a partial directory. Fail before the re-runnable delete
+    # below destroys the previous successful export.
     master = spark.conf.get("spark.master", "")
     if "://" not in path and not master.startswith("local"):
         raise NotImplementedError(
@@ -1221,9 +1252,7 @@ def scan_binaryfile_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Re-runnable stage: drop any prior export so a stale extra object
     # can't join the glob (same hygiene as the ORC/JSONL stages' mode
     # "overwrite", which binary export lacks natively).
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    fs, hpath = _hfs(spark, path)
     if fs.exists(hpath):
         fs.delete(hpath, True)
     fs.mkdirs(hpath)
@@ -1231,10 +1260,10 @@ def scan_binaryfile_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
     def _export(rows) -> None:
         # Executor tasks have no py4j bridge to the JVM Hadoop client,
         # so the per-task writer is pyarrow.fs: from_uri resolves the
-        # SAME URI to an S3/GCS/HDFS client on whatever node runs the
-        # task (VERDICT r8 stretch 7 — the guard above now fires only
-        # for local-filesystem warehouses, where scattering would be
-        # silent). Objects are written DIRECTLY under their final
+        # same URI to an S3/GCS/HDFS client on whatever node runs the
+        # task (the guard above fires only for local-filesystem
+        # warehouses, where scattering would be silent). Objects are
+        # written directly under their final
         # deterministic names (no tmp+rename: rename is a POSIX-ism
         # object stores lack; a retried task rewrites byte-identical
         # content, so the write is idempotent — the directory-level

@@ -796,23 +796,29 @@ def test_ledger_miss_on_equal_length_one_byte_change(spark, tmp_path, staging):
     assert ("2020-01-22", "Illinoiz") in got and len(got) == 5
 
 
-@pytest.mark.parametrize("damage", ["garbage", "deleted"])
+@pytest.mark.parametrize("damage", ["garbage", "deleted", "truncated"])
 def test_damaged_ledger_misses_lands_nothing_and_is_rewritten(
     spark, tmp_path, staging, damage
 ):
-    """A torn record (garbage) or none at all (a crash after the append
-    committed) is a miss: the full path re-runs, lands nothing new, and
-    writes the record again, so the next re-delivery hits."""
+    """A torn record (garbage, or the real record cut to half its
+    bytes) or none at all (a crash after the append committed) is a
+    miss: the full path re-runs, lands nothing new, and writes the
+    record again, so the next re-delivery hits."""
     from nytimes_batch_processor_spark.ingest import ingest_covid_csv
 
     src = _write(staging, "day1.csv", STATES_CSV)
     target = str(tmp_path / "covid_states")
     ingest_covid_csv(spark, src, target, has_county=False)
     rows = _rows(spark, target)
+    with open(f"{target}/_ingest_ledger", "rb") as f:
+        record = f.read()
     _drop_ledger(target)
     if damage == "garbage":
         with open(f"{target}/_ingest_ledger", "w") as f:
             f.write('{"variant": "plain", "files": [')
+    elif damage == "truncated":
+        with open(f"{target}/_ingest_ledger", "wb") as f:
+            f.write(record[: len(record) // 2])
     ingest = lambda: ingest_covid_csv(spark, src, target, has_county=False)  # noqa: E731
     assert _job_tasks(spark, ingest)
     assert _rows(spark, target) == rows

@@ -618,6 +618,42 @@ def test_merge_into_partitioned_rejects_unknown_op(spark, tmp_path):
         merge_into_partitioned(spark, path, changes, keys=["k"], partition_col="month")
 
 
+def _file_stamps(root):
+    return {
+        os.path.relpath(os.path.join(d, f), root): os.stat(os.path.join(d, f)).st_mtime_ns
+        for d, _, files in os.walk(root)
+        for f in files
+    }
+
+
+@pytest.mark.parametrize("op", ["upsert", "delete"])
+def test_merge_refuses_null_key_part_before_any_write(spark, tmp_path, op):
+    """The merge's equi-joins never match NULL: an upsert of
+    ``("2020-01-01", NULL)`` kept the base row it should replace (both
+    rows left, ``rows_upserted`` 1) and a NULL-key delete removed
+    nothing. The batch now fails before any write."""
+    from nytimes_batch_processor_spark.tables import merge_into_partitioned
+
+    path = str(tmp_path / "facts")
+    spark.createDataFrame(
+        [("2020-01-01", None, 1.0), ("2020-01-01", 1, 2.0)],
+        "date string, k long, v double",
+    ).write.partitionBy("date").parquet(path)
+    before = _file_stamps(path)
+    changes = spark.createDataFrame(
+        [("2020-01-01", None, 9.0 if op == "upsert" else None, op)],
+        "date string, k long, v double, op string",
+    )
+    with pytest.raises(ValueError, match="NULL key part in \\(date, k\\)"):
+        merge_into_partitioned(
+            spark, path, changes, keys=["date", "k"], partition_col="date"
+        )
+    assert _file_stamps(path) == before
+    assert {(r["k"], r["v"]) for r in spark.read.parquet(path).collect()} == {
+        (None, 1.0), (1, 2.0)
+    }
+
+
 def test_delete_restores_orphaned_predelete_aside(spark, tmp_path):
     """The delete-path twin of the merge heal (self-review r11): a crash
     between the aside-rename and the promote leaves the dot-prefixed
@@ -974,6 +1010,65 @@ def test_managed_table_dir_matches_catalog_normalization(spark):
         assert os.path.isdir(d), d  # the dir saveAsTable really used
     finally:
         spark.sql(f"DROP TABLE IF EXISTS {name}")
+
+
+def _truncate(path):
+    """Cut a file written through the Hadoop FS to half its bytes, as a
+    torn write leaves it (the stale ``.crc`` goes with it)."""
+    size = os.path.getsize(path)
+    with open(path, "r+b") as f:
+        f.truncate(size // 2)
+    crc = os.path.join(os.path.dirname(path), f".{os.path.basename(path)}.crc")
+    if os.path.exists(crc):
+        os.remove(crc)
+
+
+@pytest.mark.parametrize("artifact", ["ivf", "semdedup", "bpe", "lm"])
+def test_truncated_sidecar_raises(spark, tmp_path, artifact):
+    """A sidecar that exists but does not parse raises in every loader.
+    The IVF loader's fixed-centroid fallback is for a missing sidecar
+    only: on a trained index it would probe the wrong cells."""
+    from nytimes_batch_processor_spark.operators import similarity as S
+    from nytimes_batch_processor_spark.operators import text as X
+    from nytimes_batch_processor_spark.tables import managed_table_dir
+
+    centers = [[0.5, -0.25], [1.0, 2.0]]
+    if artifact == "ivf":
+        d = str(tmp_path / "ivf")
+        S.save_ivf_centers(spark, d, centers)
+        side, load = f"{d}/_centroids.json", lambda: S.load_ivf_centers(spark, d)
+    elif artifact == "semdedup":
+        d = managed_table_dir(spark, "truncated_semdedup_probe")
+        S.save_ivf_centers(spark, d, centers)
+        side = f"{d}/_centroids.json"
+        load = lambda: S.load_semdedup_centers(spark, "truncated_semdedup_probe")  # noqa: E731
+    elif artifact == "bpe":
+        d = str(tmp_path / "bpe")
+        X.save_bpe_tokenizer(spark, d, [("a", "b"), ("ab", "c")], provenance=(2, 9))
+        side, load = f"{d}/_bpe_tokenizer.json", lambda: X.load_bpe_tokenizer(spark, d)
+    else:
+        name = "truncated_lm_probe"
+        lm = (
+            spark.createDataFrame([("a", "b", 1)], "w1 string, w2 string, cb long"),
+            spark.createDataFrame([("a", 1)], "w1 string, cl long"),
+            spark.range(1).selectExpr("2L AS v"),
+        )
+        X.save_perplexity_lm(spark, name, lm, n_buckets=2)
+        side = f"{managed_table_dir(spark, name + '_bigrams')}/_lm_meta.json"
+        load = lambda: X.load_perplexity_lm(spark, name)  # noqa: E731
+    try:
+        load()  # intact: loads
+        _truncate(side)
+        with pytest.raises(ValueError):
+            load()
+    finally:
+        if artifact == "semdedup":
+            import shutil
+
+            shutil.rmtree(d, ignore_errors=True)
+        if artifact == "lm":
+            for suffix in ("_bigrams", "_contexts"):
+                spark.sql(f"DROP TABLE IF EXISTS {name}{suffix}")
 
 
 def test_spread_for_python_listing_probe(spark, tmp_path):

@@ -166,3 +166,32 @@ def test_renames_only_in_the_swap_helpers():
         "directory renames outside tables._swap_paths/_commit_swap:\n"
         + "\n".join(offenders)
     )
+
+
+def test_hadoop_filesystem_only_in_tables():
+    """Every file the engine keeps next to data (the delivery ledger,
+    ``_centroids.json``, ``_bpe_tokenizer.json``, ``_lm_meta.json``)
+    and every other Hadoop FileSystem handle goes through one seam,
+    `tables._hfs` (`_read_json`/`_write_json` for the JSON files). A
+    second ``getFileSystem(`` is a second copy of that boundary, with
+    its own error handling. Flags any such call in the package outside
+    ``tables._hfs``."""
+    offenders = []
+    for path in SOURCES:
+        tree = ast.parse(path.read_text(), filename=str(path))
+        allowed: set[int] = set()
+        if path == PKG / "tables.py":
+            for fn in tree.body:
+                if isinstance(fn, ast.FunctionDef) and fn.name == "_hfs":
+                    allowed |= {id(n) for n in ast.walk(fn)}
+        offenders += [
+            f"{path.relative_to(REPO)}:{n.lineno}"
+            for n in ast.walk(tree)
+            if isinstance(n, ast.Call)
+            and isinstance(n.func, ast.Attribute)
+            and n.func.attr == "getFileSystem"
+            and id(n) not in allowed
+        ]
+    assert not offenders, (
+        "Hadoop FileSystem handles outside tables._hfs:\n" + "\n".join(offenders)
+    )
